@@ -10,7 +10,7 @@ import graft.plans.{CosineSim, DeflateLen, DotF32, HmacSha256Hex, IdnToAscii, Mi
   *
   * Two paths: `GraftExtensions` for `spark.sql.extensions` users, and
   * `GraftFunctions.register(spark)` for sessions created without the
-  * extension (e.g. the driver's Verify/Bench sessions). Registration
+  * extension (e.g. the `GraftSession` entry points). Registration
   * is idempotent.
   */
 object GraftFunctions {

@@ -23,38 +23,20 @@ object MicroBench {
   final case class KernelTime(kernel: String, variant: String, rows: Long,
       sec: Double)
 
-  /** Row count for the kernel passes — ONE accessor shared with
-    * [[Bench]]'s folded-in run (two call sites once carried separate
-    * fallback constants, making their timings silently incomparable).
-    * An explicit `SPARK_GRAFT_MICRO_ROWS` is used verbatim; the
-    * default SCALES WITH SESSION PARALLELISM (1M rows per 8 threads)
-    * so per-thread work stays constant — at 32 threads the flat 1M
-    * default was overhead-dominated and the shingle kernel's real
-    * 8× win measured as ~1.1× (a phantom regression in the artifact).
-    */
-  def rowsFor(spark: SparkSession): Long =
-    sys.env.get("SPARK_GRAFT_MICRO_ROWS").map(_.toLong).getOrElse(
-      1000000L * math.max(1, spark.sparkContext.defaultParallelism / 8))
-
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cores = Runtime.getRuntime.availableProcessors()
+    val spark = GraftSession.builder(cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    kernels(spark, rowsFor(spark)).foreach { k =>
+    // 1M rows per 8 cores keeps per-thread work constant: at 32 threads
+    // a flat 1M was overhead-dominated and hid the shingle kernel's win
+    kernels(spark, 1000000L * math.max(1, cores / 8)).foreach { k =>
       println(s"""{"kernel":"${k.kernel}","variant":"${k.variant}","rows":${k.rows},"sec":${k.sec}}""")
     }
     spark.stop()
   }
 
-  /** The measurements themselves, reusable from [[Bench]] (which folds
-    * the native-vs-UDF ratios into its per-round artifact so kernel
-    * regressions are tracked round-over-round, not just on demand).
+  /** The measurements themselves, one (native, alternative) pair per
+    * kernel.
     */
   def kernels(spark: SparkSession, rows: Long): Seq[KernelTime] = {
     GraftFunctions.register(spark)

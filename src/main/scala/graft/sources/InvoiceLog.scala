@@ -67,20 +67,15 @@ object InvoiceLog {
   /** Streaming variant: continuously append the redacted audit stream
     * as JSONL — the shape a live payment deployment runs (checkpointed,
     * exactly-once within the sink's file-commit protocol).
-    * `triggerInterval` spaces micro-batches; None = as-fast-as-possible.
     */
-  def writeStream(df: DataFrame, path: String, checkpoint: String,
-      triggerInterval: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = redact(df).writeStream
+  def writeStream(df: DataFrame, path: String, checkpoint: String)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    redact(df).writeStream
       .format("json")
       .option("path", path)
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
-    triggerInterval.foreach(t => writer.trigger(
-      org.apache.spark.sql.streaming.Trigger.ProcessingTime(t)))
-    writer.start()
-  }
+      .start()
 
   /** Read a JSONL invoice log. Pass the writer's schema via a sample
     * DataFrame to skip inference (required practice at scale).

@@ -355,7 +355,6 @@ object DocStream {
   def cleanPipeline(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String, minTokens: Int = 10,
       minStopRatio: Double = 0.05, watermarkDelay: String = "10 minutes",
-      triggerInterval: Option[String] = None,
       maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
     val cleaned = StreamingOps.cleanDocStream(
       fromFiles(spark, inDir, maxFilesPerTrigger),
@@ -364,14 +363,12 @@ object DocStream {
       // small-files argument as CorpusStore.write — a long-running
       // intake with frequent triggers must not explode the listing
       .repartition(org.apache.spark.sql.functions.col("lang"))
-    val writer = cleaned.writeStream
+    cleaned.writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .partitionBy("lang")
       .outputMode("append")
-    triggerInterval.foreach(t => writer.trigger(
-      org.apache.spark.sql.streaming.Trigger.ProcessingTime(t)))
-    writer.start()
+      .start()
   }
 }

@@ -82,21 +82,18 @@ object PaymentStream {
   /** The full live deployment shape (reference ingest loop,
     * kinesis-pay.php:286-356): file-stream source → JSON parse →
     * payment FSM → redacted JSONL audit sink, checkpointed. Returns
-    * the running query; callers own stop(). `triggerInterval` spaces
-    * micro-batches (the reference polls every 10 s — kinesis-pay.php:
-    * 232); None = as-fast-as-possible (the test default);
-    * `maxFilesPerTrigger` bounds per-batch backlog intake.
+    * the running query; callers own stop(). Micro-batches run as fast
+    * as possible; `maxFilesPerTrigger` bounds per-batch backlog intake.
     */
   def filePipeline(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String, watermarkDelay: String = "10 seconds",
       expiryMs: Long = PaymentMonitor.ExpiryMs,
-      triggerInterval: Option[String] = None,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val outcomes = PaymentMonitor.outcomes(
       fromFiles(spark, inDir, maxFilesPerTrigger), watermarkDelay, expiryMs)
     graft.sources.InvoiceLog.writeStream(outcomes.toDF(), outDir,
-      checkpointDir, triggerInterval)
+      checkpointDir)
   }
 
   /** Parse a string/binary JSON payload column into typed events.

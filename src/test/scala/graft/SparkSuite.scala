@@ -8,16 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * stopped by a suite.
   */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  // 4 cores, not the host's, so plan-shape assertions are
+  // host-independent
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-    .config("spark.ui.enabled", "false")
-    // match Bench/Verify (r14 opt): AQE partitioning across the
-    // cached-plan boundary — specs exercise the plans the bench times
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      "true")
     .getOrCreate()
 }

@@ -5,6 +5,8 @@ DuckDB against the same parquet tables and compares with the Spark
 result parquet (columns sorted by name, rows sorted, exact values).
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Exits 1 when any key fails. Verify leaves an empty output dir for a
+key whose query threw, so that key prints FAIL here too.
 """
 import sys, json, glob, math
 import duckdb
@@ -71,7 +73,9 @@ def main(sf_dir, out_dir):
             print(f"PASS  {name}: {len(sr)} rows")
             n_pass += 1
     print(f"== {n_pass}/{len(names)} pass")
+    # every key prints one PASS/ROWS or one FAIL line
+    return 0 if n_pass == len(names) else 1
 
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(main(sys.argv[1], sys.argv[2]))
