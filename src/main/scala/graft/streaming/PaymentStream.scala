@@ -96,16 +96,28 @@ object PaymentStream {
       checkpointDir)
   }
 
+  /** Name of the observation [[fromJson]] attaches: `lines` (input
+    * lines) and `malformed` (lines dropped as unparseable). A streaming
+    * query reports it per micro-batch in
+    * `StreamingQueryProgress.observedMetrics`.
+    */
+  val LinesObserved = "payment_lines"
+
   /** Parse a string/binary JSON payload column into typed events.
     * Malformed records become nulls and are dropped (poison-pill
-    * tolerance — one bad record must not kill the stream).
+    * tolerance — one bad record must not kill the stream), but not
+    * silently: the [[LinesObserved]] observation counts every line and
+    * every dropped one.
     */
   def fromJson(raw: DataFrame, payloadCol: String = "value"): Dataset[PaymentEvent] = {
     implicit val enc = Encoders.product[PaymentEvent]
     raw
       .select(from_json(col(payloadCol).cast("string"), payloadSchema).as("e"))
-      .where(col("e.paymentId").isNotNull && col("e.ts").isNotNull &&
+      .withColumn("valid", col("e.paymentId").isNotNull && col("e.ts").isNotNull &&
         col("e.kind").isNotNull)
+      .observe(LinesObserved, count(lit(1)).as("lines"),
+        count(when(!col("valid"), 1)).as("malformed"))
+      .where(col("valid"))
       .select(col("e.paymentId"), col("e.ts"), col("e.kind"))
       .as[PaymentEvent]
   }

@@ -150,4 +150,31 @@ class PaymentStreamSpec extends SparkSuite {
     assert(log.length == 3, s"each outcome exactly once, got ${log.toSeq}")
     assert(log.toSet == Set(1L -> "processed", 2L -> "rejected", 3L -> "processed"))
   }
+
+  test("fromJson counts input lines and malformed lines in the query's observed metrics") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[String]
+    val q = PaymentMonitor.outcomes(PaymentStream.fromJson(input.toDF(), "value"),
+      watermarkDelay = "0 seconds")
+      .writeStream.format("memory").queryName("observed_outcomes")
+      .outputMode("append").start()
+    try {
+      input.addData(
+        """{"paymentId": 1, "ts": "2024-01-01T10:00:00", "kind": "create"}""",
+        """not json at all""",
+        """{"paymentId": 2, "ts": "not-a-time", "kind": "create"}""",
+        """{"paymentId": 1, "ts": "2024-01-01T10:03:00", "kind": "processed"}""")
+      q.processAllAvailable()
+      input.addData(
+        """{"paymentId": 3, "ts": """,
+        """{"paymentId": 3, "ts": "2024-01-01T10:05:00", "kind": "create"}""")
+      q.processAllAvailable()
+    } finally q.stop()
+    val observed = q.recentProgress.filter(_.numInputRows > 0)
+      .map(p => Option(p.observedMetrics.get(PaymentStream.LinesObserved)))
+    assert(observed.length == 2 && observed.forall(_.isDefined),
+      s"every batch with input reports the counts: ${observed.toSeq}")
+    val counts = observed.flatten.map(r => (r.getAs[Long]("lines"), r.getAs[Long]("malformed")))
+    assert(counts.toSeq == Seq((4L, 2L), (2L, 1L)))
+  }
 }
