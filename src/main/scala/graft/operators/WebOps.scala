@@ -610,7 +610,7 @@ object WebOps {
     size(filter(split(content, ","), d => trim(d) === directive)) > 0
 
   /** The `noindex` decision as a bare EXPRESSION — the stream-gate
-    * door ([[graft.streaming.DocStream.curatePipelineFromWarc]] drops
+    * door ([[graft.streaming.DocStream.fromWarc]] drops
     * opted-out pages with it before extraction pays for them); same
     * token-exact parse as [[metaRobots]], one definition.
     */

@@ -64,19 +64,6 @@ object InvoiceLog {
   def writeBatch(df: DataFrame, path: String, batchId: Long): Unit =
     redact(df).write.mode("overwrite").json(s"$path/batch=$batchId")
 
-  /** Streaming variant: continuously append the redacted audit stream
-    * as JSONL — the shape a live payment deployment runs (checkpointed,
-    * exactly-once within the sink's file-commit protocol).
-    */
-  def writeStream(df: DataFrame, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    redact(df).writeStream
-      .format("json")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .start()
-
   /** Read a JSONL invoice log. Pass the writer's schema via a sample
     * DataFrame to skip inference (required practice at scale).
     */

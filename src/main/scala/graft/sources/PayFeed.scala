@@ -15,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** `payfeed` — a managed-stream connector binding as a DataSourceV2
   * micro-batch source, registered under a short format name so
-  * `spark.readStream.format("payfeed").options(...)` (the
-  * [[graft.streaming.PaymentStream.raw]] seam) resolves it exactly the
+  * `spark.readStream.format("payfeed").options(...)` (what
+  * [[graft.streaming.PaymentStream.fromFeed]] calls) resolves it exactly the
   * way a production Kinesis-style connector jar would resolve its own
   * format (kinesis-pay.php:17-18 names the live API endpoints the
   * reference integrates against; this class is the Spark-side shape of

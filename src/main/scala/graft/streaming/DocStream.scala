@@ -5,21 +5,23 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructType, TimestampType}
 
-/** Streaming corpus intake end-to-end: JSONL document files land in a
-  * directory (the collector hand-off), flow through the on-ingest
-  * cleaning gate ([[StreamingOps.cleanDocStream]] — token floor,
-  * quality floor, watermark-bounded exact dedup) and are written as a
-  * lang-partitioned parquet corpus — the streaming counterpart of
-  * batch `cleanCorpus` → `CorpusStore.write`.
+/** Streaming corpus intake. Source adapters turn a landing directory
+  * into a document stream `(doc_id, text, lang, source, ingest_ts)`:
+  * JSONL docs ([[fromFiles]]), JSONL crawled pages ([[fromHtmlFiles]])
+  * or WARC archives ([[fromWarc]]). [[curatePipeline]] runs any of
+  * them through the composed curation chain into a checkpointed,
+  * idempotent landing; [[cleanPipeline]] is the lighter clean-only
+  * intake into a lang-partitioned parquet corpus — the streaming
+  * counterpart of batch `cleanCorpus` → `CorpusStore.write`.
   *
-  * Operational contract mirrors [[PaymentStream.filePipeline]]: the
-  * file source's processed-file log lives under the CHECKPOINT dir and
-  * the parquet sink's commit log under `<outDir>/_spark_metadata` — a
-  * killed query resumes where it stopped and the output is
-  * exactly-once across restarts (readers see only committed files),
-  * PROVIDED checkpoint and output dirs are lifecycle-managed together:
-  * recreating one while keeping the other desynchronizes the two logs
-  * (duplicate re-emits or an inconsistent committed-file view).
+  * In both, the file source's processed-file log lives under the
+  * CHECKPOINT dir, so a killed query resumes where it stopped.
+  * [[cleanPipeline]]'s parquet sink keeps its commit log under
+  * `<outDir>/_spark_metadata`, so its output is exactly-once across
+  * restarts (readers see only committed files), PROVIDED checkpoint
+  * and output dirs are lifecycle-managed together: recreating one
+  * while keeping the other desynchronizes the two logs (duplicate
+  * re-emits or an inconsistent committed-file view).
   */
 object DocStream {
 
@@ -30,23 +32,6 @@ object DocStream {
     .add("source", StringType)
     .add("ingest_ts", TimestampType)
 
-  /** JSONL file-stream of documents; malformed records are dropped
-    * (poison-pill tolerance, same policy as the payment ingest).
-    */
-  def fromFiles(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.format("text")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.load(dir)
-      .select(from_json(col("value").cast("string"), docSchema).as("d"))
-      .where(col("d.doc_id").isNotNull && col("d.text").isNotNull &&
-        col("d.ingest_ts").isNotNull)
-      .select(col("d.doc_id").as("doc_id"), col("d.text").as("text"),
-        coalesce(col("d.lang"), lit("und")).as("lang"),
-        coalesce(col("d.source"), lit("unknown")).as("source"),
-        col("d.ingest_ts").as("ingest_ts"))
-  }
-
   val pageSchema: StructType = new StructType()
     .add("doc_id", LongType)
     .add("html", StringType)
@@ -54,132 +39,50 @@ object DocStream {
     .add("source", StringType)
     .add("ingest_ts", TimestampType)
 
-  /** JSONL file-stream of crawled PAGES (`html` instead of `text`) —
-    * the markup-bearing twin of [[fromFiles]] for the
-    * [[curatePipelineFromHtml]] front door; malformed records are
-    * dropped (the same poison-pill policy).
+  /** JSONL file-stream of documents; malformed records are dropped
+    * (poison-pill tolerance, same policy as the payment ingest).
     */
-  def pagesFromFiles(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.format("text")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.load(dir)
-      .select(from_json(col("value").cast("string"), pageSchema).as("d"))
-      .where(col("d.doc_id").isNotNull && col("d.html").isNotNull &&
-        col("d.ingest_ts").isNotNull)
-      .select(col("d.doc_id").as("doc_id"), col("d.html").as("html"),
-        coalesce(col("d.lang"), lit("und")).as("lang"),
-        coalesce(col("d.source"), lit("unknown")).as("source"),
-        col("d.ingest_ts").as("ingest_ts"))
-  }
+  def fromFiles(spark: SparkSession, dir: String,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    jsonLines(spark, dir, docSchema, "text", maxFilesPerTrigger)
 
-  /** The full streaming CURATION pipeline — the checkpointed twin of
-    * the batch capstone q_curate_pipeline, end-to-end (r10 verdict
-    * item #2): JSONL files → parse → the composed gate chain
-    * ([[StreamingOps.curateDocStream]]: holdout → clean → contam →
-    * frozen probe → band claim, ONE stateful operator, ONE
-    * checkpoint) → per-batch DSIR annotation under the FROZEN stored
-    * importance model + the deterministic split stamp → idempotent
-    * (lang, split)-partitioned parquet landing, with claim rejects
-    * recorded under `<outDir>/_quarantine/batch=<id>` (verdict + band
-    * attached) rather than dropped — see the in-body rationale.
-    *
-    * Exactly-once, the [[PaymentConfirm]] discipline, each link
-    * individually spec'd: the file source's processed-file log lives
-    * under the checkpoint; the claim state emits deterministic
-    * verdicts on replay (lowest-docId claims); and the landing scopes
-    * an OVERWRITE to the micro-batch's own `batch=<id>` directory, so
-    * foreachBatch's at-least-once crash replay rewrites the same files
-    * instead of appending duplicates. Readers `spark.read.parquet
-    * (outDir)` and see (batch, lang, split) partition columns.
-    *
-    * The DSIR annotation runs the BATCH serve leg
-    * ([[graft.operators.Curation.dsirScoreFrom]]) on each micro-batch
-    * — bit-equal to the streaming gate by the existing duality specs,
-    * and batch-local because log_weight gates nothing here (it is the
-    * sampler's input downstream); docs with no scorable features keep
-    * a null log_weight rather than being dropped (the landing is the
-    * corpus of record).
-    */
-  def curatePipeline(spark: SparkSession, inDir: String,
-      benchmark: DataFrame, probeIndexPath: String, dsirIndexPath: String,
-      outDir: String, checkpointDir: String, minTokens: Int = 10,
-      minStopRatio: Double = 0.05, benchmarkEvery: Int = 10,
-      minScore: Double = 0.5, valPct: Int = 10, testPct: Int = 10,
-      ttlMs: Long = 3600 * 1000L,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val curated = StreamingOps.curateDocStream(spark,
-      fromFiles(spark, inDir, maxFilesPerTrigger), benchmark,
-      probeIndexPath, minTokens, minStopRatio, benchmarkEvery,
-      minScore = minScore, ttlMs = ttlMs)
-    startCurated(spark, curated, dsirIndexPath, outDir, checkpointDir,
-      valPct, testPct)
-  }
-
-  /** [[curatePipeline]] behind the MARKUP front door — the r11
-    * verdict's What's-missing #5, and the streaming twin of the batch
-    * [[graft.operators.Curation.curateCorpusFromHtml]]
-    * (q_extract_pipeline): crawled PAGES land as JSONL
-    * (doc_id, html, lang, source, ingest_ts), flow through
-    * [[StreamingOps.extractDocStream]] (the batch extractor's own
-    * expressions — tag strip, boilerplate line rules, entity decode)
-    * and then the composed curation chain, as ONE checkpointed query
-    * with the same quarantine landing. Extraction is a row-local
-    * stateless projection, so composing it adds no second stateful
-    * exchange and no second checkpoint.
+  /** JSONL file-stream of crawled PAGES (`html` instead of `text`, the
+    * same poison-pill policy) through [[StreamingOps.extractDocStream]]
+    * (the batch extractor's own expressions — tag strip, boilerplate
+    * line rules, entity decode): the streaming twin of the batch
+    * [[graft.operators.Curation.curateCorpusFromHtml]]'s front door
+    * (q_extract_pipeline). Extraction is a row-local stateless
+    * projection, so it adds no stateful exchange and no checkpoint.
     *
     * All-boilerplate pages (every line fell to the word-floor /
-    * link-density rules) carry an empty extract and fall at the token
-    * floor — a DETERMINISTIC stateless reject, re-runnable from the
-    * raw page archive, so per the gate-reject policy it is dropped,
-    * not quarantined; quarantine stays reserved for claim verdicts,
-    * the decisions arrival order makes unrepeatable.
+    * link-density rules) carry an empty extract and fall at the
+    * curation chain's token floor — a DETERMINISTIC stateless reject,
+    * re-runnable from the raw page archive, so per the gate-reject
+    * policy it is dropped, not quarantined.
     */
-  def curatePipelineFromHtml(spark: SparkSession, inDir: String,
-      benchmark: DataFrame, probeIndexPath: String, dsirIndexPath: String,
-      outDir: String, checkpointDir: String, minWords: Int = 5,
-      maxLinkDensity: Double = 0.34, minTokens: Int = 10,
-      minStopRatio: Double = 0.05, benchmarkEvery: Int = 10,
-      minScore: Double = 0.5, valPct: Int = 10, testPct: Int = 10,
-      ttlMs: Long = 3600 * 1000L,
-      maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val docs = StreamingOps.extractDocStream(
-        pagesFromFiles(spark, inDir, maxFilesPerTrigger),
-        "html", minWords, maxLinkDensity)
-      .select("doc_id", "text", "lang", "source", "ingest_ts")
-    val curated = StreamingOps.curateDocStream(spark, docs, benchmark,
-      probeIndexPath, minTokens, minStopRatio, benchmarkEvery,
-      minScore = minScore, ttlMs = ttlMs)
-    startCurated(spark, curated, dsirIndexPath, outDir, checkpointDir,
-      valPct, testPct)
-  }
+  def fromHtmlFiles(spark: SparkSession, dir: String, minWords: Int = 5,
+      maxLinkDensity: Double = 0.34,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    extracted(jsonLines(spark, dir, pageSchema, "html", maxFilesPerTrigger),
+      minWords, maxLinkDensity)
 
-  /** [[curatePipelineFromHtml]] fed straight from a WARC landing
-    * directory — the full crawl intake as ONE checkpointed query:
-    * archives → [[graft.sources.WarcSource.pagesStream]] (shared
-    * batch parser, poison-tolerant) → [[StreamingOps
-    * .extractDocStream]] (the batch extractor's own expressions) →
-    * the composed curation chain → the quarantine-first landing.
-    * With the batch q_warc_extract owning the crawl-dump → extraction
-    * composition, this owns its streaming twin; nothing between a
-    * fetcher's archive drop and a training-ready corpus partition is
-    * left to caller wiring. WARC-Date is the stream's event time
-    * (the watermark column), so replayed archives dedup against the
-    * same state windows a live intake used.
+  /** A WARC landing directory as a document stream — the full crawl
+    * intake: archives → [[graft.sources.WarcSource.pagesStream]]
+    * (shared batch parser, poison-tolerant) → robots gates → stage-0
+    * canonical-URL dedup → [[StreamingOps.extractDocStream]]. With
+    * the batch q_warc_extract owning the crawl-dump → extraction
+    * composition, this owns its streaming twin. WARC-Date is the
+    * stream's event time (the watermark column), so replayed archives
+    * dedup against the same state windows a live intake used.
     */
-  def curatePipelineFromWarc(spark: SparkSession, inDir: String,
-      benchmark: DataFrame, probeIndexPath: String, dsirIndexPath: String,
-      outDir: String, checkpointDir: String, minWords: Int = 5,
-      maxLinkDensity: Double = 0.34, minTokens: Int = 10,
-      minStopRatio: Double = 0.05, benchmarkEvery: Int = 10,
-      minScore: Double = 0.5, valPct: Int = 10, testPct: Int = 10,
-      ttlMs: Long = 3600 * 1000L,
+  def fromWarc(spark: SparkSession, dir: String, minWords: Int = 5,
+      maxLinkDensity: Double = 0.34,
       urlDedupWatermark: String = "10 minutes",
       maxFilesPerTrigger: Option[Int] = None,
       robotsRules: Option[DataFrame] = None,
-      robotsRulesFull: Option[DataFrame] = None): StreamingQuery = {
+      robotsRulesFull: Option[DataFrame] = None): DataFrame = {
     require(robotsRules.isEmpty || robotsRulesFull.isEmpty,
-      "curatePipelineFromWarc: pass robotsRules (disallow-prefix) OR " +
+      "fromWarc: pass robotsRules (disallow-prefix) OR " +
         "robotsRulesFull (RFC 9309 with Allow), not both — the full " +
         "gate's carve-outs would be re-dropped by the prefix gate")
     // stage-0 URL-level dedup, the published order (C4/RefinedWeb dedup
@@ -194,7 +97,7 @@ object DocStream {
     // quarantined, the gate-reject policy): a noindex page never
     // reaches the dedup state or the extractor
     val gated0 = graft.sources.WarcSource
-      .pagesStream(spark, inDir, maxFilesPerTrigger)
+      .pagesStream(spark, dir, maxFilesPerTrigger)
       .where(!graft.operators.WebOps.noindexCol(col("html")))
       .withColumn("url_canonical",
         graft.operators.WebOps.urlCanonicalCol(col("url")))
@@ -248,25 +151,72 @@ object DocStream {
     val pages = gated
       .withWatermark("ingest_ts", urlDedupWatermark)
       .dropDuplicatesWithinWatermark("url_canonical")
-    val docs = StreamingOps.extractDocStream(pages, "html",
-        minWords, maxLinkDensity)
+    extracted(pages, minWords, maxLinkDensity)
+  }
+
+  /** The text and page adapters' shared JSON-lines reader: rows of
+    * `schema` whose `body` column holds the document; malformed or
+    * incomplete records are dropped, lang/source defaulted.
+    */
+  private def jsonLines(spark: SparkSession, dir: String,
+      schema: StructType, body: String,
+      maxFilesPerTrigger: Option[Int]): DataFrame = {
+    val reader = spark.readStream.format("text")
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    reader.load(dir)
+      .select(from_json(col("value").cast("string"), schema).as("d"))
+      .where(col("d.doc_id").isNotNull && col(s"d.$body").isNotNull &&
+        col("d.ingest_ts").isNotNull)
+      .select(col("d.doc_id").as("doc_id"), col(s"d.$body").as(body),
+        coalesce(col("d.lang"), lit("und")).as("lang"),
+        coalesce(col("d.source"), lit("unknown")).as("source"),
+        col("d.ingest_ts").as("ingest_ts"))
+  }
+
+  /** Pages (an `html` column) → the document columns. */
+  private def extracted(pages: DataFrame, minWords: Int,
+      maxLinkDensity: Double): DataFrame =
+    StreamingOps.extractDocStream(pages, "html", minWords, maxLinkDensity)
       .select("doc_id", "text", "lang", "source", "ingest_ts")
+
+  /** The streaming CURATION pipeline, the one composition behind every
+    * intake — the checkpointed twin of the batch capstone
+    * q_curate_pipeline: `docs` (from [[fromFiles]], [[fromHtmlFiles]]
+    * or [[fromWarc]]) → the composed gate chain
+    * ([[StreamingOps.curateDocStream]]: holdout → clean → contam →
+    * frozen probe → band claim, ONE stateful operator, ONE
+    * checkpoint) → per-batch DSIR annotation under the FROZEN stored
+    * importance model + the deterministic split stamp → idempotent
+    * (lang, split)-partitioned parquet landing, with claim rejects
+    * recorded under `<outDir>/_quarantine/batch=<id>` (verdict + band
+    * attached) rather than dropped — see the in-body rationale.
+    *
+    * Exactly-once, the [[PaymentConfirm]] discipline, each link
+    * individually spec'd: the source's offsets (a file source's
+    * processed-file log) live under the checkpoint; the claim state emits deterministic
+    * verdicts on replay (lowest-docId claims); and the landing scopes
+    * an OVERWRITE to the micro-batch's own `batch=<id>` directory, so
+    * foreachBatch's at-least-once crash replay rewrites the same files
+    * instead of appending duplicates. Readers `spark.read.parquet
+    * (outDir)` and see (batch, lang, split) partition columns.
+    *
+    * The DSIR annotation runs the BATCH serve leg
+    * ([[graft.operators.Curation.dsirScoreFrom]]) on each micro-batch
+    * — bit-equal to the streaming gate by the existing duality specs,
+    * and batch-local because log_weight gates nothing here (it is the
+    * sampler's input downstream); docs with no scorable features keep
+    * a null log_weight rather than being dropped (the landing is the
+    * corpus of record).
+    */
+  def curatePipeline(spark: SparkSession, docs: DataFrame,
+      benchmark: DataFrame, probeIndexPath: String, dsirIndexPath: String,
+      outDir: String, checkpointDir: String, minTokens: Int = 10,
+      minStopRatio: Double = 0.05, benchmarkEvery: Int = 10,
+      minScore: Double = 0.5, valPct: Int = 10, testPct: Int = 10,
+      ttlMs: Long = 3600 * 1000L): StreamingQuery = {
     val curated = StreamingOps.curateDocStream(spark, docs, benchmark,
       probeIndexPath, minTokens, minStopRatio, benchmarkEvery,
       minScore = minScore, ttlMs = ttlMs)
-    startCurated(spark, curated, dsirIndexPath, outDir, checkpointDir,
-      valPct, testPct)
-  }
-
-  /** The shared landing of the curation pipelines: per-batch DSIR
-    * annotation + split stamp + idempotent partitioned parquet with
-    * the quarantine-first write order. One definition so the text and
-    * markup front doors cannot drift on landing semantics.
-    */
-  private def startCurated(spark: SparkSession,
-      curated: org.apache.spark.sql.Dataset[StreamingOps.CuratedDoc],
-      dsirIndexPath: String, outDir: String, checkpointDir: String,
-      valPct: Int, testPct: Int): StreamingQuery = {
     val landBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
       // snapshot the kept slice ONCE, FIRST: everything after reads it
       // (the emptiness guard, the DSIR join's both sides, the write),

@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
   * `"<amount> <currency>"` (AMOUNT_PAID, with the amount chosen by
   * currency — paymentKauAmount for KAU, else paymentKagAmount).
   *
-  * Here the FSM's outcome stream drives that leg: a `foreachBatch`
+  * Here [[pipeline]] runs that leg behind the FSM: a `foreachBatch`
   * seam looks each micro-batch's resolved payments up in the
   * invoice/amount dimension and lands exactly one confirm record per
   * processed payment in the masked [[graft.sources.InvoiceLog]] audit
@@ -111,17 +111,25 @@ object PaymentConfirm {
   def confirmRecords(outcomes: DataFrame, amounts: DataFrame): DataFrame =
     confirms(outcomes, resolve(amounts))
 
-  /** Run the confirm leg over a live outcome stream: per micro-batch,
-    * derive confirm records and land them idempotently in the masked
-    * JSONL audit sink (digit runs in `amount_paid` come out masked —
-    * the log is the postback log the reference masks at
-    * kinesis-pay.php:459; the DECIMAL `amount` column stays exact).
-    * `amounts` is resolved once, before the query starts; its
-    * broadcast is destroyed when the query terminates. Callers own
-    * stop().
+  /** The payment chain as ONE checkpointed query — the reference's
+    * poll → resolve → approve → record loop (kinesis-pay.php:232-303 +
+    * :487-509): `events`, from any [[PaymentStream]] adapter → payment
+    * FSM ([[PaymentMonitor.outcomes]]) → confirm lookup → masked
+    * idempotent sink. Per micro-batch, confirm records land in the
+    * JSONL audit log through [[graft.sources.InvoiceLog.writeBatch]]
+    * (digit runs in `amount_paid` come out masked — the log is the
+    * postback log the reference masks at kinesis-pay.php:459; the
+    * DECIMAL `amount` column stays exact). `amounts` is resolved once,
+    * before the query starts; its broadcast is destroyed when the
+    * query terminates. This is the one place the chain's exactly-once
+    * links compose; the source's replayable offsets live in the same
+    * checkpoint. Callers own stop().
     */
-  def confirmStream(outcomes: Dataset[PaymentOutcome], amounts: DataFrame,
-      outDir: String, checkpointDir: String): StreamingQuery = {
+  def pipeline(events: Dataset[PaymentEvent], amounts: DataFrame,
+      outDir: String, checkpointDir: String,
+      watermarkDelay: String = "10 seconds",
+      expiryMs: Long = PaymentMonitor.ExpiryMs): StreamingQuery = {
+    val outcomes = PaymentMonitor.outcomes(events, watermarkDelay, expiryMs)
     val terms = resolve(amounts)
     val landBatch: (DataFrame, Long) => Unit = (batch, batchId) =>
       graft.sources.InvoiceLog.writeBatch(confirms(batch, terms), outDir, batchId)
@@ -154,35 +162,11 @@ object PaymentConfirm {
       if (e.runId == query.runId) run()
   }
 
-  /** The full deployment shape of the leg: file-stream ingest → FSM →
-    * confirm lookup → masked idempotent sink, checkpointed end-to-end
-    * (the streaming twin of the reference's poll→approve→record loop).
-    */
+  /** [[pipeline]] over the file source ([[PaymentStream.fromFiles]]). */
   def filePipeline(spark: org.apache.spark.sql.SparkSession, inDir: String,
       amounts: DataFrame, outDir: String, checkpointDir: String,
       watermarkDelay: String = "10 seconds",
       expiryMs: Long = PaymentMonitor.ExpiryMs): StreamingQuery =
-    confirmStream(
-      PaymentMonitor.outcomes(PaymentStream.fromFiles(spark, inDir),
-        watermarkDelay, expiryMs),
-      amounts, outDir, checkpointDir)
-
-  /** The reference's FULL loop as one checkpointed pipeline (r9):
-    * `payfeed` connector ingest → JSON parse → payment FSM → confirm
-    * lookup → masked idempotent sink — poll → resolve → approve → record
-    * (kinesis-pay.php:232-303 + :487-509) end-to-end. The three seams
-    * are the individually-spec'd ones; this method is the composition,
-    * and PayFeedPipelineSpec kills and resumes it, asserting exactly
-    * one masked confirm per processed payment across the restart (the
-    * connector's replayable offsets + the FSM's resolved-marker state
-    * + the batch-scoped idempotent sink, composed).
-    */
-  def feedPipeline(spark: org.apache.spark.sql.SparkSession,
-      feedOptions: Map[String, String], amounts: DataFrame, outDir: String,
-      checkpointDir: String, watermarkDelay: String = "10 seconds",
-      expiryMs: Long = PaymentMonitor.ExpiryMs): StreamingQuery =
-    confirmStream(
-      PaymentMonitor.outcomes(PaymentStream.fromFeed(spark, feedOptions),
-        watermarkDelay, expiryMs),
-      amounts, outDir, checkpointDir)
+    pipeline(PaymentStream.fromFiles(spark, inDir), amounts, outDir,
+      checkpointDir, watermarkDelay, expiryMs)
 }

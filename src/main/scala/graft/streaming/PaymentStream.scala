@@ -4,15 +4,14 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType, TimestampType}
 
-/** Stream-ingest adapter: turns raw record streams into typed
-  * [[PaymentEvent]]s for [[PaymentMonitor]].
+/** Stream-ingest adapters: each turns a raw record stream into the
+  * typed [[PaymentEvent]]s that [[PaymentConfirm.pipeline]] runs.
   *
   * Production wiring is source-agnostic `readStream`: a Kinesis-style
   * connector delivers records with an opaque `data` payload column —
-  * point `raw()` at the connector's format name and options and feed
-  * `fromJson(df, "data")`. Tests drive the exact same parse path with
-  * MemoryStream, which is how the end-to-end spec covers it (no
-  * connector jars required).
+  * load it with `spark.readStream.format(fmt).options(opts).load()`
+  * and feed `fromJson(df, "data")`. Tests drive the exact same parse
+  * path with MemoryStream (no connector jars required).
   */
 object PaymentStream {
 
@@ -24,35 +23,28 @@ object PaymentStream {
     .add("ts", TimestampType)
     .add("kind", StringType)
 
-  /** Generic raw stream: `spark.readStream.format(fmt).options(...)`.
-    * e.g. format="rate" for smoke tests; a kinesis connector format +
-    * (streamName, region, ...) options in production.
-    */
-  def raw(spark: SparkSession, format: String,
-      options: Map[String, String] = Map.empty): DataFrame =
-    spark.readStream.format(format).options(options).load()
-
   /** Connector-backed ingest: the named `payfeed` DataSourceV2 binding
     * ([[graft.sources.PayFeedSource]]) resolved through its registered
     * short format name — the exact call shape a production
-    * Kinesis-style connector swap uses (`raw(spark, fmt, opts)` with
-    * the connector's own format name and options), with the identical
-    * parse + FSM stages downstream. Options pass through to the
+    * Kinesis-style connector swap uses (`spark.readStream.format(fmt)
+    * .options(opts).load()` with the connector's own format name and
+    * options, then [[fromJson]]). Options pass through to the
     * connector (shards / recordsPerRound / rounds / malformedEvery for
     * the stub; streamName / region / ... for a live one).
     */
   def fromFeed(spark: SparkSession,
       options: Map[String, String] = Map.empty): Dataset[PaymentEvent] =
-    fromJson(raw(spark, graft.sources.PayFeedSource.ShortName, options), "value")
+    fromJson(spark.readStream.format(graft.sources.PayFeedSource.ShortName)
+      .options(options).load(), "value")
 
   /** File-backed ingest: every file landing under `dir` is a batch of
     * JSON-lines payment records — the in-sandbox stand-in for a
     * Kinesis-style connector with the same operational semantics: the
     * source's processed-file log lives in the query checkpoint, so a
-    * killed query resumes exactly where it stopped, and with a
-    * file-commit-log sink the whole pipeline is exactly-once across
-    * restarts. Swapping in a real connector is `raw(spark, fmt, opts)`
-    * + [[fromJson]] — the parse and FSM stages are identical.
+    * killed query resumes exactly where it stopped, and
+    * [[PaymentConfirm.pipeline]]'s idempotent sink makes the whole
+    * chain exactly-once across restarts. Swapping in a real connector
+    * is [[fromFeed]]'s shape — the parse and FSM stages are identical.
     */
   def fromFiles(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): Dataset[PaymentEvent] = {
@@ -61,39 +53,6 @@ object PaymentStream {
     // recovery after downtime degrades latency, not stability
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     fromJson(reader.load(dir), "value")
-  }
-
-  /** Socket-backed ingest: newline-delimited JSON payment records on
-    * a TCP socket — the push-delivery stand-in for a Kinesis-style
-    * connector (the reference's live poll loop, kinesis-pay.php:
-    * 286-356, inverted to push). Same parse ([[fromJson]]) and FSM
-    * stages as every other source; the spec drives a real
-    * `ServerSocket` through it. OPERATIONAL CAVEAT, by design of
-    * Spark's socket source: the socket has no replayable offset log,
-    * so a restart loses in-flight lines — it is the low-latency
-    * smoke-test shape, while [[fromFiles]]/[[filePipeline]] is the
-    * exactly-once checkpointed deployment shape.
-    */
-  def fromSocket(spark: SparkSession, host: String,
-      port: Int): Dataset[PaymentEvent] =
-    fromJson(raw(spark, "socket",
-      Map("host" -> host, "port" -> port.toString)), "value")
-
-  /** The full live deployment shape (reference ingest loop,
-    * kinesis-pay.php:286-356): file-stream source → JSON parse →
-    * payment FSM → redacted JSONL audit sink, checkpointed. Returns
-    * the running query; callers own stop(). Micro-batches run as fast
-    * as possible; `maxFilesPerTrigger` bounds per-batch backlog intake.
-    */
-  def filePipeline(spark: SparkSession, inDir: String, outDir: String,
-      checkpointDir: String, watermarkDelay: String = "10 seconds",
-      expiryMs: Long = PaymentMonitor.ExpiryMs,
-      maxFilesPerTrigger: Option[Int] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val outcomes = PaymentMonitor.outcomes(
-      fromFiles(spark, inDir, maxFilesPerTrigger), watermarkDelay, expiryMs)
-    graft.sources.InvoiceLog.writeStream(outcomes.toDF(), outDir,
-      checkpointDir)
   }
 
   /** Name of the observation [[fromJson]] attaches: `lines` (input

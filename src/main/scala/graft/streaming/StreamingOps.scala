@@ -612,12 +612,8 @@ object StreamingOps {
     */
   def nearDupDocStream(docs: DataFrame, bandLen: Int = 4,
       ttlMs: Long = 3600 * 1000L): Dataset[NearDupFlag] = {
-    implicit val outEnc = Encoders.product[NearDupFlag]
-    implicit val keyEnc = Encoders.STRING
-    implicit val bdEnc = Encoders.product[BandDoc]
-    implicit val stEnc = Encoders.product[BandState]
     val (band, nToks) = textBandCols(bandLen)
-    docs
+    claimBands(docs
       // poison-pill tolerance (typedStatusEvents' policy): a null in a
       // non-nullable encoder field would KILL the query; a wordless
       // doc has no band semantics (size(null) is null -> dropped too)
@@ -625,12 +621,7 @@ object StreamingOps {
       .select(band.as("band"),
         col("doc_id").cast("long").as("docId"),
         md5(col("text")).as("md5"))
-      .as[BandDoc]
-      .groupByKey(_.band)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.ProcessingTimeTimeout())(
-        (band: String, ds: Iterator[BandDoc], state: GroupState[BandState]) =>
-          nearDupStep(band, ds, state, ttlMs))
+      .as(bandDocEnc), ttlMs)
   }
 
   /** THE text banding convention — `bandLen` seeded xxhash64 minima
@@ -711,7 +702,7 @@ object StreamingOps {
     * flatMapGroupsWithState, append-mode aggregates and stream-stream
     * joins are "cannot be followed" operations, and this claim uses
     * ProcessingTimeTimeout; [[graft.streaming.DocStream
-    * .curatePipelineFromWarc]] relies on exactly that chained form
+    * .fromWarc]] feeding it relies on exactly that chained form
     * for its CONTENT-INDEPENDENT stage-0 URL dedup, where the key is
     * not derivable from the claim's text state. Redundancy, not
     * admissibility, is why TEXT dedup stays folded in here.)
@@ -805,14 +796,10 @@ object StreamingOps {
       maxHamming: Int = 5, ttlMs: Long = 3600 * 1000L,
       maxPixels: Long = graft.operators.MultimodalOps.DefaultMaxPixels)
       : Dataset[NearDupFlag] = {
-    implicit val outEnc = Encoders.product[NearDupFlag]
-    implicit val keyEnc = Encoders.STRING
-    implicit val bdEnc = Encoders.product[BandDoc]
-    implicit val stEnc = Encoders.product[BandState]
     // the batch op's own band schedule — shared derivation, not a copy
     val (nBands, width, mask) =
       graft.operators.Dedup.pigeonholeBands(maxHamming)
-    media.mapPartitions { it =>
+    claimBands(media.mapPartitions { it =>
       val digest = java.security.MessageDigest.getInstance("MD5")
       it.flatMap { m =>
         val img =
@@ -834,12 +821,7 @@ object StreamingOps {
             }
         }
       }
-    }
-      .groupByKey(_.band)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.ProcessingTimeTimeout())(
-        (band: String, ds: Iterator[BandDoc], state: GroupState[BandState]) =>
-          nearDupStep(band, ds, state, ttlMs))
+    }(bandDocEnc), ttlMs)
   }
 
   /** Streaming AUDIO near-duplicate gate (r9 session 4) — the
@@ -862,13 +844,9 @@ object StreamingOps {
       maxHamming: Int = 5, ttlMs: Long = 3600 * 1000L,
       maxSamples: Long = graft.operators.AudioOps.DefaultMaxSamples)
       : Dataset[NearDupFlag] = {
-    implicit val outEnc = Encoders.product[NearDupFlag]
-    implicit val keyEnc = Encoders.STRING
-    implicit val bdEnc = Encoders.product[BandDoc]
-    implicit val stEnc = Encoders.product[BandState]
     val (nBands, width, mask) =
       graft.operators.Dedup.pigeonholeBands(maxHamming)
-    audio.mapPartitions { it =>
+    claimBands(audio.mapPartitions { it =>
       val digest = java.security.MessageDigest.getInstance("MD5")
       it.flatMap { m =>
         val h =
@@ -887,12 +865,7 @@ object StreamingOps {
             }
         }
       }
-    }
-      .groupByKey(_.band)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.ProcessingTimeTimeout())(
-        (band: String, ds: Iterator[BandDoc], state: GroupState[BandState]) =>
-          nearDupStep(band, ds, state, ttlMs))
+    }(bandDocEnc), ttlMs)
   }
 
   /** Streaming VIDEO near-duplicate gate (r9 session 5) — the
@@ -922,13 +895,9 @@ object StreamingOps {
       maxHamming: Int = 5, ttlMs: Long = 3600 * 1000L, maxFrames: Int = 64,
       maxPixels: Long = graft.operators.MultimodalOps.DefaultMaxPixels)
       : Dataset[NearDupFlag] = {
-    implicit val outEnc = Encoders.product[NearDupFlag]
-    implicit val keyEnc = Encoders.STRING
-    implicit val bdEnc = Encoders.product[BandDoc]
-    implicit val stEnc = Encoders.product[BandState]
     val (nBands, width, mask) =
       graft.operators.Dedup.pigeonholeBands(maxHamming)
-    media.mapPartitions { it =>
+    claimBands(media.mapPartitions { it =>
       val digest = java.security.MessageDigest.getInstance("MD5")
       it.flatMap { m =>
         val frames =
@@ -951,12 +920,7 @@ object StreamingOps {
           }
         }
       }
-    }
-      .groupByKey(_.band)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.ProcessingTimeTimeout())(
-        (band: String, ds: Iterator[BandDoc], state: GroupState[BandState]) =>
-          nearDupStep(band, ds, state, ttlMs))
+    }(bandDocEnc), ttlMs)
   }
 
   /** Streaming EMBEDDING near-duplicate gate (r10) — completes the
@@ -985,27 +949,20 @@ object StreamingOps {
   def embedDupVecStream(embeddings: DataFrame, nTables: Int = 8,
       nPlanes: Int = 3, dim: Int = 64,
       ttlMs: Long = 3600 * 1000L): Dataset[NearDupFlag] = {
-    implicit val outEnc = Encoders.product[NearDupFlag]
-    implicit val keyEnc = Encoders.STRING
-    implicit val bdEnc = Encoders.product[BandDoc]
-    implicit val stEnc = Encoders.product[BandState]
     val clean = embeddings.where(
       col("vec_id").isNotNull && col("embedding").isNotNull &&
         size(col("embedding")) === dim &&
         forall(col("embedding"), v => !isnan(v) && !v.isNull))
-    graft.operators.Similarity.lshBuckets(clean, nTables, nPlanes, dim)
+    val buckets =
+      graft.operators.Similarity.lshBuckets(clean, nTables, nPlanes, dim)
+    claimBands(buckets
       .select(
         concat_ws("_", col("table_id").cast("string"),
           col("bucket").cast("string")).as("band"),
         col("vec_id").cast("long").as("docId"),
         md5(concat_ws(",", transform(col("embedding"),
           v => v.cast("string")))).as("md5"))
-      .as[BandDoc]
-      .groupByKey(_.band)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.ProcessingTimeTimeout())(
-        (band: String, ds: Iterator[BandDoc], state: GroupState[BandState]) =>
-          nearDupStep(band, ds, state, ttlMs))
+      .as(bandDocEnc), ttlMs)
   }
 
   /** One token routed to its owning shard. */
@@ -1180,6 +1137,24 @@ object StreamingOps {
       state.setTimeoutDuration(ttlMs) // any activity renews the TTL
       out.iterator
     }
+  }
+
+  private val bandDocEnc = Encoders.product[BandDoc]
+
+  /** The five near-dup gates' shared tail: group the band rows by band
+    * and run [[nearDupStep]] in keyed state with a processing-time TTL.
+    * Each gate owns only its banding.
+    */
+  private def claimBands(rows: Dataset[BandDoc],
+      ttlMs: Long): Dataset[NearDupFlag] = {
+    implicit val outEnc = Encoders.product[NearDupFlag]
+    implicit val keyEnc = Encoders.STRING
+    implicit val stEnc = Encoders.product[BandState]
+    rows.groupByKey(_.band)
+      .flatMapGroupsWithState(
+        OutputMode.Update(), GroupStateTimeout.ProcessingTimeTimeout())(
+        (band: String, ds: Iterator[BandDoc], state: GroupState[BandState]) =>
+          nearDupStep(band, ds, state, ttlMs))
   }
 
   private[streaming] def nearDupStep(band: String, ds: Iterator[BandDoc],

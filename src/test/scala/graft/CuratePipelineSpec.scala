@@ -85,7 +85,8 @@ class CuratePipelineSpec extends SparkSuite {
       }
       got
     }
-    val q1 = DocStream.curatePipeline(spark, in.getPath, benchmark,
+    val q1 = DocStream.curatePipeline(spark,
+      DocStream.fromFiles(spark, in.getPath), benchmark,
       probeIdx, dsirIdx, out, ckpt, minScore = 0.0)
     try assert(awaitLanded(Set(1L, 4L)) == Set(1L, 4L),
       "batch 1: clean/contam/holdout rejects gone, lowest-id claims land")
@@ -97,7 +98,8 @@ class CuratePipelineSpec extends SparkSuite {
       json(8, text1, "en", "2024-01-01T10:01:00"),        // exact dup of 1
       json(9, text9, "en", "2024-01-01T10:01:01"),        // fresh
       json(11, text4Reorder, "fr", "2024-01-01T10:01:02")) // near-dup of 4
-    val q2 = DocStream.curatePipeline(spark, in.getPath, benchmark,
+    val q2 = DocStream.curatePipeline(spark,
+      DocStream.fromFiles(spark, in.getPath), benchmark,
       probeIdx, dsirIdx, out, ckpt, minScore = 0.0)
     val landed = try awaitLanded(Set(1L, 4L, 9L)) finally q2.stop()
     assert(landed == Set(1L, 4L, 9L),
@@ -210,7 +212,8 @@ class CuratePipelineSpec extends SparkSuite {
       }
       got
     }
-    val q1 = DocStream.curatePipelineFromHtml(spark, in.getPath, benchmark,
+    val q1 = DocStream.curatePipeline(spark,
+      DocStream.fromHtmlFiles(spark, in.getPath), benchmark,
       probeIdx, dsirIdx, out, ckpt, minScore = 0.0)
     try assert(awaitLanded(Set(1L, 4L)) == Set(1L, 4L),
       "extract feeds the gates: boilerplate-only page, dup, contam " +
@@ -221,7 +224,8 @@ class CuratePipelineSpec extends SparkSuite {
     land("p2.jsonl",
       pageJson(8, text1, "en", "2024-01-01T10:01:00"),  // exact dup of 1
       pageJson(9, text9, "en", "2024-01-01T10:01:01"))  // fresh
-    val q2 = DocStream.curatePipelineFromHtml(spark, in.getPath, benchmark,
+    val q2 = DocStream.curatePipeline(spark,
+      DocStream.fromHtmlFiles(spark, in.getPath), benchmark,
       probeIdx, dsirIdx, out, ckpt, minScore = 0.0)
     val landed = try awaitLanded(Set(1L, 4L, 9L)) finally q2.stop()
     assert(landed == Set(1L, 4L, 9L),
@@ -336,9 +340,10 @@ class CuratePipelineSpec extends SparkSuite {
       urls("C") -> text4,
       urls("G") -> ("the first disallowed page carries clean prose " +
         "with many common words that would pass the whole gate chain")))
-    val q1 = DocStream.curatePipelineFromWarc(spark, in.getPath,
+    val q1 = DocStream.curatePipeline(spark,
+      DocStream.fromWarc(spark, in.getPath, robotsRules = Some(robotsRules)),
       benchmark, probeIdx, dsirIdx, out, ckpt, minScore = 0.0,
-      benchmarkEvery = every, robotsRules = Some(robotsRules))
+      benchmarkEvery = every)
     try assert(awaitLanded(Set(h("A"), h("C"))) == Set(h("A"), h("C")),
       "archive pages must parse, extract and land; the cross-URL " +
         "exact dup must not")
@@ -364,9 +369,10 @@ class CuratePipelineSpec extends SparkSuite {
       urls("H") -> ("the second disallowed page also carries clean " +
         "prose with many common words for every downstream gate")),
       poisonAfterFirst = true)
-    val q2 = DocStream.curatePipelineFromWarc(spark, in.getPath,
+    val q2 = DocStream.curatePipeline(spark,
+      DocStream.fromWarc(spark, in.getPath, robotsRules = Some(robotsRules)),
       benchmark, probeIdx, dsirIdx, out, ckpt, minScore = 0.0,
-      benchmarkEvery = every, robotsRules = Some(robotsRules))
+      benchmarkEvery = every)
     val want = Set(h("A"), h("C"), h("E"))
     val landed = try awaitLanded(want) finally q2.stop()
     assert(landed == want, s"got $landed want $want")
@@ -441,9 +447,10 @@ class CuratePipelineSpec extends SparkSuite {
     val tmp = new File(root, "w1.warc")
     Files.write(tmp.toPath, bytes.toByteArray)
     assert(tmp.renameTo(new File(in, "w1.warc")))
-    val q = DocStream.curatePipelineFromWarc(spark, in.getPath,
+    val q = DocStream.curatePipeline(spark,
+      DocStream.fromWarc(spark, in.getPath, robotsRulesFull = Some(rulesFull)),
       benchmark, probeIdx, dsirIdx, out, ckpt, minScore = 0.0,
-      benchmarkEvery = every, robotsRulesFull = Some(rulesFull))
+      benchmarkEvery = every)
     val want = Set(h("CARVED"), h("FREE"))
     val landed = try {
       val deadline = System.nanoTime() + 180L * 1000 * 1000 * 1000
@@ -461,8 +468,7 @@ class CuratePipelineSpec extends SparkSuite {
       s"carve-out + rule-free must land, disallowed must not: $landed")
     // the contract guard: mixing both rule forms is refused loudly
     intercept[IllegalArgumentException] {
-      DocStream.curatePipelineFromWarc(spark, in.getPath,
-        benchmark, probeIdx, dsirIdx, out, ckpt,
+      DocStream.fromWarc(spark, in.getPath,
         robotsRules = Some(rulesFull.select("host", "prefix")),
         robotsRulesFull = Some(rulesFull))
     }

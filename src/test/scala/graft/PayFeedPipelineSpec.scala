@@ -2,11 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.PaymentConfirm
+import graft.streaming.{PaymentConfirm, PaymentStream}
 
 /** The reference's full loop as ONE checkpointed pipeline
-  * (PaymentConfirm.feedPipeline): payfeed connector → JSON parse →
-  * payment FSM → confirm join → masked idempotent InvoiceLog sink,
+  * (PaymentConfirm.pipeline over PaymentStream.fromFeed): payfeed
+  * connector → JSON parse → payment FSM → confirm lookup → masked
+  * idempotent InvoiceLog sink,
   * killed mid-stream and resumed — exactly one masked confirm per
   * processed payment across the restart.
   */
@@ -37,7 +38,8 @@ class PayFeedPipelineSpec extends SparkSuite {
     val ckpt = new java.io.File(root, "ckpt").getPath
     val amounts = amountsFor(rounds = 4)
     def run(rounds: Int): Unit = {
-      val q = PaymentConfirm.feedPipeline(spark, feedOpts(rounds), amounts,
+      val q = PaymentConfirm.pipeline(
+        PaymentStream.fromFeed(spark, feedOpts(rounds)), amounts,
         out, ckpt, watermarkDelay = "0 seconds")
       try q.processAllAvailable() finally q.stop()
     }
@@ -72,8 +74,8 @@ class PayFeedPipelineSpec extends SparkSuite {
     val ckpt = new java.io.File(root, "ckpt").getPath
     // malformedEvery=4 corrupts seqs 0,4,8,... — all CREATES (even
     // seqs); their terminals arrive orphaned and must never confirm
-    val q = PaymentConfirm.feedPipeline(spark,
-      feedOpts(rounds = 2) + ("malformedEvery" -> "4"),
+    val q = PaymentConfirm.pipeline(PaymentStream.fromFeed(spark,
+        feedOpts(rounds = 2) + ("malformedEvery" -> "4")),
       amountsFor(rounds = 2), out, ckpt, watermarkDelay = "0 seconds")
     try q.processAllAvailable() finally q.stop()
     val ids = spark.read

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.sources.InvoiceLog
-import graft.streaming.{PaymentConfirm, PaymentMonitor, PaymentStream}
+import graft.streaming.{PaymentConfirm, PaymentStream}
 
 /** The outbound confirm leg (kinesis-pay.php:487-509): exactly one
   * AMOUNT_PAID record per FSM-resolved payment through the masked
@@ -41,10 +41,9 @@ class PaymentConfirmSpec extends SparkSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[String]
     val out = s"$root/out"
-    def start(dim: DataFrame) = PaymentConfirm.confirmStream(
-      PaymentMonitor.outcomes(PaymentStream.fromJson(input.toDF(), "value"),
-        watermarkDelay = "0 seconds"),
-      dim, out, s"$root/ckpt")
+    def start(dim: DataFrame) = PaymentConfirm.pipeline(
+      PaymentStream.fromJson(input.toDF(), "value"), dim, out, s"$root/ckpt",
+      watermarkDelay = "0 seconds")
     /** Lines for a payment created and processed at minute `m`. */
     def paid(id: Long, m: Int): Seq[String] = Seq(
       f"""{"paymentId": $id, "ts": "2024-01-01T10:$m%02d:00", "kind": "create"}""",

@@ -4,10 +4,13 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.streaming.{PaymentMonitor, PaymentStream}
+import org.apache.spark.sql.functions.col
 
-/** End-to-end ingest pipeline: raw JSON records → typed parse → FSM →
-  * sink, the full streaming path a connector-backed deployment runs.
+import graft.streaming.{PaymentConfirm, PaymentMonitor, PaymentStream}
+
+/** End-to-end ingest: raw JSON records → typed parse → FSM → sink,
+  * over MemoryStream, the built-in rate and socket sources and the
+  * checkpointed file source.
   */
 class PaymentStreamSpec extends SparkSuite {
   import spark.implicits._
@@ -36,14 +39,13 @@ class PaymentStreamSpec extends SparkSuite {
 
   test("raw(): a built-in connector format drives the parse seam end-to-end") {
     import org.apache.spark.sql.functions._
-    // the connector seam itself: raw(fmt, opts) is exactly what a
-    // Kinesis-style connector swap would call — prove it with a format
-    // that actually ships in Spark (`rate`), synthesizing a payload
-    // column from the connector's records with every 3rd one malformed
-    // (fromJson's poison-pill drop path)
-    val rawDf = PaymentStream.raw(spark, "rate",
-      Map("rowsPerSecond" -> "100"))
-    assert(rawDf.isStreaming, "raw() must return an unstarted streaming frame")
+    // the connector seam itself: readStream.format(fmt).options(opts)
+    // is exactly what a Kinesis-style connector swap calls — prove it
+    // with a format that actually ships in Spark (`rate`), synthesizing
+    // a payload column from the connector's records with every 3rd one
+    // malformed (fromJson's poison-pill drop path)
+    val rawDf = spark.readStream.format("rate")
+      .option("rowsPerSecond", "100").load()
     val payload = rawDf.select(
       when(col("value") % 3 === 0, lit("{not json"))
         .otherwise(to_json(struct(col("value").as("paymentId"),
@@ -90,7 +92,9 @@ class PaymentStreamSpec extends SparkSuite {
       } catch { case _: InterruptedException => () } finally s.close()
     })
     writer.setDaemon(true); writer.start()
-    val events = PaymentStream.fromSocket(spark, "localhost", server.getLocalPort)
+    val events = PaymentStream.fromJson(spark.readStream.format("socket")
+      .option("host", "localhost").option("port", server.getLocalPort.toString)
+      .load(), "value")
     val q = PaymentMonitor.outcomes(events, watermarkDelay = "0 seconds")
       .writeStream.format("memory").queryName("socket_outcomes")
       .outputMode("append").start()
@@ -112,7 +116,7 @@ class PaymentStreamSpec extends SparkSuite {
     }
   }
 
-  test("file source → FSM → JSONL sink: exactly-once across kill and checkpoint resume") {
+  test("file pipeline: exactly-once across a kill and a maxFilesPerTrigger change") {
     import java.io.File
     import java.nio.file.Files
     val root = Files.createTempDirectory("graft-e2e").toFile
@@ -126,29 +130,39 @@ class PaymentStreamSpec extends SparkSuite {
       Files.write(tmp.toPath, lines.mkString("\n").getBytes)
       assert(tmp.renameTo(new File(in, name)))
     }
+    val amounts = Seq(
+      (1L, "KAU", BigDecimal("12.34"), BigDecimal("987.65")),
+      (2L, "KAG", BigDecimal("55.00"), BigDecimal("44.10")),
+      (3L, "KAU", BigDecimal("7.77"), BigDecimal("1.23")))
+      .toDF("paymentId", "currency", "kauAmount", "kagAmount")
+    def run(maxFilesPerTrigger: Option[Int]): Unit = {
+      val q = PaymentConfirm.pipeline(
+        PaymentStream.fromFiles(spark, in.getPath, maxFilesPerTrigger),
+        amounts, out, ckpt, watermarkDelay = "0 seconds")
+      try q.processAllAvailable() finally q.stop()
+    }
     land("b1.jsonl",
       """{"paymentId": 1, "ts": "2024-01-01T10:00:00", "kind": "create"}""",
       """{"paymentId": 1, "ts": "2024-01-01T10:03:00", "kind": "processed"}""",
       """{"paymentId": 2, "ts": "2024-01-01T10:04:00", "kind": "create"}""")
-    val q1 = graft.streaming.PaymentStream.filePipeline(
-      spark, in.getPath, out, ckpt, watermarkDelay = "0 seconds")
-    try q1.processAllAvailable() finally q1.stop() // kill mid-stream: p2 still pending
+    run(maxFilesPerTrigger = None) // kill mid-stream: p2 still pending
     land("b2.jsonl",
-      """{"paymentId": 2, "ts": "2024-01-01T10:06:00", "kind": "rejected"}""",
+      """{"paymentId": 2, "ts": "2024-01-01T10:06:00", "kind": "processed"}""",
       """{"paymentId": 3, "ts": "2024-01-01T10:07:00", "kind": "create"}""",
-      """{"paymentId": 3, "ts": "2024-01-01T10:08:00", "kind": "processed"}""")
-    // resume from the SAME checkpoint: p2's pending state must have
-    // survived the restart, b1 must not be reprocessed; the resumed
-    // query also exercises the backpressure knob (one file per batch)
-    val q2 = graft.streaming.PaymentStream.filePipeline(
-      spark, in.getPath, out, ckpt, watermarkDelay = "0 seconds",
-      maxFilesPerTrigger = Some(1))
-    try q2.processAllAvailable() finally q2.stop()
-    val log = graft.sources.InvoiceLog.read(spark, out)
-      .select("paymentId", "status").collect()
-      .map(r => r.getAs[Long]("paymentId") -> r.getAs[String]("status"))
-    assert(log.length == 3, s"each outcome exactly once, got ${log.toSeq}")
-    assert(log.toSet == Set(1L -> "processed", 2L -> "rejected", 3L -> "processed"))
+      """{"paymentId": 3, "ts": "2024-01-01T10:08:00", "kind": "rejected"}""")
+    // resume from the SAME checkpoint with a different intake bound:
+    // p2's pending state must have survived, b1 must not be replayed
+    run(maxFilesPerTrigger = Some(1))
+    val log = spark.read.schema(
+      "paymentId LONG, currency STRING, amount DECIMAL(12,2), " +
+        "amount_paid STRING, resolvedTs TIMESTAMP").json(out)
+      .where(col("paymentId").isNotNull).collect()
+      .map(r => (r.getAs[Long]("paymentId"),
+        r.getAs[java.math.BigDecimal]("amount").toPlainString,
+        r.getAs[String]("amount_paid")))
+    assert(log.sorted.toSeq == Seq((1L, "12.34", "***.*** KAU"),
+      (2L, "44.10", "***.*** KAG")),
+      s"one masked confirm each for p1 and p2, none for p3: ${log.toSeq}")
   }
 
   test("fromJson counts input lines and malformed lines in the query's observed metrics") {
