@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{AudioOps, Curation, Dedup, MediaPipeline, MultimodalOps, Payments, Similarity, TextOps, VideoOps, WebOps}
 import graft.sources.Tables
+import graft.sources.Tables.memo
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, with DuckDB oracle SQL for every SQL-expressible one.
@@ -22,35 +23,6 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
-  /** Memoized synthetic-media fixtures, one rendered Dataset instance
-    * per (session, dir, modality): the registry's render is FIXTURE
-    * cost a real corpus never pays (payloads there are a table every
-    * query scans, not a per-query PNG/WAV/AVI encode), and Spark's
-    * cache manager cannot de-duplicate typed `mapPartitions` plans
-    * across separate calls (each call closes over a fresh lambda, so
-    * the logical plans never compare equal). Sharing the INSTANCE —
-    * with the renderers' own persist markers — makes a bench/verify
-    * session render each modality once and every consumer after the
-    * first measure the real stage (decode), exactly the production
-    * shape. Keyed by the session OBJECT (an identityHashCode key could
-    * hand one session another's Dataset on hash collision — r9
-    * advice); entries of STOPPED sessions are evicted on the next memo
-    * call from any session, which bounds the retention to one stopped
-    * session's worth between calls (a true weak keying can't work
-    * here: the cached Dataset strongly references its session, so a
-    * WeakHashMap entry would never clear, and a weak VALUE could drop
-    * the shared instance mid-session and re-render per query).
-    */
-  private val mediaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), AnyRef]
-
-  private def memo[T <: AnyRef](s: SparkSession, d: String, kind: String)(
-      build: => T): T = {
-    for (k <- mediaCache.keysIterator if k._1.sparkContext.isStopped)
-      mediaCache.remove(k)
-    mediaCache.getOrElseUpdate((s, d, kind), build).asInstanceOf[T]
-  }
-
   /** Deterministic scratch path for registry-built index artifacts —
     * one fixed location per (data dir, kind) under java.io.tmpdir,
     * written in overwrite mode, so repeated bench/verify runs reuse
@@ -63,6 +35,17 @@ object SparkEntry {
       .map("%02x".format(_)).mkString
     s"${sys.props("java.io.tmpdir")}/graft-$kind-$h"
   }
+
+  /** Memoized index artifact: `write` fills the kind's scratch path
+    * once per (session, dir), and every later call returns the path.
+    */
+  private def indexOf(s: SparkSession, d: String, kind: String)(
+      write: String => Unit): String =
+    memo(s, d, s"$kind-path") {
+      val p = indexScratchPath(d, kind)
+      write(p)
+      p
+    }
 
   /** The embeddings split at the vec_id median — the registry's
     * two-snapshot stand-in (old half = "indexed snapshot", new half =
@@ -107,10 +90,8 @@ object SparkEntry {
     * boilerplate concentration.
     */
   private def winnowIndexOf(s: SparkSession, d: String): String =
-    memo(s, d, "winnowindex-path") {
-      val p = indexScratchPath(d, "winnowindex")
+    indexOf(s, d, "winnowindex") { p =>
       TextOps.writeWinnowIndex(docHalf(s, d, old = true), p)
-      p
     }
 
   /** Memoized old-half embedding LSH index (one deterministic
@@ -119,21 +100,17 @@ object SparkEntry {
     * q_index_stats audits it.
     */
   private def lshIndexOf(s: SparkSession, d: String): String =
-    memo(s, d, "lshindex-path") {
-      val p = indexScratchPath(d, "lshindex")
+    indexOf(s, d, "lshindex") { p =>
       Similarity.writeLshIndex(embedHalf(s, d, old = true), p,
         nTables = 8, nPlanes = 3)
-      p
     }
 
   /** Memoized old-half frozen bigram LM — q_lm_serve scores the new
     * half under it (the CCNet reference-model deployment shape).
     */
   private def lmIndexOf(s: SparkSession, d: String): String =
-    memo(s, d, "lmindex-path") {
-      val p = indexScratchPath(d, "lmindex")
+    indexOf(s, d, "lmindex") { p =>
       TextOps.writeLmIndex(docHalf(s, d, old = true), p)
-      p
     }
 
   /** Memoized old-half frozen DSIR importance model — q_dsir_serve
@@ -141,10 +118,8 @@ object SparkEntry {
     * shard deployment shape).
     */
   private def dsirIndexOf(s: SparkSession, d: String): String =
-    memo(s, d, "dsirindex-path") {
-      val p = indexScratchPath(d, "dsirindex")
+    indexOf(s, d, "dsirindex") { p =>
       Curation.writeDsirIndex(docHalf(s, d, old = true), p)
-      p
     }
 
   /** Memoized old-half frozen quality probe — q_probe_serve scores
@@ -153,10 +128,8 @@ object SparkEntry {
     * q_probe_calibration audit the served scores.
     */
   private def probeIndexOf(s: SparkSession, d: String): String =
-    memo(s, d, "probeindex-path") {
-      val p = indexScratchPath(d, "probeindex")
+    indexOf(s, d, "probeindex") { p =>
       Curation.writeProbeIndex(docHalf(s, d, old = true), p)
-      p
     }
 
   /** Memoized new-half scores under the frozen old-half probe — ONE
@@ -172,22 +145,13 @@ object SparkEntry {
     * new half under it with zero training rounds.
     */
   private def bpeIndexOf(s: SparkSession, d: String): String =
-    memo(s, d, "bpeindex-path") {
-      val p = indexScratchPath(d, "bpeindex")
+    indexOf(s, d, "bpeindex") { p =>
       // serve-only build: q_bpe_serve reads merges/ alone, so the
       // vocab inventory's second encode pass is skipped here
       TextOps.writeBpeIndex(docHalf(s, d, old = true), p,
         writeVocab = false)
-      p
     }
 
-  /** Memoized full-corpus BPE merge table — bpeLearn's driver-looped
-    * rounds are deterministic, so q_bpe_learn/tokens/vocab share ONE
-    * training run per (session, dir). The tiny (≤512-row) result is
-    * collected and re-created as a local frame: the memo must not
-    * hand later queries a lineage chained through the training
-    * session's checkpoints.
-    */
   /** Memoized full-corpus unigram piece table — the driver-looped
     * hard-EM training is deterministic, so q_unigram_learn/tokens
     * share ONE run per (session, dir); collected and re-created as a
@@ -206,22 +170,25 @@ object SparkEntry {
     * encodes the new half under it with zero training rounds.
     */
   private def unigramIndexOf(s: SparkSession, d: String): String =
-    memo(s, d, "unigramindex-path") {
-      val p = indexScratchPath(d, "unigramindex")
+    indexOf(s, d, "unigramindex") { p =>
       TextOps.writeUnigramIndex(docHalf(s, d, old = true), p)
-      p
     }
 
   /** Memoized old-half frozen trigram count tables — q_lm_trigram_serve
     * scores the new half under them with zero reference passes.
     */
   private def trigramIndexOf(s: SparkSession, d: String): String =
-    memo(s, d, "trigramindex-path") {
-      val p = indexScratchPath(d, "trigramindex")
+    indexOf(s, d, "trigramindex") { p =>
       TextOps.writeTrigramIndex(docHalf(s, d, old = true), p)
-      p
     }
 
+  /** Memoized full-corpus BPE merge table — bpeLearn's driver-looped
+    * rounds are deterministic, so q_bpe_learn/tokens/vocab share ONE
+    * training run per (session, dir). The tiny (≤512-row) result is
+    * collected and re-created as a local frame: the memo must not
+    * hand later queries a lineage chained through the training
+    * session's checkpoints.
+    */
   private def bpeMergesOf(s: SparkSession, d: String): DataFrame =
     memo(s, d, "bpe-merges") {
       import s.implicits._
@@ -244,10 +211,8 @@ object SparkEntry {
     * columns flag exactly this kind of stale pin.
     */
   private def annIndexOf(s: SparkSession, d: String): String =
-    memo(s, d, "annindex-path") {
-      val p = indexScratchPath(d, "annindex")
+    indexOf(s, d, "annindex") { p =>
       Similarity.writeAnnIndex(t(s, d, "embeddings"), p, nCells = 8)
-      p
     }
 
   /** Memoized WARC fixture archive — the first 500 docs packed once
@@ -256,8 +221,7 @@ object SparkEntry {
     * over it. Bounded driver pack (500 rows, ordered).
     */
   private def warcFixtureOf(s: SparkSession, d: String): String =
-    memo(s, d, "warcfix-path") {
-      val p = indexScratchPath(d, "warcfix") + ".warc"
+    indexOf(s, d, "warcfix") { p =>
       val rows = t(s, d, "documents").select("doc_id", "text")
         .orderBy("doc_id").limit(500).collect()
       val out = new java.io.ByteArrayOutputStream()
@@ -270,12 +234,17 @@ object SparkEntry {
             "</p></body></html>"))
       }
       java.nio.file.Files.write(java.nio.file.Paths.get(p), out.toByteArray)
-      p
     }
 
-  // the persist markers live HERE, on the shared memoized instances —
-  // not inside the library renderers, where every call would register
-  // a cached plan the caller can't unpersist (r9 advice)
+  // Fixtures are memoized INSTANCES: the synthetic-media render is
+  // fixture cost a real corpus never pays (payloads there are a table
+  // every query scans, not a per-query PNG/WAV/AVI encode), and Spark's
+  // cache manager cannot de-duplicate typed `mapPartitions` plans
+  // across calls (each call closes over a fresh lambda, so the plans
+  // never compare equal) — sharing one persisted instance per (session,
+  // dir) renders each modality once. The persist markers live HERE, on
+  // the shared instances — not inside the library renderers, where
+  // every call would register a cached plan the caller can't unpersist
   private val FixtureLvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   // NOT spread to shuffle.partitions like sentFixtureOf (r15 opt
@@ -364,10 +333,8 @@ object SparkEntry {
   // builds its own 8-cell index — the REGISTERED serve path is the
   // production shape
   private def sentAnnIndexOf(s: SparkSession, d: String): String =
-    memo(s, d, "sentannindex-path") {
-      val p = indexScratchPath(d, "sentannindex")
+    indexOf(s, d, "sentannindex") { p =>
       Similarity.writeAnnIndex(sentFixtureOf(s, d)._2, p)
-      p
     }
 
   // the aggregate-sized host-graph edge frame, shared by the pagerank
@@ -383,13 +350,6 @@ object SparkEntry {
     memo(s, d, "audio")(
       AudioOps.syntheticAudio(t(s, d, "documents")).persist(FixtureLvl))
 
-  /** Memoized decoded image-hash frame — the compute-once door for
-    * the four registry consumers of the corpus's dHashes (pairs,
-    * groups, saturation audit, incremental split): decode runs once
-    * per session/dir, 16-byte rows persist, every consumer reads the
-    * cache (the r10 10× sweep measured the per-query re-decode at
-    * ~10 s/op on the 10× corpus).
-    */
   /** Memoized fused image-profile frame — ONE full-corpus decode per
     * (session, dir) serving the gate (q_image_filter), the ANN bridge
     * (q_image_ann) AND the dHash consumers (via [[imageHashesOf]]) —
@@ -410,6 +370,13 @@ object SparkEntry {
     memo(s, d, "audioprofiles")(
       AudioOps.audioProfile(audioOf(s, d)).persist(FixtureLvl))
 
+  /** Memoized decoded image-hash frame — the compute-once door for
+    * the four registry consumers of the corpus's dHashes (pairs,
+    * groups, saturation audit, incremental split): decode runs once
+    * per session/dir, 16-byte rows persist, every consumer reads the
+    * cache (the r10 10× sweep measured the per-query re-decode at
+    * ~10 s/op on the 10× corpus).
+    */
   private def imageHashesOf(s: SparkSession, d: String): DataFrame =
     memo(s, d, "imagehashes")(
       MultimodalOps.imageHashesFromProfiles(imageProfilesOf(s, d))
@@ -418,13 +385,6 @@ object SparkEntry {
           org.apache.spark.sql.functions.col("dhash"))
         .persist(FixtureLvl))
 
-  /** Memoized per-frame video hash frame — the video twin of
-    * [[imageHashesOf]]: the aligned and warp dedup entries both read
-    * it through their precomputed-hash doors, so the per-frame JPEG
-    * decode runs once per session/dir instead of once per dedup
-    * variant (the warp entry's %3 slice is a FILTER on the cached
-    * frame, not a second decode).
-    */
   /** Memoized fused per-frame video profile — ONE per-frame JPEG
     * decode per (session, dir) serving the dHash family (via
     * [[videoFrameHashesOf]]), scene-change keyframes and the video
@@ -435,6 +395,13 @@ object SparkEntry {
     memo(s, d, "videoprofiles")(
       VideoOps.videoFrameProfiles(videosOf(s, d)).persist(FixtureLvl))
 
+  /** Memoized per-frame video hash frame — the video twin of
+    * [[imageHashesOf]]: the aligned and warp dedup entries both read
+    * it through their precomputed-hash doors, so the per-frame JPEG
+    * decode runs once per session/dir instead of once per dedup
+    * variant (the warp entry's %3 slice is a FILTER on the cached
+    * frame, not a second decode).
+    */
   private def videoFrameHashesOf(s: SparkSession, d: String): DataFrame =
     memo(s, d, "videoframehashes") {
       import org.apache.spark.sql.functions.col
@@ -600,14 +567,10 @@ object SparkEntry {
     // over embeddings); two-snapshot surgery spec in
     // IncrementalDedupSpec
     "q_index_stats" -> ((s, d) => {
-      val band = memo(s, d, "bandindex-path") {
-        val p = indexScratchPath(d, "bandindex")
-        Dedup.writeBandIndex(t(s, d, "documents"), p); p
-      }
-      val gram = memo(s, d, "gramindex-path") {
-        val p = indexScratchPath(d, "gramindex")
-        Dedup.writeGramIndex(t(s, d, "documents"), p); p
-      }
+      val band = indexOf(s, d, "bandindex")(
+        Dedup.writeBandIndex(t(s, d, "documents"), _))
+      val gram = indexOf(s, d, "gramindex")(
+        Dedup.writeGramIndex(t(s, d, "documents"), _))
       Dedup.indexStats(s, Seq(
         ("documents_bands", "band", band),
         ("documents_grams", "gram", gram),
@@ -1050,7 +1013,7 @@ object SparkEntry {
     // uid = sent_id·1e9 + doc_id so the bounded query batch
     // (q_id < nQueries) selects FIRST sentences of the first docs.
     // Sentence frame + embeddings are MEMOIZED fixtures (the
-    // mediaCache rationale: a real miner reads stored sentence
+    // media fixtures' rationale: a real miner reads stored sentence
     // embeddings — the encoder ran once at ingest; re-deriving them
     // per plan reference would measure the fixture, not the miner)
     "q_mine_bitext_sent" -> ((s, d) => {

@@ -1,7 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Parquet star-schema loader.
@@ -10,6 +12,15 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * Declarative `spark.read.parquet` so Catalyst gets full pushdown /
   * pruning; at 100 TB these would be partitioned/bucketed tables and
   * the same code holds — filters and column selection reach the scan.
+  *
+  * A table resolves ONCE per session: the first load of (dir, table)
+  * runs the footer probe, the file listing and parquet schema
+  * inference (one Spark job), and every later load in that session
+  * wraps the same resolved relation in a new DataFrame with fresh
+  * attribute ids — no job, and two loads stay as distinct as two
+  * separate reads. The contract is that a table does not change
+  * during a session; a caller that needs files written after its
+  * first load reads them through `spark.newSession()`.
   *
   * `events.ts` has shipped in two parquet generations: TIMESTAMP
   * (NANOS) (surfaced as nanos-long under the legacy flag; normalized
@@ -24,7 +35,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   */
 object Tables {
   /** Session conf required (=true) to read the nanos-timestamped
-    * `events` table; see the loud note in [[apply]].
+    * `events` table; see the loud note in [[resolve]].
     */
   val NanosFlag = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -32,40 +43,68 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The library's one session memo: one value per (session, dir,
+    * kind), shared by the table loader here and the registry's
+    * fixtures and index artifacts (`SparkEntry`). Keyed by the session
+    * OBJECT (an identityHashCode key could hand one session another's
+    * value on hash collision); entries of STOPPED sessions are evicted
+    * on the next memo call from any session, which bounds the
+    * retention to one stopped session's worth between calls (a true
+    * weak keying can't work here: a cached Dataset strongly references
+    * its session, so a WeakHashMap entry would never clear, and a weak
+    * VALUE could drop a shared instance mid-session and rebuild it per
+    * query).
+    */
+  private val sessionMemo = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), AnyRef]
+
+  private[graft] def memo[T <: AnyRef](s: SparkSession, d: String,
+      kind: String)(build: => T): T = {
+    for (k <- sessionMemo.keysIterator if k._1.sparkContext.isStopped)
+      sessionMemo.remove(k)
+    sessionMemo.getOrElseUpdate((s, d, kind), build).asInstanceOf[T]
+  }
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     require(names.contains(name),
       s"unknown table '$name'; expected one of: ${names.mkString(", ")}")
-    if (name == "events") {
-      // Writer-generation detection reads the parquet FOOTER logical
-      // type of one data file (r9, per ADVICE: the previous
-      // try/catch matched the reader's exception TEXT for 'NANOS',
-      // which a Spark upgrade could silently re-word — the footer
-      // annotation is the format itself and cannot drift). Only a
-      // genuine TIMESTAMP(NANOS) generation engages the nanos
-      // machinery; the MICROS generations read with no flag and no
-      // session side effect.
-      if (eventsTsIsNanos(spark, s"$dir/$name.parquet")) {
-        // LOUD SIDE EFFECT — parquet TIMESTAMP(NANOS) is readable
-        // ONLY when the SESSION conf
-        // `spark.sql.legacy.parquet.nanosAsLong` is true: a per-read
-        // option cannot work because ParquetFileFormat overwrites
-        // the relation hadoopConf entry from the session SQLConf at
-        // execution (verified against the 4.1.2 bytecode — there is
-        // no per-read escape hatch). The loader sets the session
-        // conf as a convenience for driver-built sessions, but
-        // REFUSES to override an explicit user `false` — that would
-        // silently change the meaning of the user's other
-        // nanos-parquet reads.
-        // NOTE: must distinguish "user explicitly set false" from
-        // "unset": nanosAsLong is a REGISTERED SQLConf entry, so
-        // getOption returns Some("false") (the default) even when
-        // never set. The two-arg get returns the null fallback only
-        // when unset — that is the probe.
-        requireNanosAllowed(spark)
-        spark.conf.set(NanosFlag, "true")
-      }
-      normalizeEventTs(spark.read.parquet(s"$dir/$name.parquet"))
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    val df = spark.baseRelationToDataFrame(
+      memo(spark, dir, s"table:$name")(resolve(spark, s"$dir/$name.parquet",
+        name == "events")))
+    if (name == "events") normalizeEventTs(df) else df
+  }
+
+  /** The table's resolved relation: file listing and schema. */
+  private def resolve(spark: SparkSession, path: String,
+      isEvents: Boolean): BaseRelation = {
+    // Writer-generation detection reads the parquet FOOTER logical
+    // type of one data file (r9, per ADVICE: the previous try/catch
+    // matched the reader's exception TEXT for 'NANOS', which a Spark
+    // upgrade could silently re-word — the footer annotation is the
+    // format itself and cannot drift). Only a genuine TIMESTAMP(NANOS)
+    // generation engages the nanos machinery; the MICROS generations
+    // read with no flag and no session side effect.
+    if (isEvents && eventsTsIsNanos(spark, path)) {
+      // LOUD SIDE EFFECT — parquet TIMESTAMP(NANOS) is readable ONLY
+      // when the SESSION conf `spark.sql.legacy.parquet.nanosAsLong`
+      // is true: a per-read option cannot work because
+      // ParquetFileFormat overwrites the relation hadoopConf entry
+      // from the session SQLConf at execution (verified against the
+      // 4.1.2 bytecode — there is no per-read escape hatch). The
+      // loader sets the session conf as a convenience for
+      // driver-built sessions, but REFUSES to override an explicit
+      // user `false` — that would silently change the meaning of the
+      // user's other nanos-parquet reads.
+      // NOTE: must distinguish "user explicitly set false" from
+      // "unset": nanosAsLong is a REGISTERED SQLConf entry, so
+      // getOption returns Some("false") (the default) even when never
+      // set. The two-arg get returns the null fallback only when
+      // unset — that is the probe.
+      requireNanosAllowed(spark)
+      spark.conf.set(NanosFlag, "true")
+    }
+    spark.read.parquet(path).queryExecution.analyzed
+      .asInstanceOf[LogicalRelation].relation
   }
 
   /** True iff the events table's `ts` field is parquet
@@ -131,7 +170,7 @@ object Tables {
   }
 
   /** Refuses to proceed when the user has EXPLICITLY set the nanos
-    * flag to false (see the loud note in [[apply]]).
+    * flag to false (see the loud note in [[resolve]]).
     */
   private def requireNanosAllowed(spark: SparkSession): Unit =
     if (spark.conf.get(NanosFlag, null) == "false")

@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.TimestampType
 
 import graft.sources.Tables
@@ -11,7 +16,8 @@ import graft.sources.Tables
   * carries a NANOS column; the current MICROS/NTZ generation loads
   * with zero session side effects, and its NTZ→instant normalization
   * refuses a non-UTC session loudly instead of silently shifting
-  * every instant.
+  * every instant. A table resolves once per session: a repeat load
+  * launches no Spark job, and a new session sees rewritten files.
   */
 class TablesSpec extends SparkSuite {
 
@@ -105,5 +111,66 @@ class TablesSpec extends SparkSuite {
     s2.conf.set(Tables.NanosFlag, "false")
     assert(Tables(s2, dir, "orders").limit(1).count() == 1)
     assert(s2.conf.get(Tables.NanosFlag) == "false")
+  }
+
+  /** Spark jobs launched by `body` on this thread, counted by job
+    * group. The listener bus delivers job events asynchronously and in
+    * order, so a marker job's start event means every earlier start
+    * has been counted.
+    */
+  private def jobsOf[T](s: SparkSession)(body: => T): (T, Int) = {
+    val sc = s.sparkContext
+    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val synced = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => synced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "sync")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(synced.await(30, TimeUnit.SECONDS), "listener never saw the marker job")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("a repeat load in one session launches no Spark job and returns the same rows") {
+    val s2 = spark.newSession()
+    Seq("events", "orders").foreach { n =>
+      val (first, firstJobs) = jobsOf(s2)(Tables(s2, dir, n))
+      assert(firstJobs >= 1, s"$n: the first load resolves the table")
+      val (again, againJobs) = jobsOf(s2)(Tables(s2, dir, n))
+      assert(againJobs == 0, s"$n: a repeat load ran $againJobs job(s)")
+      assert(again.schema == first.schema)
+      val rows = (df: org.apache.spark.sql.DataFrame) =>
+        df.collect().map(_.toString).sorted.toSeq
+      assert(rows(again) == rows(first), s"$n: a repeat load changed rows")
+    }
+    // several registry keys self-join two loads of one table: each
+    // load's own key column must match row to row
+    val (a, b) = (Tables(s2, dir, "orders"), Tables(s2, dir, "orders"))
+    assert(a.join(b, a("o_orderkey") === b("o_orderkey")).count() == a.count())
+  }
+
+  test("a new session sees a table rewritten after the first session loaded it") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    val path = s"$tmp/orders.parquet"
+    val s1 = spark.newSession()
+    import s1.implicits._
+    Seq(1L, 2L).toDF("o_orderkey").write.parquet(path)
+    assert(Tables(s1, tmp, "orders").count() == 2)
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("o_orderkey", "o_comment")
+      .write.mode("overwrite").parquet(path)
+    val fresh = Tables(spark.newSession(), tmp, "orders")
+    assert(fresh.columns.toSeq == Seq("o_orderkey", "o_comment"))
+    assert(fresh.count() == 3)
   }
 }
