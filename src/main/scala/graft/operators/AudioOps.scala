@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.Cached
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.storage.StorageLevel
 
 /** Typed audio pipeline plumbing — the audio leg of the multimodal
   * pillar (reference scope: kinesis-pay.php treats payment media as
@@ -304,24 +304,24 @@ object AudioOps {
     * decode → 8-bin time-energy envelope → the embedding family's own
     * [[Similarity.annTopK]] unchanged. Undecodable and silent rows
     * (all-zero envelope — cosine-undefined, would rank arbitrarily)
-    * are excluded before ranking. The feature frame is persisted +
-    * counted first (the imageDedupPairs rule): annTopK reads it from
-    * BOTH the query and corpus subtrees and Catalyst does not reuse
-    * an un-exchanged MapPartitions decode — un-materialized, every
-    * clip decodes twice. 8 floats/clip, decoupled from the payload,
-    * so the cache is bounded; eager at construction like the
-    * multimodal siblings.
+    * are excluded before ranking ([[envelopes]]). The 8-float frame
+    * is pinned first: annTopK reads it from BOTH the query and corpus
+    * subtrees and Catalyst does not reuse an un-exchanged
+    * MapPartitions decode — unpinned, every clip decodes twice.
     */
   def audioAnnTopK(audio: Dataset[AudioRow], nQueries: Long = 10,
-      k: Int = 5): DataFrame = {
-    val feats = extractAudioFeatures(audio).toDF()
+      k: Int = 5): DataFrame =
+    Similarity.annTopK(Cached.pin(envelopes(audio)), nQueries, k)
+
+  /** The (vec_id, embedding) envelope frame [[audioAnnTopK]] ranks:
+    * decoded, non-silent clips only. A caller that ranks repeatedly
+    * pins it once and calls [[Similarity.annTopK]] on it.
+    */
+  def envelopes(audio: Dataset[AudioRow]): DataFrame =
+    extractAudioFeatures(audio).toDF()
       .where(col("decoded"))
       .where(col("rms") > 0.0)
       .select(col("docId").as("vec_id"), col("envelope").as("embedding"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    feats.count()
-    Similarity.annTopK(feats, nQueries, k)
-  }
 
   /** Deterministic token-segment WAV per document — the registry /
     * fixture bridge, the audio twin of
@@ -382,8 +382,6 @@ object AudioOps {
         }
         AudioRow(id, writeWav(pcm, sampleRate), "audio")
       })
-    // NO persist here (r9 advice, the syntheticImages rationale):
-    // the SparkEntry memoized fixtures persist the shared instance.
   }
 
   /** Re-encoded duplicate injector for the dedup fixtures/registry: a

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cached
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -196,19 +197,12 @@ object Curation {
       n: Int = 4, fpp: Double = 0.03): DataFrame = {
     graft.GraftFunctions.register(documents.sparkSession)
     val sh = shingleFrame(documents, n, hashed = false)
-    // EAGER, bounded: the benchmark side is eval-suite-sized by
-    // construction, materialized ONCE for its three consumers (count,
-    // bloom build, confirm join) — without it each action re-ran the
-    // scan+explode+distinct extraction (the curate_pipeline
-    // iterative-stage precedent). persist+count, NOT localCheckpoint
-    // (r9, per ADVICE): a checkpoint discards lineage, so losing an
-    // executor mid-job at scale would make the confirm join's blocks
-    // unrecoverable and fail the run, whereas persisted blocks
-    // recompute from the plan; MEMORY_AND_DISK spills rather than
-    // evicting under pressure. Blocks release with the frame's GC.
-    val bench = sh.where(pmod(col("doc_id"), lit(benchmarkEvery)) === 0)
-      .select(col("shingle")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // pinned: the benchmark side (eval-suite-sized by construction)
+    // has three consumers (count, bloom build, confirm join), each of
+    // which would re-run the scan+explode+distinct extraction
+    val bench = Cached.pin(
+      sh.where(pmod(col("doc_id"), lit(benchmarkEvery)) === 0)
+        .select(col("shingle")).distinct())
     // an empty benchmark admits nothing — the literal-false prefilter
     // keeps the output schema and the empty result without a bloom
     val prefilter = benchmarkBloom(bench, fpp)
@@ -616,19 +610,13 @@ object Curation {
     * (rn·3 ≤ n), no division.
     */
   def ccnetBuckets(documents: DataFrame): DataFrame = {
-    // persist+count the per-doc score frame (the imageDedupPairs
-    // rule): the plan reads it from BOTH the histogram path and the
-    // final rank join, and Catalyst does not reuse the un-exchanged
-    // unigramLogProb subtree — un-materialized, the corpus tokenizes
-    // TWICE more than needed (measured 2.66 s → 1.00 s at sf0.1).
-    // Three narrow columns per doc, so the cache is bounded; the
-    // operator is consequently EAGER at construction, like the
-    // component-based dedup family.
-    val scores = TextOps.unigramLogProb(documents)
+    // pinned: the plan reads the per-doc score frame from BOTH the
+    // histogram path and the final rank join, and Catalyst does not
+    // reuse the un-exchanged unigramLogProb subtree (measured 2.66 s
+    // → 1.00 s at sf0.1)
+    val scores = Cached.pin(TextOps.unigramLogProb(documents)
       .join(documents.select(col("doc_id"), col("lang")), "doc_id")
-      .select(col("doc_id"), col("lang"), col("avg_logprob"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    scores.count()
+      .select(col("doc_id"), col("lang"), col("avg_logprob")))
     val binned = scores
       .withColumn("bin", floor(col("avg_logprob") * 4).cast("long"))
     val hist = binned.groupBy("lang", "bin").agg(count(lit(1)).as("c"))
@@ -687,17 +675,11 @@ object Curation {
   def dsirScore(documents: DataFrame, buckets: Int = 1024,
       targetEvery: Int = 10, targetRem: Int = 7): DataFrame = {
     val isTarget = col("doc_id") % targetEvery === targetRem
-    // persist+count the hashed-feature frame (the imageDedupPairs /
-    // ccnetBuckets rule): the plan reads it from BOTH the global
-    // ratio aggregates and the final per-doc score join, and the
-    // uni+bi feature explode — the expensive stage — would otherwise
-    // run twice (measured 2.7 s → 1.6 s at sf0.1). Rows are
-    // docs × distinct-buckets-per-doc (≤ `buckets`), three numeric
-    // columns; MEMORY_AND_DISK spills rather than fails at scale,
-    // and lineage recomputes on executor loss.
-    val tf = dsirFeatures(documents, buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tf.count()
+    // pinned: the plan reads the hashed-feature frame from BOTH the
+    // global ratio aggregates and the final per-doc score join, and
+    // the uni+bi feature explode would otherwise run twice (measured
+    // 2.7 s → 1.6 s at sf0.1)
+    val tf = Cached.pin(dsirFeatures(documents, buckets))
     val (ratio, _) = dsirRatio(tf, buckets, targetEvery, targetRem)
     tf.join(ratio, "b")
       .groupBy("doc_id")
@@ -710,7 +692,7 @@ object Curation {
   /** The DSIR hashed-feature frame — (doc_id, b, tf) over unioned
     * unigram+bigram md5 buckets; the shared front half of
     * [[dsirScore]], [[dsirSelect]] and [[writeDsirIndex]] (one
-    * definition, the serve leg cannot drift). Callers persist.
+    * definition, the serve leg cannot drift). Callers pin.
     */
   private[operators] def dsirFeatures(documents: DataFrame,
       buckets: Int): DataFrame =
@@ -1576,9 +1558,7 @@ object Curation {
     // carries each candidate's estimate AND true Jaccard, so the
     // verified positives and the near-miss candidates are two filters
     // of the same frame — not two full sketch builds
-    val audit = Dedup.minhashEstError(documents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    audit.count() // three consumers below (the imageDedupPairs rule)
+    val audit = Cached.pin(Dedup.minhashEstError(documents))
     val pairs = audit.where(col("true_jaccard") >= threshold)
       .select(col("a_id"), col("b_id"),
         col("true_jaccard").as("jaccard"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cached
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -81,21 +82,15 @@ object Dedup {
     */
   def sourceOverlapHll(documents: DataFrame, n: Int = 4, lgK: Int = 14): DataFrame = {
     import graft.functions.TextFunctions.{shingleFromStruct, shingleStructs, tokenize}
-    // persist+count (the imageDedupPairs/decontaminateBloom rule): the
-    // sketch frame feeds BOTH self-join sides; un-materialized, each
-    // side would re-scan the corpus and re-fold every sketch. The
-    // frame is |sources| rows × 2^lgK bytes — bounded — and lineage
-    // survives executor loss, unlike a localCheckpoint. The operator
-    // is consequently EAGER at construction.
-    val sk = documents
+    // pinned: the sketch frame (|sources| rows × 2^lgK bytes) feeds
+    // both self-join sides, which would each re-scan the corpus
+    val sk = Cached.pin(documents
       .withColumn("toks", tokenize(col("text")))
       .where(size(col("toks")) >= n)
       .select(col("source"), explode(shingleStructs(col("toks"), n)).as("z"))
       .select(col("source"), shingleFromStruct(col("z"), n).as("gram"))
       .groupBy("source")
-      .agg(hll_sketch_agg(col("gram"), lgK).as("sk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sk.count()
+      .agg(hll_sketch_agg(col("gram"), lgK).as("sk")))
     sk.as("a").join(broadcast(sk.as("b")), col("a.source") < col("b.source"))
       .select(col("a.source").as("source_a"), col("b.source").as("source_b"),
         hll_sketch_estimate(col("a.sk")).as("est_a"),
@@ -195,12 +190,10 @@ object Dedup {
     def delta(docs: DataFrame, sign: Int) = shingled(docs, n)
       .select(col("doc_id"), col("shingle").as("gram")).distinct()
       .groupBy("gram").agg((count(lit(1)) * sign).as("n_docs"))
-    val merged = stored
-      .unionByName(delta(retractDocs, -1))
-      .unionByName(delta(addedDocs, 1))
-      .groupBy("gram").agg(sum(col("n_docs")).as("n_docs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Cached.scoped(stored
+        .unionByName(delta(retractDocs, -1))
+        .unionByName(delta(addedDocs, 1))
+        .groupBy("gram").agg(sum(col("n_docs")).as("n_docs"))) { merged =>
       // loud on a violated retract contract (the r11 advice item): a
       // doc retracted twice — or never indexed — drives still-present
       // grams' counts negative, and the old silent `> 0` filter would
@@ -214,7 +207,7 @@ object Dedup {
           "or never indexed); refusing to write a corrupted index")
       merged.where(col("n_docs") > 0)
         .write.mode("overwrite").parquet(outPath)
-    } finally merged.unpersist()
+    }
   }
 
   /** Cross-snapshot INCREMENTAL novelty — [[gramNovelty]]'s
@@ -336,16 +329,14 @@ object Dedup {
     if (!composeMembers) repPairs
     else {
       import graft.functions.TextFunctions.tokenize
-      // member map: every doc → its exact-group rep (keep_id). Persist
-      // +count (the starFrames rule): three subtrees read it below.
-      val members = documents
+      // member map: every doc → its exact-group rep (keep_id), pinned:
+      // three subtrees read it below
+      val members = Cached.pin(documents
         .select(col("doc_id"), md5(col("text")).as("text_hash"),
           (size(tokenize(col("text"))) >= shingleLen).as("sketchable"))
         .join(exact(documents).select(col("text_hash"), col("keep_id")
           .as("rep_id")), "text_hash")
-        .select(col("doc_id"), col("rep_id"), col("sketchable"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      members.count()
+        .select(col("doc_id"), col("rep_id"), col("sketchable")))
       val ma = members.select(col("rep_id").as("a_id"), col("doc_id").as("da"))
       val mb = members.select(col("rep_id").as("b_id"), col("doc_id").as("db"))
       val cross = repPairs.join(ma, "a_id").join(mb, "b_id")
@@ -569,102 +560,98 @@ object Dedup {
       numHashes: Int = 64, bands: Int = 16, shingleLen: Int = 3,
       gramN: Int = 4, bucketCap: Int = 10000): DataFrame = {
     import spark.implicits._
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val diff = Curation.snapshotDiff(oldDocs, newDocs).persist(lvl)
-    val statusCounts = diff.groupBy("status").count().collect()
-      .map(r => r.getAs[String]("status") -> r.getAs[Long]("count")).toMap
-    val retract = diff.where(col("status").isin("removed", "changed"))
-      .select("doc_id")
-    val readd = newDocs.join(
-      diff.where(col("status").isin("added", "changed")).select("doc_id"),
-      "doc_id")
-    val changedIdFrame = diff
-      .where(col("status").isin("added", "changed")).select("doc_id")
-    // Guide §2.6 (r15 opt round): the BAND-index chain and the
-    // GRAM-index chain touch disjoint artifacts and share only the
-    // persisted diff (materialized by the statusCounts collect above)
-    // and the input corpora — so the epoch submits them from a small
-    // driver pool and one chain's tasks back-fill the other's stage
-    // tails instead of leaving 31 cores idle between eager actions.
-    // Within the band chain the retract-dedup leg (idx_retract) and
-    // the full surgery (idx1) both read only idx0 and are themselves
-    // independent. Each chain's INTERNAL order is the contract order
-    // (surgery before the dedup that reads it); the scorecard rows
-    // assemble after both complete, so the output frame is identical
-    // to the serial form row-for-row.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutorService(pool)
-    val bandChain = Future {
-      writeBandIndex(oldDocs, s"$workDir/idx0", numHashes, bands,
-        shingleLen)
-    }.flatMap { _ =>
-      // retract-only surgery first, dedup the changed slice against it
-      val dedupLeg = Future {
-        updateBandIndex(spark, s"$workDir/idx0", s"$workDir/idx_retract",
-          retract, readd.limit(0), numHashes, bands, shingleLen)
-        val pairs = dedupAgainst(spark, s"$workDir/idx_retract", readd,
-          numHashes, bands, shingleLen, bucketCap).persist(lvl)
-        val nPairs = pairs.count()
-        val nCross = pairs
-          .join(changedIdFrame.select(col("doc_id").as("a_id"))
-            .withColumn("a_new", lit(true)), Seq("a_id"), "left")
-          .join(changedIdFrame.select(col("doc_id").as("b_id"))
-            .withColumn("b_new", lit(true)), Seq("b_id"), "left")
-          .where(coalesce(col("a_new"), lit(false)) =!=
-            coalesce(col("b_new"), lit(false)))
-          .count()
-        pairs.unpersist()
-        (nPairs, nCross)
+    Cached.scoped(Curation.snapshotDiff(oldDocs, newDocs)) { diff =>
+      val statusCounts = diff.groupBy("status").count().collect()
+        .map(r => r.getAs[String]("status") -> r.getAs[Long]("count")).toMap
+      val retract = diff.where(col("status").isin("removed", "changed"))
+        .select("doc_id")
+      val readd = newDocs.join(
+        diff.where(col("status").isin("added", "changed")).select("doc_id"),
+        "doc_id")
+      val changedIdFrame = diff
+        .where(col("status").isin("added", "changed")).select("doc_id")
+      // Guide §2.6 (r15 opt round): the BAND-index chain and the
+      // GRAM-index chain touch disjoint artifacts and share only the
+      // pinned diff and the input corpora — so the epoch submits them
+      // from a small driver pool and one chain's tasks back-fill the
+      // other's stage tails instead of leaving 31 cores idle between
+      // eager actions. Within the band chain the retract-dedup leg
+      // (idx_retract) and the full surgery (idx1) both read only idx0
+      // and are themselves independent. Each chain's INTERNAL order is
+      // the contract order (surgery before the dedup that reads it);
+      // the scorecard rows assemble after both complete, so the output
+      // frame is identical to the serial form row-for-row.
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration.Duration
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+      implicit val ec: ExecutionContext =
+        ExecutionContext.fromExecutorService(pool)
+      val bandChain = Future {
+        writeBandIndex(oldDocs, s"$workDir/idx0", numHashes, bands,
+          shingleLen)
+      }.flatMap { _ =>
+        // retract-only surgery first, dedup the changed slice against it
+        val dedupLeg = Future {
+          updateBandIndex(spark, s"$workDir/idx0", s"$workDir/idx_retract",
+            retract, readd.limit(0), numHashes, bands, shingleLen)
+          Cached.scoped(dedupAgainst(spark, s"$workDir/idx_retract", readd,
+              numHashes, bands, shingleLen, bucketCap)) { pairs =>
+            (pairs.count(), pairs
+              .join(changedIdFrame.select(col("doc_id").as("a_id"))
+                .withColumn("a_new", lit(true)), Seq("a_id"), "left")
+              .join(changedIdFrame.select(col("doc_id").as("b_id"))
+                .withColumn("b_new", lit(true)), Seq("b_id"), "left")
+              .where(coalesce(col("a_new"), lit(false)) =!=
+                coalesce(col("b_new"), lit(false)))
+              .count())
+          }
+        }
+        // full surgery -> the next epoch's index
+        val surgeryLeg = Future {
+          updateBandIndex(spark, s"$workDir/idx0", s"$workDir/idx1",
+            retract, readd, numHashes, bands, shingleLen)
+          (spark.read.parquet(s"$workDir/idx1/sigs").count(),
+            spark.read.parquet(s"$workDir/idx1/bands").count())
+        }
+        dedupLeg.zip(surgeryLeg)
       }
-      // full surgery -> the next epoch's index
-      val surgeryLeg = Future {
-        updateBandIndex(spark, s"$workDir/idx0", s"$workDir/idx1",
-          retract, readd, numHashes, bands, shingleLen)
-        (spark.read.parquet(s"$workDir/idx1/sigs").count(),
-          spark.read.parquet(s"$workDir/idx1/bands").count())
+      val gramChain = Future {
+        writeGramIndex(oldDocs, s"$workDir/grams", gramN)
+        // novelty of the changed slice vs the STORED gram index
+        val (novDocs, novGrams) = Cached.scoped(noveltyAgainst(
+            spark.read.parquet(s"$workDir/grams"), readd, gramN)) { nov =>
+          val n = nov.count()
+          (n, if (n == 0) 0L
+            else nov.agg(sum(col("n_novel"))).collect()(0).getLong(0))
+        }
+        // the next epoch's gram index rides the SAME surgery discipline
+        // as the band index (r10 verdict item #4): exact count-monoid
+        // retract/add on the stored rows — bit-equal to a scratch
+        // rebuild over the post-diff corpus, with only the changed
+        // slices ever re-tokenized
+        updateGramIndex(spark, s"$workDir/grams", s"$workDir/grams1",
+          oldDocs.join(retract, "doc_id"), readd, gramN)
+        val gramRows = spark.read.parquet(s"$workDir/grams1").count()
+        (novDocs, novGrams, gramRows)
       }
-      dedupLeg.zip(surgeryLeg)
+      val (((nPairs, nCross), (sigRows, bandRowsN)),
+        (novDocs, novGrams, gramRows)) =
+        try Await.result(bandChain.zip(gramChain), Duration.Inf)
+        finally pool.shutdown()
+      Seq(
+        ("diff", "added", statusCounts.getOrElse("added", 0L)),
+        ("diff", "removed", statusCounts.getOrElse("removed", 0L)),
+        ("diff", "changed", statusCounts.getOrElse("changed", 0L)),
+        ("diff", "unchanged", statusCounts.getOrElse("unchanged", 0L)),
+        ("dedup", "pairs", nPairs),
+        ("dedup", "cross_pairs", nCross),
+        ("index", "sigs_rows", sigRows),
+        ("index", "band_rows", bandRowsN),
+        ("index", "gram_rows", gramRows),
+        ("novelty", "docs", novDocs),
+        ("novelty", "novel_grams", novGrams)
+      ).toDF("stage", "metric", "value")
     }
-    val gramChain = Future {
-      writeGramIndex(oldDocs, s"$workDir/grams", gramN)
-      // novelty of the changed slice vs the STORED gram index
-      val nov = noveltyAgainst(spark.read.parquet(s"$workDir/grams"),
-        readd, gramN).persist(lvl)
-      val novDocs = nov.count()
-      val novGrams = if (novDocs == 0) 0L
-        else nov.agg(sum(col("n_novel"))).collect()(0).getLong(0)
-      // the next epoch's gram index rides the SAME surgery discipline
-      // as the band index (r10 verdict item #4): exact count-monoid
-      // retract/add on the stored rows — bit-equal to a scratch
-      // rebuild over the post-diff corpus, with only the changed
-      // slices ever re-tokenized
-      updateGramIndex(spark, s"$workDir/grams", s"$workDir/grams1",
-        oldDocs.join(retract, "doc_id"), readd, gramN)
-      val gramRows = spark.read.parquet(s"$workDir/grams1").count()
-      nov.unpersist()
-      (novDocs, novGrams, gramRows)
-    }
-    val (((nPairs, nCross), (sigRows, bandRowsN)),
-      (novDocs, novGrams, gramRows)) =
-      try Await.result(bandChain.zip(gramChain), Duration.Inf)
-      finally pool.shutdown()
-    diff.unpersist()
-    Seq(
-      ("diff", "added", statusCounts.getOrElse("added", 0L)),
-      ("diff", "removed", statusCounts.getOrElse("removed", 0L)),
-      ("diff", "changed", statusCounts.getOrElse("changed", 0L)),
-      ("diff", "unchanged", statusCounts.getOrElse("unchanged", 0L)),
-      ("dedup", "pairs", nPairs),
-      ("dedup", "cross_pairs", nCross),
-      ("index", "sigs_rows", sigRows),
-      ("index", "band_rows", bandRowsN),
-      ("index", "gram_rows", gramRows),
-      ("novelty", "docs", novDocs),
-      ("novelty", "novel_grams", novGrams)
-    ).toDF("stage", "metric", "value")
   }
 
   /** Stage 2 of MinHash dedup: estimate Jaccard for each candidate
@@ -738,28 +725,30 @@ object Dedup {
     */
   private[operators] def exactVerifiedFromReps(reps: DataFrame,
       threshold: Double, numHashes: Int, bands: Int, shingleLen: Int,
-      bucketCap: Int): DataFrame = {
-    val sigs = minhashSketch(reps, numHashes, shingleLen)
-    val cand = candidatesFromSketch(sigs, numHashes, bands, bucketCap)
-    // distinct shingle set per representative doc, PACKED as one array
-    // row (codegen'd shingled() explode + collect_set — not the
-    // interpreted `transform` shingle lambda): candidate pairs then
-    // fetch two arrays by doc id and intersect in-row, so intersection
-    // work and shuffle volume scale with the candidate count, not with
-    // candidates × shingles exploded rows.
-    val sets = shingled(reps, shingleLen)
+      bucketCap: Int): DataFrame =
+    verifiedAgainstSets(reps, Cached.pin(shingleSets(reps, shingleLen)),
+      threshold, numHashes, bands, shingleLen, bucketCap)
+
+  /** Distinct shingle set per doc, PACKED as one array row (codegen'd
+    * shingled() explode + collect_set — not the interpreted
+    * `transform` shingle lambda): candidate pairs then fetch two
+    * arrays by doc id and intersect in-row, so intersection work and
+    * shuffle volume scale with the candidate count, not with
+    * candidates × shingles exploded rows.
+    */
+  private def shingleSets(reps: DataFrame, shingleLen: Int): DataFrame =
+    shingled(reps, shingleLen)
       .groupBy("doc_id").agg(collect_set(col("shingle")).as("sh"))
-      // persist+count (the imageDedupPairs rule): BOTH sides of the
-      // candidate verification join fetch from this frame, and the
-      // shingle explode + collect_set would otherwise run twice —
-      // measured q_split_leakage 2.14 s → ~1.5 s at sf0.1; the other
-      // consumers sit within host noise (the one extra count job
-      // costs ~0.2 s, the saved explode ~0.5 s and grows with the
-      // corpus). One packed array row per representative; spills at
-      // scale, lineage recomputes.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sets.count()
-    cand
+
+  /** The verification join of [[exactVerifiedFromReps]] against the
+    * reps' [[shingleSets]] frame, which both join sides read (the
+    * caller pins it).
+    */
+  private def verifiedAgainstSets(reps: DataFrame, sets: DataFrame,
+      threshold: Double, numHashes: Int, bands: Int, shingleLen: Int,
+      bucketCap: Int): DataFrame =
+    candidatesFromSketch(minhashSketch(reps, numHashes, shingleLen),
+        numHashes, bands, bucketCap)
       .join(sets.select(col("doc_id").as("a_id"), col("sh").as("a_sh")), "a_id")
       .join(sets.select(col("doc_id").as("b_id"), col("sh").as("b_sh")), "b_id")
       .withColumn("n_inter", size(array_intersect(col("a_sh"), col("b_sh"))))
@@ -767,7 +756,6 @@ object Dedup {
         (size(col("a_sh")) + size(col("b_sh")) - col("n_inter")).cast("double"))
       .where(col("jaccard") >= threshold)
       .select(col("a_id"), col("b_id"), col("jaccard"))
-  }
 
   /** MinHash estimation-error AUDIT frame (r9 session 5 — the text
     * side's "measure, don't guess" member beside
@@ -791,14 +779,9 @@ object Dedup {
       bucketCap: Int = 10000): DataFrame = {
     val reps = documents.join(
       exact(documents).select(col("keep_id").as("doc_id")), "doc_id")
-    val sigs = minhashSketch(reps, numHashes, shingleLen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count()
+    val sigs = Cached.pin(minhashSketch(reps, numHashes, shingleLen))
     val cand = candidatesFromSketch(sigs, numHashes, bands, bucketCap)
-    val sets = shingled(reps, shingleLen)
-      .groupBy("doc_id").agg(collect_set(col("shingle")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sets.count()
+    val sets = Cached.pin(shingleSets(reps, shingleLen))
     cand
       .join(sigs.select(col("doc_id").as("a_id"), col("sig").as("a_sig")), "a_id")
       .join(sigs.select(col("doc_id").as("b_id"), col("sig").as("b_sig")), "b_id")
@@ -957,9 +940,6 @@ object Dedup {
     // minhashExactVerifiedPairs
     val reps = documents.join(
       repIds.select(col("keep_id").as("doc_id")), "doc_id")
-    val nearEdges = exactVerifiedFromReps(reps, threshold,
-        numHashes, bands, shingleLen, bucketCap)
-      .select(col("a_id").as("src"), col("b_id").as("dst"))
     // Iterate components over the REPRESENTATIVE graph only (near-dup
     // edges), then compose the exact-dup stars with ONE post-join:
     // doc label = its rep's component label. Equivalent to iterating
@@ -968,8 +948,16 @@ object Dedup {
     // member docs — but the iterated vertex set shrinks by the
     // duplicate factor (on a 90%-dup corpus, 10×), and the bulky
     // doc→rep stars never churn through the star rounds at all.
-    val repLabels = connectedComponents(
-      repIds.select(col("keep_id")), nearEdges, maxIters)
+    // the shingle sets are read only while the components resolve
+    // (the result reads checkpointed or collected labels), so they
+    // are released before returning
+    val repLabels = Cached.scoped(shingleSets(reps, shingleLen)) { sets =>
+      connectedComponents(repIds.select(col("keep_id")),
+        verifiedAgainstSets(reps, sets, threshold, numHashes, bands,
+          shingleLen, bucketCap)
+          .select(col("a_id").as("src"), col("b_id").as("dst")),
+        maxIters)
+    }
     docs.join(repIds, "h")
       .join(repLabels.withColumnRenamed("id", "keep_id"), "keep_id")
       .select(col("doc_id"), col("label").as("group_id"))
@@ -1095,13 +1083,7 @@ object Dedup {
       return connectedComponents(documents.select(col("doc_id")), pairs, maxIters)
         .select(col("id").as("doc_id"), col("label").as("group_id"))
     }
-    // materializeCapped: this operator is eager anyway (the component
-    // engine runs jobs at construction) and reads the capped
-    // fingerprint frame three times — component edges, touched set,
-    // within-star bond; one materialization beats three evaluations
-    // of the winnow explode+window+self-join chain
-    val r = TextOps.winnowRepArtifacts(documents, k, w, minShared, fpCap,
-      materializeCapped = true)
+    val r = TextOps.winnowRepArtifacts(documents, k, w, minShared, fpCap)
     val edges = r.repPairs.select(col("rep_a").as("src"), col("rep_b").as("dst"))
     val repLabels = connectedComponents(
       r.stars.select(col("rep_id")), edges, maxIters)
@@ -1165,13 +1147,11 @@ object Dedup {
     * rep's label unconditionally (hamming 0 is always ≤ the budget).
     * Identical labels to components over the raw per-doc pair set, by
     * construction. Eager at construction (the component engine runs
-    * jobs), hash frame persisted+counted once for its three readers.
+    * jobs), hash frame pinned once for its three readers.
     */
   def simhashGroups(documents: DataFrame, maxHamming: Int = 3,
       maxRounds: Int = 25): DataFrame = {
-    val hashes = simhash(documents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hashes.count()
+    val hashes = Cached.pin(simhash(documents))
     val stars = hashes.groupBy("simhash64").agg(min(col("doc_id")).as("rep_id"))
     val members = hashes.join(stars, "simhash64")
       .select(col("doc_id"), col("rep_id"))
@@ -1286,24 +1266,13 @@ object Dedup {
       maxHamming: Int = 5,
       maxPixels: Long = MultimodalOps.DefaultMaxPixels,
       maxBucketFrac: Double = SaturatedBucketFrac): DataFrame = {
-    // Materialize the hash frame ONCE: the composed plan reads it from
-    // SIX subtrees (stars, members, band join sides, both expansion
-    // joins) and Catalyst does not reuse the un-exchanged MapPartitions
-    // decode across them — without materialization every raster would
-    // decode repeatedly, the one genuinely expensive stage. The frame
-    // is 16 bytes/image (deliberately decoupled from the payload), so
-    // the cache is bounded. persist+count, NOT localCheckpoint (the
-    // decontaminateBloom ADVICE rule, applied consistently): persisted
-    // blocks recompute from lineage after an executor loss at scale, a
-    // checkpoint's do not; the eager count warms the cache so the one
-    // final job's six subtrees never race to decode a partition. The
-    // operator is consequently EAGER at construction, like the
-    // component-based dedup ops.
-    val hashes = MultimodalOps.imageHashes(media, maxPixels)
+    // pinned: the composed plan reads the 16-byte hash rows from SIX
+    // subtrees (stars, members, band join sides, both expansion
+    // joins), and Catalyst does not reuse the un-exchanged
+    // MapPartitions decode across them
+    val hashes = Cached.pin(MultimodalOps.imageHashes(media, maxPixels)
       .where(col("decoded"))
-      .select(col("docId").as("doc_id"), col("dhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hashes.count()
+      .select(col("docId").as("doc_id"), col("dhash")))
     perceptualPairs(hashes, "dhash", maxHamming, maxBucketFrac)
   }
 
@@ -1324,18 +1293,16 @@ object Dedup {
     * pass must never do. Decode is partition-local, the join shuffles
     * O(clips × bands) band keys — never all-pairs, no cartesian
     * (plan-audited in AudioOpsSpec). Exact-dup-first via the shared
-    * distinct-hash rep reduction ([[perceptualPairs]]), same
-    * persist+count-not-checkpoint discipline as the image op.
+    * distinct-hash rep reduction ([[perceptualPairs]]), hash frame
+    * pinned as in the image op.
     */
   def audioDedupPairs(audio: Dataset[AudioOps.AudioRow],
       maxHamming: Int = 5,
       maxSamples: Long = AudioOps.DefaultMaxSamples,
       maxBucketFrac: Double = SaturatedBucketFrac): DataFrame = {
-    val hashes = AudioOps.audioHashes(audio, maxSamples)
+    val hashes = Cached.pin(AudioOps.audioHashes(audio, maxSamples)
       .where(col("decoded"))
-      .select(col("docId").as("doc_id"), col("ahash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hashes.count()
+      .select(col("docId").as("doc_id"), col("ahash")))
     perceptualPairs(hashes, "ahash", maxHamming, maxBucketFrac)
   }
 
@@ -1373,14 +1340,11 @@ object Dedup {
       maxHamming: Int = 5, minFrac: Double = 0.5,
       maxHashFrames: Int = 64,
       maxPixels: Long = MultimodalOps.DefaultMaxPixels): DataFrame = {
-    // materialize ONCE (the imageDedupPairs rule): the plan below
-    // reads the frame-hash frame from seven subtrees, and every
-    // un-materialized read re-parses + re-decodes every frame
-    val fh = VideoOps.frameHashes(media, maxHashFrames, maxPixels).toDF()
+    // pinned: the plan below reads the frame-hash frame from seven
+    // subtrees, each of which would re-parse and re-decode every frame
+    val fh = Cached.pin(VideoOps.frameHashes(media, maxHashFrames, maxPixels).toDF()
       .select(col("docId").as("doc_id"), col("frameIdx").as("frame_idx"),
-        col("fhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fh.count()
+        col("fhash")))
     videoDedupPairsFrom(fh, maxHamming, minFrac)
   }
 
@@ -1388,9 +1352,8 @@ object Dedup {
     * fhash) frame — the [[warpPairsFromFrameHashes]] twin for the
     * aligned op: a caller holding stored or shared frame hashes (the
     * registry's memoized decode-once frame; a [[perceptualIndex]]-
-    * style artifact) skips the decode entirely. `fh` must be
-    * MATERIALIZED (persist+count) — the plan reads it from seven
-    * subtrees. CONTRACT: `frame_idx` must be unique per `doc_id`
+    * style artifact) skips the decode entirely. `fh` should be pinned
+    * (`Cached.pin`) — the plan reads it from seven subtrees. CONTRACT: `frame_idx` must be unique per `doc_id`
     * (every in-repo producer samples distinct indices); the packed
     * merge fold matches each index at most once, where the old
     * equi-join shape cross-producted duplicate rows — a caller
@@ -1478,34 +1441,26 @@ object Dedup {
     * identical sequences are interchangeable), one representative
     * per signature, members compose back post-join. Returns
     * (members(doc_id, rep_id, nf), repFh — the reps' frame rows,
-    * counts(rep_id, nf)). Retention class (the WebOps/MultimodalOps
-    * convention): members/repFh persist for the session with no
-    * unpersist path — clip-count-sized rows, pinned so every composed
-    * plan reference reads materialized rows; a long-lived session
-    * embedding the library can `spark.catalog.clearCache()` between
-    * corpora.
+    * counts(rep_id, nf)). members and repFh are pinned (one count
+    * fills both): the composed pair plan reads members from three
+    * subtrees, repFh from three and counts from two, and every
+    * unpinned reference re-derived the signature aggregate chain —
+    * the aligned key's plan carried 102 Exchange nodes at sf0.1.
     */
   private def clipStarFrames(
       fh: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val sigs = fh.groupBy("doc_id")
       .agg(xxhash64(concat_ws(",", sort_array(collect_list(
         concat_ws(":", col("frame_idx"), col("fhash")))))).as("sig"),
         count(lit(1)).as("nf"))
     val stars = sigs.groupBy("sig").agg(min(col("doc_id")).as("rep_id"))
-    // persist the star frames (r14 opt round — the starFrames /
-    // imageDedupPairs rule applied here): the composed pair plan reads
-    // members from three subtrees, repFh from three and counts from
-    // two, and every un-materialized reference re-derived the
-    // signature aggregate chain — the aligned key's plan carried 102
-    // Exchange nodes at sf0.1, most of them these re-derivations.
-    // Clip-count-sized rows, the same retention class as the
-    // videoDedupPairs fh pin.
     val members = sigs.join(stars, "sig")
       .select(col("doc_id"), col("rep_id"), col("nf"))
-      .persist(lvl)
-    val repFh = fh.join(stars.select(col("rep_id").as("doc_id")), "doc_id")
-      .persist(lvl)
+    // a rep is the member that is its own rep
+    val repFh = Cached.pin(
+      fh.join(members.where(col("doc_id") === col("rep_id")).select("doc_id"),
+        "doc_id"),
+      members)
     val counts = members.select(col("rep_id"), col("nf")).distinct()
     (members, repFh, counts)
   }
@@ -1622,7 +1577,7 @@ object Dedup {
     * distinct frame PAIR (a multi-band match is one vote), and a
     * candidate needs `minVotes` agreeing votes (default 2) before
     * verification runs — see the inline rationale. Same
-    * exact-dup-first star reduction, decode-once persist, and member
+    * exact-dup-first star reduction, decode-once pin, and member
     * composition as the aligned op ([[clipStarFrames]] — shared
     * code, the views cannot drift). A single-frame overlap still
     * surfaces a candidate but dies on the coverage gate, exactly as
@@ -1632,11 +1587,9 @@ object Dedup {
       maxHamming: Int = 5, minFrac: Double = 0.5,
       maxHashFrames: Int = 64, bucketCap: Int = 10000, minVotes: Int = 2,
       maxPixels: Long = MultimodalOps.DefaultMaxPixels): DataFrame = {
-    val fh = VideoOps.frameHashes(media, maxHashFrames, maxPixels).toDF()
+    val fh = Cached.pin(VideoOps.frameHashes(media, maxHashFrames, maxPixels).toDF()
       .select(col("docId").as("doc_id"), col("frameIdx").as("frame_idx"),
-        col("fhash"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fh.count()
+        col("fhash")))
     warpPairsFromFrameHashes(fh, maxHamming, minFrac, bucketCap, minVotes)
   }
 
@@ -1644,18 +1597,16 @@ object Dedup {
     * fhash) frame — split out so the randomized model spec can drive
     * it with synthetic hash corpora (no codec in the loop) and so a
     * caller with stored frame hashes (a [[perceptualIndex]]-style
-    * artifact) skips the decode. `fh` must be materialized (the
+    * artifact) skips the decode. `fh` should be pinned (the
     * videoDedupPairsWarp contract).
     */
   private[graft] def warpPairsFromFrameHashes(fh: DataFrame,
       maxHamming: Int, minFrac: Double, bucketCap: Int,
       minVotes: Int): DataFrame = {
-    val (members, repFh, counts) = clipStarFrames(fh)
-    // the warp plan reads the rep frame rows from FIVE subtrees
+    // the warp plan reads the pinned rep frame rows from FIVE subtrees
     // (band totals, the hot-bucket aggregate, the banded anti-join
-    // input, and both verification sides) — clipStarFrames persists
-    // them (r14); the count here materializes before the fan-out
-    repFh.count()
+    // input, and both verification sides)
+    val (members, repFh, counts) = clipStarFrames(fh)
     val (nBands, width, mask) = pigeonholeBands(maxHamming)
     val bandCols = (0 until nBands).map(b => struct(lit(b).as("band_idx"),
       shiftright(col("fhash"), b * width).bitwiseAND(mask).as("band_hash")))
@@ -1731,7 +1682,7 @@ object Dedup {
     * profile pass or a stored [[perceptualIndex]]: the same
     * distinct-hash rep reduction + pigeonhole band join + member
     * composition as [[imageDedupPairs]]/[[audioDedupPairs]], without
-    * re-decoding anything. Persists+counts the two-column frame (the
+    * re-decoding anything. Pins the two-column frame (the
     * composed plan reads it from six subtrees); callers must
     * pre-exclude degenerate hashes (the modality ops' `decoded` /
     * `hashValid` flags) — a stub hash would pair unrelated corrupt
@@ -1739,11 +1690,9 @@ object Dedup {
     */
   def perceptualPairsFrom(hashes: DataFrame, maxHamming: Int = 5,
       maxBucketFrac: Double = SaturatedBucketFrac): DataFrame = {
-    val h = hashes.select(
+    val h = Cached.pin(hashes.select(
       col(hashes.columns.head).cast("long").as("doc_id"),
-      col(hashes.columns(1)).cast("long").as("h64"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    h.count()
+      col(hashes.columns(1)).cast("long").as("h64")))
     perceptualPairs(h, "h64", maxHamming, maxBucketFrac)
   }
 
@@ -1761,11 +1710,9 @@ object Dedup {
   def perceptualGroups(hashes: DataFrame, maxHamming: Int = 5,
       maxRounds: Int = 25,
       maxBucketFrac: Double = SaturatedBucketFrac): DataFrame = {
-    val h = hashes.select(
+    val h = Cached.pin(hashes.select(
       col(hashes.columns.head).cast("long").as("doc_id"),
-      col(hashes.columns(1)).cast("long").as("h64"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    h.count()
+      col(hashes.columns(1)).cast("long").as("h64")))
     val stars = h.groupBy("h64").agg(min(col("doc_id")).as("rep_id"))
     val members = h.join(stars, "h64").select(col("doc_id"), col("rep_id"))
     // the guard setting MUST match perceptualPairs' — the pairs view
@@ -1975,9 +1922,9 @@ object Dedup {
     * [[imageDedupPairs]] exclusion rule — a degenerate hash in the
     * index would pair unrelated corrupt files forever after).
     *
-    * Plan: stored-hash scan union the new frame (persist+count — the
-    * shared-frame rule: [[perceptualPairs]] reads it from six
-    * subtrees), the shared rep-reduced band join, then the old-old
+    * Plan: stored-hash scan union the new frame (pinned:
+    * [[perceptualPairs]] reads it from six subtrees), the shared
+    * rep-reduced band join, then the old-old
     * filter as two keyed left joins against the index's id column on
     * the candidate-pair frame (bounded), not the corpus.
     */
@@ -1988,9 +1935,7 @@ object Dedup {
       df.select(col(df.columns.head).cast("long").as("doc_id"),
         col(df.columns(1)).cast("long").as("h64"))
     val stored = norm(index)
-    val union = stored.unionByName(norm(newHashes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    union.count()
+    val union = Cached.pin(stored.unionByName(norm(newHashes)))
     val pairs = perceptualPairs(union, "h64", maxHamming, maxBucketFrac)
     val aOld = stored.select(col("doc_id").as("a_id"), lit(true).as("a_old"))
     val bOld = stored.select(col("doc_id").as("b_id"), lit(true).as("b_old"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cached
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -71,7 +72,7 @@ object MediaPipeline {
   /** Full three-modality run. Image and audio decode exactly ONCE:
     * the fused profile pass ([[MultimodalOps.imageProfile]] /
     * [[AudioOps.audioProfile]]) emits gate fields AND perceptual hash
-    * from the same decode, the profile frame persists (small rows,
+    * from the same decode, the profile frame is pinned (small rows,
     * decoupled from payloads), and the dedup consumes gate SURVIVORS'
     * hashes via [[Dedup.perceptualPairsFrom]] — no payload is
     * re-touched after the profile (the first cut ran gate and dedup
@@ -87,21 +88,14 @@ object MediaPipeline {
       videos: Dataset[MultimodalOps.MediaRow],
       imgMinSide: Int = 16, imgMinEntropy: Double = 1.2,
       maxHamming: Int = 5, canonical: Boolean = false): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val imgProfile = MultimodalOps.imageProfile(images,
-      minSide = imgMinSide, minEntropy = imgMinEntropy).toDF()
-      .persist(lvl)
-    imgProfile.count()
-    val audProfile = AudioOps.audioProfile(audio).toDF().persist(lvl)
-    audProfile.count()
-    // materialized (persist+count) — videoDedupPairsFrom reads the
-    // hash frame from seven subtrees; unmaterialized, every read
-    // re-parses + re-decodes every frame
-    val fh = VideoOps.frameHashes(videos).toDF()
+    val imgProfile = Cached.pin(MultimodalOps.imageProfile(images,
+      minSide = imgMinSide, minEntropy = imgMinEntropy).toDF())
+    val audProfile = Cached.pin(AudioOps.audioProfile(audio).toDF())
+    // videoDedupPairsFrom reads the hash frame from seven subtrees;
+    // unpinned, every read re-parses + re-decodes every frame
+    val fh = Cached.pin(VideoOps.frameHashes(videos).toDF()
       .select(col("docId").as("doc_id"), col("frameIdx").as("frame_idx"),
-        col("fhash"))
-      .persist(lvl)
-    fh.count()
+        col("fhash")))
     curateMediaFromProfiles(imgProfile, audProfile,
       VideoOps.videoMeta(videos).toDF(), fh, maxHamming, canonical)
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cached
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.imageio.ImageIO
@@ -266,12 +267,6 @@ object MultimodalOps {
         ImageIO.write(img, "png", bos)
         MediaRow(id, bos.toByteArray, "image")
       })
-    // NO persist here (r9 advice): a marker inside the library
-    // renderer registers a new cached plan per CALL that the caller
-    // cannot unpersist — block-manager bookkeeping grows unbounded
-    // over a long bench/verify session. Callers that share the
-    // instance across consumers (the SparkEntry memoized fixtures)
-    // persist it themselves.
   }
 
   /** The token-block raster behind [[syntheticImages]] and
@@ -333,17 +328,13 @@ object MultimodalOps {
     */
   def imageAnnTopK(media: Dataset[MediaRow], nQueries: Long = 10,
       k: Int = 5): org.apache.spark.sql.DataFrame = {
-    // persist+count the feature frame (the imageDedupPairs rule):
-    // annTopK reads it from BOTH the query and the corpus subtree, and
-    // Catalyst does not reuse an un-exchanged MapPartitions decode —
-    // un-materialized, every raster decodes twice. The frame is
-    // 8 floats/image, decoupled from the payload, so the cache is
-    // bounded; eager at construction like the dedup siblings.
-    val feats = extractFeatures(media).toDF()
+    // pinned: annTopK reads the 8-float feature frame from BOTH the
+    // query and the corpus subtree, and Catalyst does not reuse an
+    // un-exchanged MapPartitions decode — unpinned, every raster
+    // decodes twice
+    val feats = Cached.pin(extractFeatures(media).toDF()
       .select(org.apache.spark.sql.functions.col("docId").as("vec_id"),
-        org.apache.spark.sql.functions.col("feature").as("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    feats.count()
+        org.apache.spark.sql.functions.col("feature").as("embedding")))
     Similarity.annTopK(feats, nQueries, k)
   }
 
@@ -450,9 +441,9 @@ object MultimodalOps {
   /** [[imageAnnTopK]] over the profile frame's features — identical
     * ranking (the profile carries [[extractFeatures]]' histogram for
     * decoded rasters and its deterministic stub otherwise), zero
-    * decode. The caller owns persistence of `profiles` (a registry
-    * memo persists one shared instance; annTopK reads the feature
-    * frame from both the query and corpus subtrees).
+    * decode. The caller pins `profiles` (a registry memo pins one
+    * shared instance; annTopK reads the feature frame from both the
+    * query and corpus subtrees).
     */
   def imageAnnFromProfiles(profiles: Dataset[ImageProfile],
       nQueries: Long = 10, k: Int = 5): org.apache.spark.sql.DataFrame =

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cached
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -173,8 +174,8 @@ object Similarity {
     * DISTINCT vectors per bucket — precisely the documented intent
     * ("a hot bucket means near-constant vectors better handled by
     * exact dedup first": that dedup now happens inside). The operator
-    * is EAGER at construction (star/member frames persist+count, the
-    * imageDedupPairs discipline — four subtrees read them).
+    * is EAGER at construction (star/member frames are pinned —
+    * four subtrees read them).
     */
   def nearDupPairsLsh(embeddings: DataFrame, threshold: Double = 0.9,
       nTables: Int = 4, nPlanes: Int = 12, bucketCap: Int = 10000,
@@ -247,15 +248,15 @@ object Similarity {
   /** Distinct-vector star reduction shared by [[nearDupPairsLsh]] and
     * [[embedDedupAgainst]]: one representative (smallest vec_id) per
     * DISTINCT embedding value, plus the member → rep assignment. Both
-    * frames persist+count (read from several subtrees of the composed
-    * plan; spillable, lineage-preserving). Grouping on the array
+    * frames are pinned by one count (read from several subtrees of the
+    * composed plan). Grouping on the array
     * column uses Spark's NaN/-0.0-normalized key equality, which
     * matches the kernel's NaN-exclusion contract downstream. Any
     * extra columns on the input (e.g. an is_new flag) ride through to
     * `members`.
     */
   private def starFrames(e0: DataFrame): (DataFrame, DataFrame) = {
-    // NOT spread before the persist (r15 opt round A/B, the media-
+    // NOT spread before the pin (r15 opt round A/B, the media-
     // fixture lesson): the aggregate's few-MB output caches at AQE's
     // coalesced 1-partition layout, which does serialize the sentence
     // dedup leg's reverse fan-out on one core (a 2.6 s single-task
@@ -267,20 +268,11 @@ object Similarity {
     // count, and at gate scale only the sentence leg crosses over.
     val stars = e0.groupBy("embedding")
       .agg(min(col("vec_id")).as("rep_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val members = e0
+    // ONE count fills both: members' plan reads stars (a separate
+    // stars count was a second serial driver round-trip per side)
+    val members = Cached.pin(e0
       .join(stars.select(col("embedding"), col("rep_id")), "embedding")
-      .drop("embedding")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE materializing action: members' plan contains stars, so this
-    // count fills BOTH persist marks (r15 opt round — the separate
-    // stars.count() was a second serial driver round-trip per side
-    // that materialized nothing the members job doesn't. A
-    // lazy-localCheckpoint variant was A/B'd for its truncated
-    // downstream plans and REJECTED: checkpoints don't dedupe across
-    // invocations the way the cache does, so repeated calls recompute
-    // the aggregates — measured strictly worse at bench scale.)
-    members.count()
+      .drop("embedding"), stars)
     (stars.select(col("rep_id"), col("embedding")), members)
   }
 
@@ -2410,17 +2402,13 @@ object Similarity {
     require(batchSize > 0, s"batchSize must be positive: $batchSize")
     require(maxSlices > 0, s"maxSlices must be positive: $maxSlices")
     val (a0, b0) = bitextSides(embeddings, documents, srcLang, dstLang)
-    // persist both lang sides: every slice's subplan references `a`
+    // pin both lang sides: every slice's subplan references `a`
     // (reverse scoring) and `b` (forward + candidate join), so the
     // union plan re-derived the embeddings⋈documents join up to
-    // 2×maxSlices+1 times — with the sides cached each slice subtree
-    // starts from an InMemoryRelation scan (r14 opt round; the
-    // starFrames / trigram-reference-table lesson applied to the
-    // sweep loop). The bounds aggregate below materializes `a` before
-    // the slice plans are even built.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val a = a0.persist(lvl)
-    val b = b0.persist(lvl)
+    // 2×maxSlices+1 times — with the sides pinned each slice subtree
+    // starts from an InMemoryRelation scan
+    val a = Cached.pin(a0)
+    val b = Cached.pin(b0)
     // one 2-value driver aggregate bounds the id sweep
     val bounds = a.agg(min(col("q_id")).as("lo"), max(col("q_id")).as("hi"))
       .collect()(0)
@@ -2549,15 +2537,13 @@ object Similarity {
         s"caller asked dim=$dim")
     // the lang-joined embedding frame feeds FOUR subtrees (src ids,
     // dst ids, the query batch, the reverse candidate semi-join) —
-    // persist so the serve derives it once (r14 opt round: the same
-    // fix the dedup-first twin got for the r13 §5b finding; measured
-    // 118 s of summed task time on this key's serve pass at sf0.1,
-    // most of it the re-derived join)
-    val e = registered(embeddings)
+    // pinned so the serve derives it once (measured 118 s of summed
+    // task time on this key's serve pass at sf0.1, most of it the
+    // re-derived join)
+    val e = Cached.pin(registered(embeddings)
       .join(documents.select(col("doc_id").as("vec_id"), col("lang")),
         "vec_id")
-      .where(pqEncodable(dim))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .where(pqEncodable(dim)))
     val codes = spark.read.parquet(s"$path/codes")
     indexedBitextPairs(centroids, books, codes, e,
       srcIds = e.where(col("lang") === srcLang).select("vec_id"),
@@ -2619,21 +2605,20 @@ object Similarity {
         s"dim=${centroids.head.length}, caller asked dim=$dim")
     // the lang-joined embedding frame feeds FOUR subtrees of the
     // composed plan (both star reductions, the forward shortlist, the
-    // reverse candidate semi-join) — persist so the serve reads it
-    // once (r14, the r13 §5b 100× measure attributed the
-    // 2.4×-of-exact gap to this frame re-derived per plan reference)
-    val e = registered(embeddings)
+    // reverse candidate semi-join) — pinned so the serve reads it
+    // once (the 100× measure attributed the 2.4×-of-exact gap to this
+    // frame re-derived per plan reference)
+    val e = Cached.pin(registered(embeddings)
       .join(documents.select(col("doc_id").as("vec_id"), col("lang")),
         "vec_id")
-      .where(pqEncodable(dim))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .where(pqEncodable(dim)))
     val codes = spark.read.parquet(s"$path/codes")
     // star-reduce via the shared [[starFrames]] aggregate (r14 — see
     // [[mineBitextDeduped]]: map-side partial min folds the hot clone
     // class before the shuffle; the window form had no partial
-    // aggregation). starFrames also persist+counts both frames — the
-    // reps feed three subtrees (src ids, dst ids, query batch), the
-    // members the final composition.
+    // aggregation). starFrames pins both frames — the reps feed three
+    // subtrees (src ids, dst ids, query batch), the members the final
+    // composition.
     def sideStars(lang: String) = starFrames(e.where(col("lang") === lang)
       .select(col("vec_id"), col("embedding")))
     val ((aReps, aMembers), (bReps, bMembers)) =

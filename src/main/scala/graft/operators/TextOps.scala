@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cached
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -857,20 +858,14 @@ object TextOps {
     repPairs: DataFrame, // (rep_a, rep_b, n_shared >= minShared), rep_a < rep_b
     nSelf: DataFrame) // (rep_id, n_self): capped distinct fps of the text
 
-  /** `materializeCapped`: persist the capped rep-fingerprint frame
-    * (MEMORY_AND_DISK — lineage-preserving, the decontaminateBloom
-    * ADVICE rule; an executor loss recomputes instead of failing) so
-    * eager consumers that traverse it several times — winnowGroups
-    * reads it for the component edges, the touched-rep set AND the
-    * within-star bond — compute the winnow explode + window + cap
-    * chain ONCE (the component engine's first job warms the cache).
-    * Lazy single-plan consumers (winnowPairs) leave it false: their
-    * one plan lets Catalyst reuse the exchange, and a persist would
-    * leak cache blocks from a pure plan-builder.
+  /** The capped rep-fingerprint frame is pinned: winnowPairs' plan
+    * reads it from both self-join sides and nSelf, and winnowGroups
+    * (eager) from the component edges, the touched-rep set AND the
+    * within-star bond — one materialization of the winnow explode +
+    * window + cap chain instead of one per reference.
     */
   private[operators] def winnowRepArtifacts(documents: DataFrame, k: Int,
-      w: Int, minShared: Int, fpCap: Int,
-      materializeCapped: Boolean = false): WinnowRep = {
+      w: Int, minShared: Int, fpCap: Int): WinnowRep = {
     val docs = documents.select(col("doc_id"), md5(col("text")).as("h"))
     val starAgg = docs.groupBy("h")
       .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("cnt"))
@@ -887,11 +882,7 @@ object TextOps {
       .groupBy("fp").agg(sum(col("cnt")).as("nd"))
       .where(col("nd") <= fpCap)
       .select(col("fp"))
-    val f0 = fp.join(keep, "fp")
-    val f =
-      if (materializeCapped)
-        f0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else f0
+    val f = Cached.pin(fp.join(keep, "fp"))
     val repPairs = f.as("a").join(f.as("b"),
         col("a.fp") === col("b.fp") && col("a.rep_id") < col("b.rep_id"))
       .groupBy(col("a.rep_id").as("rep_a"), col("b.rep_id").as("rep_b"))
@@ -1191,18 +1182,13 @@ object TextOps {
     * fold-order-free in both engines; the final mean divides as double.
     */
   def unigramLogProb(documents: DataFrame): DataFrame = {
-    // persist+count the per-(doc, token) frame (the imageDedupPairs /
-    // ccnetBuckets rule): the corpus frequency aggregate AND the
-    // final per-doc score join both read it, and the token explode
-    // would otherwise run twice. Rows ≈ distinct tokens per doc,
-    // three narrow columns; MEMORY_AND_DISK spills at scale and
-    // lineage recomputes on executor loss.
-    val tf = documents
+    // pinned: the corpus frequency aggregate AND the final per-doc
+    // score join both read the per-(doc, token) frame, and the token
+    // explode would otherwise run twice
+    val tf = Cached.pin(documents
       .select(col("doc_id"), explode(tokenize(col("text"))).as("tok"))
       .where(col("tok") =!= "")
-      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tf.count()
+      .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf")))
     val freq = tf.groupBy("tok").agg(sum(col("tf")).as("n_tok"))
     val total = freq.agg(sum(col("n_tok")).as("n_total"))
     val lp = round(log(col("n_tok").cast("double") / col("n_total").cast("double")), 6)
@@ -1302,7 +1288,7 @@ object TextOps {
     * Plan shape: the reference contributes three n-gram count
     * aggregates (tri/bi/uni — each one explode + hash-agg with
     * map-side combine); the scored snapshot ONE per-doc trigram tf
-    * aggregate (persisted — five lookup joins read it); lookups are
+    * aggregate (pinned — five lookup joins read it); lookups are
     * n-gram-keyed equi-joins, shuffle O(distinct n-grams), never
     * docs × vocab. Docs with fewer than 3 tokens emit no row (the
     * wordEntropy convention).
@@ -1384,14 +1370,12 @@ object TextOps {
     def toksOf = filter(tokenize(col("text")), t => t =!= "")
     val refTotals = refUni.agg(sum(col("n_uni")).as("n_total"),
       count(lit(1)).as("v_ref"))
-    val tf = documents.where(size(toksOf) >= 3)
+    val tf = Cached.pin(documents.where(size(toksOf) >= 3)
       .select(col("doc_id"), explode(shingleStructs(toksOf, 3)).as("z"))
       .select(col("doc_id"), col("z").getField("0").as("w1"),
         col("z").getField("1").as("w2"),
         col("z").getField("2").as("w3"))
-      .groupBy("doc_id", "w1", "w2", "w3").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tf.count()
+      .groupBy("doc_id", "w1", "w2", "w3").agg(count(lit(1)).as("tf")))
     val joined = tf
       .join(refTri, Seq("w1", "w2", "w3"), "left")
       .join(refBi.select(col("b1").as("w1"), col("b2").as("w2"),
@@ -1470,12 +1454,11 @@ object TextOps {
       .select(col("doc_id"), explode(shingleStructs(toks, 2)).as("z"))
       .select(col("doc_id"), col("z").getField("0").as("w1"),
         col("z").getField("1").as("w2"))
-    // same persist rule as unigramLogProb: the pair-frequency chain
+    // pinned as in unigramLogProb: the pair-frequency chain
     // and the final join both read tf — un-materialized, the bigram
     // explode runs twice
-    val tf = bg.groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tf.count()
+    val tf = Cached.pin(
+      bg.groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("tf")))
     val pairFreq = tf.groupBy("w1", "w2").agg(sum(col("tf")).as("n_pair"))
     val firstFreq = pairFreq.groupBy("w1").agg(sum(col("n_pair")).as("n_first"))
     val vocab = documents.select(explode(toks).as("tok"))

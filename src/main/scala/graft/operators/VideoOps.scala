@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cached
 import java.io.ByteArrayOutputStream
 
 import javax.imageio.ImageIO
@@ -263,11 +264,11 @@ object VideoOps {
     * decode contributes the deterministic stub histogram (bounded
     * per-frame influence on the mean; the dedup ops DROP such frames
     * because a hash must never fake, a mean may degrade — stated
-    * difference). The 8-float clip frame persists + counts before
-    * ranking (the imageDedupPairs rule: annTopK reads it from both
-    * the query and corpus subtrees). The mean assembles through an
-    * 8-element `transform` — interpreted, but over the CLIP-sized
-    * aggregate frame, never per frame (the §5b lambda rule).
+    * difference). The 8-float clip frame is pinned before ranking
+    * (annTopK reads it from both the query and corpus subtrees). The
+    * mean assembles through an 8-element `transform` — interpreted,
+    * but over the CLIP-sized aggregate frame, never per frame (the §5b
+    * lambda rule).
     */
   def videoAnnTopK(media: Dataset[MultimodalOps.MediaRow],
       nQueries: Long = 10, k: Int = 5, everyN: Int = 4,
@@ -277,7 +278,7 @@ object VideoOps {
     implicit val enc = Encoders.product[MultimodalOps.MediaRow]
     val frameImgs = frameSample(media, everyN, maxFrames)
       .map(f => MultimodalOps.MediaRow(f.docId, f.payload, "image"))
-    val clipVecs = MultimodalOps.extractFeatures(frameImgs, maxPixels = maxPixels)
+    val clipVecs = Cached.pin(MultimodalOps.extractFeatures(frameImgs, maxPixels = maxPixels)
       .toDF()
       .select(col("docId"), posexplode(col("feature")).as(Seq("bin", "v")))
       .groupBy("docId", "bin").agg(avg(col("v")).as("mv"))
@@ -286,9 +287,7 @@ object VideoOps {
       .select(col("docId").as("vec_id"),
         expr("transform(z, x -> cast(x.mv as float))").as("embedding"))
       .where(expr(
-        "aggregate(embedding, cast(0.0 as double), (a, x) -> a + x) > 0"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    clipVecs.count()
+        "aggregate(embedding, cast(0.0 as double), (a, x) -> a + x) > 0")))
     Similarity.annTopK(clipVecs, nQueries, k)
   }
 
@@ -375,13 +374,13 @@ object VideoOps {
   /** [[videoAnnTopK]] over the profile frame — identical ranking
     * (every `everyN`-th frame's histogram, stub included for
     * undecodable frames, mean-pooled per clip into the same annTopK),
-    * zero decode. The caller owns persistence of `profiles`; the
-    * clip-vector frame persists here as in the direct op (annTopK
-    * reads it from the query and corpus subtrees).
+    * zero decode. The caller pins `profiles`; the clip-vector frame
+    * is pinned here as in the direct op (annTopK reads it from the
+    * query and corpus subtrees).
     */
   def videoAnnFromProfiles(profiles: Dataset[VideoFrameProfile],
       nQueries: Long = 10, k: Int = 5, everyN: Int = 4): DataFrame = {
-    val clipVecs = profiles.toDF()
+    val clipVecs = Cached.pin(profiles.toDF()
       .where(col("frameIdx") % everyN === 0)
       .select(col("docId"), posexplode(col("hist")).as(Seq("bin", "v")))
       .groupBy("docId", "bin").agg(avg(col("v")).as("mv"))
@@ -390,9 +389,7 @@ object VideoOps {
       .select(col("docId").as("vec_id"),
         expr("transform(z, x -> cast(x.mv as float))").as("embedding"))
       .where(expr(
-        "aggregate(embedding, cast(0.0 as double), (a, x) -> a + x) > 0"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    clipVecs.count()
+        "aggregate(embedding, cast(0.0 as double), (a, x) -> a + x) > 0")))
     Similarity.annTopK(clipVecs, nQueries, k)
   }
 
@@ -485,8 +482,6 @@ object VideoOps {
         }
         MediaRow(id, writeAviMjpeg(frames, side, side, fps = 10), "video")
       })
-    // NO persist here (r9 advice, the syntheticImages rationale):
-    // the SparkEntry memoized fixtures persist the shared instance.
   }
 
   /** Minimal canonical AVI/MJPEG writer (fixtures + syntheticVideos):

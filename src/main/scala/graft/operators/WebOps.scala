@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Cached
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -642,9 +643,9 @@ object WebOps {
     * to any page scan — the web is ~10⁸ hosts, not 10¹¹ pages) and
     * each iteration is one keyed join + one keyed aggregate over it —
     * the Pregel shape, shuffling on host ids, never on pages. The
-    * prepared edge and node frames persist (MEMORY_AND_DISK) because
-    * the unrolled plan references them per iteration — aggregate-sized
-    * pins, the memoized-fixture retention rule. Overflow bound,
+    * prepared edge and node frames are pinned because the unrolled
+    * plan references them per iteration (aggregate-sized; a repeat
+    * call over an equal edge frame reuses the pins). Overflow bound,
     * stated: rank·850000·w must stay under 2⁶³ — with total rank mass
     * ≤ nodes·10⁶ that holds to ~10⁹ edge weight on a 10⁶-host graph;
     * beyond that, pre-scale the weights (only their RATIO per source
@@ -652,28 +653,16 @@ object WebOps {
     */
   def pageRank(edges: DataFrame, srcCol: String = "src_host",
       dstCol: String = "dst_host", wCol: String = "n_links",
-      iters: Int = 5, persistFrames: Boolean = true,
-      checkpointEvery: Int = 8,
+      iters: Int = 5, checkpointEvery: Int = 8,
       redistributeDangling: Boolean = false): DataFrame = {
     require(iters >= 1, s"pageRank: iters must be >= 1, got $iters")
     require(checkpointEvery >= 1,
       s"pageRank: checkpointEvery must be >= 1, got $checkpointEvery")
-    // persistFrames: the unrolled plan references the prepared edge
-    // and node frames once per iteration, so by default they persist
-    // (aggregate-sized pins). The pins are PER-CALL instances a lazy
-    // result cannot unpersist — a long-lived driver invoking the
-    // operator repeatedly should pass persistFrames = false and hand
-    // in an already-persisted edge frame instead (the registry's
-    // memoized host-graph pattern), keeping cache retention caller-
-    // owned (review finding).
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    def pinned(df: DataFrame): DataFrame =
-      if (persistFrames) df.persist(lvl) else df
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(wCol).cast("long").as("w"))
     val outw = e.groupBy("src").agg(sum(col("w")).as("outw"))
-    val ew = pinned(e.join(outw, "src"))
-    val nodes = pinned(e.select(col("src").as("host"))
+    val ew = Cached.pin(e.join(outw, "src"))
+    val nodes = Cached.pin(e.select(col("src").as("host"))
       .union(e.select(col("dst"))).distinct())
     // redistributeDangling: a node with no outlinks absorbs its mass
     // in the simple variant; the redistribution option returns the
@@ -1322,16 +1311,14 @@ object WebOps {
   def fetchSchedule(pages: DataFrame, delays: DataFrame,
       urlCol: String = "url", defaultDelayMs: Long = 1000L,
       nBuckets: Int = 32): DataFrame = {
-    // persisted: the offsets aggregate AND the rank both read this
-    // corpus-sized frame — unpersisted, the canonicalize+distinct
-    // would run twice (the decode-once discipline; bigramLogProb's
-    // tf persist is the precedent)
-    val canon = urlNormalize(pages, urlCol)
+    // pinned: the offsets aggregate AND the rank both read this
+    // corpus-sized frame — unpinned, the canonicalize+distinct would
+    // run twice
+    val canon = Cached.pin(urlNormalize(pages, urlCol)
       .select(col("host"), col("url_canonical")).distinct()
       .withColumn("bucket",
         pmod(conv(substring(md5(col("url_canonical")), 1, 2), 16, 10)
-          .cast("long"), lit(nBuckets.toLong)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .cast("long"), lit(nBuckets.toLong))))
     val offsets = canon.groupBy("host", "bucket")
       .agg(count(lit(1)).as("n"))
       .withColumn("off",

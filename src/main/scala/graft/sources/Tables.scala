@@ -47,13 +47,18 @@ object Tables {
     * kind), shared by the table loader here and the registry's
     * fixtures and index artifacts (`SparkEntry`). Keyed by the session
     * OBJECT (an identityHashCode key could hand one session another's
-    * value on hash collision); entries of STOPPED sessions are evicted
-    * on the next memo call from any session, which bounds the
-    * retention to one stopped session's worth between calls (a true
-    * weak keying can't work here: a cached Dataset strongly references
-    * its session, so a WeakHashMap entry would never clear, and a weak
+    * value on hash collision). An entry is evicted, on the next memo
+    * call from any session, once its session's SparkContext has
+    * stopped. A `spark.newSession()` shares the context, so its
+    * entries stay until the context stops: a driver that makes a
+    * session per request grows the memo by one set of relations and
+    * fixtures per session (open, ROADMAP direction 4). A weak keying
+    * can't work here: a cached Dataset strongly references its
+    * session, so a WeakHashMap entry would never clear, and a weak
     * VALUE could drop a shared instance mid-session and rebuild it per
-    * query).
+    * query. The memoized fixtures are pinned frames under the
+    * `graft.Cached` rule: `spark.catalog.clearCache()` frees their
+    * blocks, and they recompute from lineage on their next read.
     */
   private val sessionMemo = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), AnyRef]

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Cached
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -218,24 +219,21 @@ object DocStream {
       probeIndexPath, minTokens, minStopRatio, benchmarkEvery,
       minScore = minScore, ttlMs = ttlMs)
     val landBatch: (DataFrame, Long) => Unit = (batch, batchId) => {
-      // snapshot the kept slice ONCE, FIRST: everything after reads it
-      // (the emptiness guard, the DSIR join's both sides, the write),
-      // and — load-bearing — the truncated lineage keeps the per-batch
-      // plans small: without it, dsirScoreFrom's analysis walks the
-      // FULL gate-chain expression tree per batch (measured: the
-      // analyzer spun minutes on the md5-heavy probe/band expressions
-      // re-embedded under the feature explode). Guarding on a separate
-      // pre-checkpoint isEmpty action would RE-EXECUTE the gate chain
-      // and the state exchange once per test (review finding) — the
-      // checkpoint of an idle-tick's empty frame is one trivial job,
-      // the cheaper side of that trade.
-      val rows = batch
+      // pin the batch ONCE, FIRST: everything after reads it (the
+      // emptiness guards, the DSIR join's both sides, the writes), and
+      // the optimizer then sees the cached relation instead of the
+      // full gate-chain expression tree under dsirScoreFrom's feature
+      // explode (measured: minutes of planning per batch without a
+      // cut). Guarding on a separate isEmpty action before the pin
+      // would RE-EXECUTE the gate chain and the state exchange once
+      // per test; pinning an idle tick's empty frame is one trivial
+      // job. The pin is released when the batch ends, so a
+      // forever-running intake holds no per-batch text in storage.
+      Cached.scoped(batch
         .select(col("docId").as("doc_id"), col("text"), col("lang"),
           col("source"), col("nTok").as("n_tok"),
           col("probeScore").as("probe_score"), col("band"),
-          col("verdict"))
-        .localCheckpoint()
-      try {
+          col("verdict"))) { rows =>
         // skip empty frames: the claim's ProcessingTimeTimeout keeps
         // the engine scheduling micro-batches to fire potential
         // evictions (nearDupDocStream's documented behavior) — an
@@ -280,15 +278,6 @@ object DocStream {
             .write.mode("overwrite").partitionBy("lang", "split")
             .parquet(s"$outDir/batch=$batchId")
         }
-      } finally {
-        // free the checkpointed blocks deterministically: on a
-        // forever-running intake, waiting for driver GC to trigger
-        // the ContextCleaner lets per-batch text payloads accumulate
-        // in executor storage (review finding); a plan that is not a
-        // LogicalRDD (API drift) degrades to the GC path, not a crash
-        rows.queryExecution.analyzed.collectFirst {
-          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-        }.foreach(_.unpersist(false))
       }
     }
     curated.toDF().writeStream

@@ -325,7 +325,7 @@ class WebOpsSpec extends SparkSuite {
         WebOps.syntheticLinkedHtml(col("doc_id"), lit("w")))
     val edges = WebOps.hostGraph(docs).persist()
     def run(iters: Int, every: Int) = WebOps.pageRank(edges,
-        iters = iters, persistFrames = false, checkpointEvery = every,
+        iters = iters, checkpointEvery = every,
         redistributeDangling = true)
       .collect()
       .map(x => (x.getAs[String]("host"), x.getAs[Long]("rank_micro")))
