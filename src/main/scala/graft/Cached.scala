@@ -21,13 +21,8 @@ import org.apache.spark.storage.StorageLevel
   *    on equal input, so a repeat call reuses the entry. A plan that
   *    runs through a typed closure capturing per-call values
   *    (`map`/`mapPartitions`) or through a `localCheckpoint` is
-  *    different on every call: the direct decode doors (e.g.
-  *    `Dedup.imageDedupPairs`, `AudioOps.audioAnnTopK`) pin such a
-  *    plan and add an entry per call, so a session that calls them
-  *    repeatedly pins the decode once and goes through their
-  *    precomputed-input forms (`perceptualPairsFrom`,
-  *    `videoDedupPairsFrom`, `Similarity.annTopK`, ...), as the
-  *    registry's session fixtures do.
+  *    different on every call, so such a frame is pinned once by its
+  *    owner (the registry's session fixtures), not per call.
   */
 private[graft] object Cached {
   private val Level = StorageLevel.MEMORY_AND_DISK

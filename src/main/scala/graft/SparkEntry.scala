@@ -375,7 +375,7 @@ object SparkEntry {
     */
   private def imageHashesOf(s: SparkSession, d: String): DataFrame =
     memo(s, d, "imagehashes")(Cached.pin(
-      MultimodalOps.imageHashesFromProfiles(imageProfilesOf(s, d))
+      MultimodalOps.imageHashes(imageProfilesOf(s, d))
         .where(org.apache.spark.sql.functions.col("decoded"))
         .select(org.apache.spark.sql.functions.col("docId").as("doc_id"),
           org.apache.spark.sql.functions.col("dhash"))))
@@ -400,7 +400,7 @@ object SparkEntry {
   private def videoFrameHashesOf(s: SparkSession, d: String): DataFrame =
     memo(s, d, "videoframehashes") {
       import org.apache.spark.sql.functions.col
-      Cached.pin(VideoOps.frameHashesFromProfiles(videoProfilesOf(s, d))
+      Cached.pin(VideoOps.frameHashes(videoProfilesOf(s, d))
         .toDF()
         .select(col("docId").as("doc_id"), col("frameIdx").as("frame_idx"),
           col("fhash")))
@@ -1110,7 +1110,7 @@ object SparkEntry {
     // decode -> luminance histogram -> the embedding family's exact
     // annTopK; ranking fixture in ImageDedupSpec
     "q_image_ann" -> ((s, d) =>
-      MultimodalOps.imageAnnFromProfiles(imageProfilesOf(s, d))),
+      MultimodalOps.imageAnnTopK(imageProfilesOf(s, d))),
     "q_corpus_clean" -> ((s, d) => TextOps.cleanCorpus(t(s, d, "documents"))),
     // the capstone's attrition funnel (the published-pipeline "data
     // card"): per stage n_in/n_dropped/n_out, exact integers, oracled
@@ -1448,7 +1448,7 @@ object SparkEntry {
     // (~22% low-entropy drop at sf0.01; production defaults assume
     // real photos)
     "q_image_filter" -> ((s, d) =>
-      MultimodalOps.gateFromProfiles(imageProfilesOf(s, d))
+      MultimodalOps.imageFilter(imageProfilesOf(s, d))
       .toDF("doc_id", "width", "height", "entropy", "keep", "fail_reasons")),
     // rows-only (binary RIFF decode is not SQL-expressible): the audio
     // leg of the multimodal pillar — the testdata has no binary
@@ -1494,7 +1494,7 @@ object SparkEntry {
     // duration/rms/peak emitted for re-cutting. Token-free segments
     // render silent, so short docs exercise the silent reason
     // naturally
-    "q_audio_filter" -> ((s, d) => AudioOps.gateFromProfiles(
+    "q_audio_filter" -> ((s, d) => AudioOps.audioFilter(
       audioProfilesOf(s, d))
       .toDF("doc_id", "duration_ms", "rms", "peak", "keep", "fail_reasons")),
     // the audio -> ANN bridge: real decode -> 8-bin time-energy
@@ -1510,12 +1510,12 @@ object SparkEntry {
       "doc_id", "width", "height", "n_frames", "fps", "duration_ms",
       "codec", "decoded")),
     // scene-change keyframe selection over real per-frame histograms
-    "q_video_keyframes" -> ((s, d) => VideoOps.keyframesFromProfiles(
+    "q_video_keyframes" -> ((s, d) => VideoOps.videoKeyframes(
       videoProfilesOf(s, d))
       .toDF("doc_id", "frame_idx", "delta")),
     // temporal perceptual dedup: per-frame dHash banding + aligned-
     // frame verification (near-dup text families pair up)
-    "q_video_dedup" -> ((s, d) => Dedup.videoDedupPairsFrom(
+    "q_video_dedup" -> ((s, d) => Dedup.videoDedupPairs(
       videoFrameHashesOf(s, d))),
     // warp-robust variant: content-banded candidates + modal-shift
     // re-alignment (catches trimmed/re-timed copies the aligned
@@ -1525,7 +1525,7 @@ object SparkEntry {
     // full-corpus behavior is spec- and scale-measured — the
     // registry entry demonstrates the operator, not a second decode
     // of the same rasters
-    "q_video_dedup_warp" -> ((s, d) => Dedup.warpPairsFromFrameHashes(
+    "q_video_dedup_warp" -> ((s, d) => Dedup.videoDedupPairsWarp(
       videoFrameHashesOf(s, d).filter(org.apache.spark.sql.functions
         .col("doc_id") % 3 === 0),
       maxHamming = 5, minFrac = 0.5, bucketCap = 10000, minVotes = 2)),
@@ -1534,7 +1534,7 @@ object SparkEntry {
     // three-modality symmetry; doc_id%3 slice (q_video_dedup pays
     // the full-corpus decode already)
     "q_video_ann" -> ((s, d) => graft.operators.VideoOps
-      .videoAnnFromProfiles(videoProfilesOf(s, d).filter(
+      .videoAnnTopK(videoProfilesOf(s, d).filter(
         org.apache.spark.sql.functions.col("docId") % 3 === 0))),
     // the composed multimodal capstone (gates -> dedup keep-first per
     // modality, one inventory row per (doc, modality)); runs on the
@@ -1552,7 +1552,7 @@ object SparkEntry {
       // ONLY run still renders the full-corpus fixtures for a 1/3
       // slice — a full-registry run is what this optimizes, and a
       // real corpus scans a payload table instead of rendering
-      MediaPipeline.curateMediaFromProfiles(
+      MediaPipeline.curateMedia(
         imageProfilesOf(s, d).toDF().where(col("docId") % lit(3) === 0),
         audioProfilesOf(s, d).toDF().where(col("docId") % lit(3) === 0),
         videoMetaOf(s, d).where(col("docId") % lit(3) === 0),

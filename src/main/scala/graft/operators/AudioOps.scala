@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Cached
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions.col
 
@@ -8,8 +7,10 @@ import org.apache.spark.sql.functions.col
   * pillar (reference scope: kinesis-pay.php treats payment media as
   * opaque attachments; a training-data pipeline needs the decode /
   * feature / gate / dedup passes per modality). Same shape as
-  * [[MultimodalOps]]: opaque binary payloads + metadata in, per-batch
-  * decoded features out, `mapPartitions` over case-class rows.
+  * [[MultimodalOps]]: opaque binary payloads + metadata in, decoded
+  * rows out ([[audioProfile]] for the gate and the perceptual hash,
+  * [[extractAudioFeatures]] / [[envelopes]] for the stats and the ANN
+  * feature), `mapPartitions` over case-class rows.
   *
   * WAV/RIFF payloads (PCM 8/16-bit, any channel count) are decoded
   * for REAL with a hand-rolled chunk parser — zero external
@@ -38,15 +39,6 @@ object AudioOps {
       nSamples: Int, durationMs: Double, rms: Double, zcr: Double,
       silenceRatio: Double, peak: Double, decoded: Boolean,
       envelope: Array[Float])
-
-  /** Perceptual hash row: `decoded = false` marks undecodable, too
-    * short (< 2 samples/frame), or digitally-silent clips — all three
-    * would hash degenerately (an all-zero energy profile ties every
-    * frame delta) and pair unrelated clips in the band join, so the
-    * dedup excludes them, exactly as [[MultimodalOps.imageHashes]]
-    * excludes undecodable rasters.
-    */
-  case class AudioHash(docId: Long, ahash: Long, decoded: Boolean)
 
   case class AudioGate(docId: Long, durationMs: Double, rms: Double,
       peak: Double, keep: Boolean, failReasons: String)
@@ -187,8 +179,7 @@ object AudioOps {
 
   /** Typed batched decode → per-clip features. Partition-local map,
     * no shuffle: the input partitioning is the decode parallelism
-    * (the [[MultimodalOps.extractFeatures]] contract — batch size
-    * must never change results, asserted in AudioOpsSpec).
+    * (batch size must never change results, asserted in AudioOpsSpec).
     */
   def extractAudioFeatures(audio: Dataset[AudioRow], batchSize: Int = 64,
       maxSamples: Long = DefaultMaxSamples): Dataset[AudioFeatures] = {
@@ -197,64 +188,29 @@ object AudioOps {
       batch.map(features(_, maxSamples))))
   }
 
-  /** Perceptual hash per clip: real decode → [[energyHash64]].
-    * Partition-local map, no shuffle.
+  /** Audio quality gate with NAMED failure reasons, projected from the
+    * profile frame — the [[MultimodalOps.imageFilter]] / gopherGate
+    * analog for clips: `not_audio` / `undecodable` / `too_short` /
+    * `silent` / `clipped`. Duration, rms and peak are EMITTED (rms/peak
+    * 6dp) so consumers re-cut the gate without re-decoding 100 TB. The
+    * thresholds are [[audioProfile]]'s arguments.
     */
-  def audioHashes(audio: Dataset[AudioRow],
-      maxSamples: Long = DefaultMaxSamples): Dataset[AudioHash] = {
-    implicit val enc = Encoders.product[AudioHash]
-    audio.mapPartitions(_.map { m =>
-      val h =
-        if (m.format == "audio")
-          decodeWav(m.payload, maxSamples).flatMap(p => energyHash64(p.mono))
-        else None
-      h match {
-        case Some(v) => AudioHash(m.docId, v, decoded = true)
-        case None => AudioHash(m.docId, 0L, decoded = false)
-      }
-    })
-  }
-
-  /** Audio quality gate with NAMED failure reasons — the
-    * [[MultimodalOps.imageFilter]] / gopherGate analog for clips:
-    * `not_audio` / `undecodable` / `too_short` / `silent` /
-    * `clipped`. Duration, rms and peak are EMITTED (rms/peak 6dp) so
-    * consumers re-cut the gate without re-decoding 100 TB.
-    * Partition-local map, no shuffle.
-    */
-  def audioFilter(audio: Dataset[AudioRow], minMs: Double = 250.0,
-      minRms: Double = 0.005, maxClipFrac: Double = 0.1,
-      maxSamples: Long = DefaultMaxSamples): Dataset[AudioGate] = {
-    implicit val enc = Encoders.product[AudioGate]
-    // one source of truth: the gate is a projection of the fused
-    // profile (the energy hash it also computes is one O(samples)
-    // pass next to the decode it shares)
-    audioProfile(audio, minMs, minRms, maxClipFrac, maxSamples)
-      .map(p => AudioGate(p.docId, p.durationMs, p.rms, p.peak, p.keep,
-        p.failReasons))
-  }
-
-  /** [[audioFilter]]'s gate as a projection of an ALREADY-computed
-    * profile frame — the decode-once door matching
-    * [[MultimodalOps.gateFromProfiles]] (a registry memoizes one
-    * profile pass; the gate, the dedup hashes and the composed
-    * pipeline all read it).
-    */
-  def gateFromProfiles(profiles: Dataset[AudioProfile]): Dataset[AudioGate] = {
+  def audioFilter(profiles: Dataset[AudioProfile]): Dataset[AudioGate] = {
     implicit val enc = Encoders.product[AudioGate]
     profiles.map(p => AudioGate(p.docId, p.durationMs, p.rms, p.peak,
       p.keep, p.failReasons))
   }
 
   /** One row per clip from ONE decode: the gate fields of
-    * [[audioFilter]] AND the perceptual energy hash of
-    * [[audioHashes]] — the audio member of the decode-once profile
+    * [[audioFilter]] AND the perceptual energy hash
+    * ([[energyHash64]]) — the audio member of the decode-once profile
     * family ([[MultimodalOps.imageProfile]]). `hashValid` carries
-    * [[energyHash64]]'s own degeneracy rule (too-short /
-    * digitally-silent clips hash to None and must be excluded from
-    * banding even when the gate thresholds are caller-loosened).
-    * Gate thresholds and emitted columns are byte-identical to
-    * audioFilter's.
+    * [[energyHash64]]'s own degeneracy rule: undecodable, non-audio,
+    * too-short (< 2 samples/frame) and digitally-silent clips all
+    * hash degenerately (an all-zero energy profile ties every frame
+    * delta) and would pair unrelated clips in the band join, so the
+    * dedup excludes every row without it — even when the gate
+    * thresholds are caller-loosened.
     */
   case class AudioProfile(docId: Long, decoded: Boolean, durationMs: Double,
       rms: Double, peak: Double, ehash: Long, hashValid: Boolean,
@@ -299,23 +255,14 @@ object AudioOps {
     })
   }
 
-  /** Top-k similar clips by decoded envelope cosine — the audio → ANN
-    * bridge, same composition as [[MultimodalOps.imageAnnTopK]]: real
-    * decode → 8-bin time-energy envelope → the embedding family's own
-    * [[Similarity.annTopK]] unchanged. Undecodable and silent rows
-    * (all-zero envelope — cosine-undefined, would rank arbitrarily)
-    * are excluded before ranking ([[envelopes]]). The 8-float frame
-    * is pinned first: annTopK reads it from BOTH the query and corpus
-    * subtrees and Catalyst does not reuse an un-exchanged
-    * MapPartitions decode — unpinned, every clip decodes twice.
-    */
-  def audioAnnTopK(audio: Dataset[AudioRow], nQueries: Long = 10,
-      k: Int = 5): DataFrame =
-    Similarity.annTopK(Cached.pin(envelopes(audio)), nQueries, k)
-
-  /** The (vec_id, embedding) envelope frame [[audioAnnTopK]] ranks:
-    * decoded, non-silent clips only. A caller that ranks repeatedly
-    * pins it once and calls [[Similarity.annTopK]] on it.
+  /** The (vec_id, embedding) envelope frame of the audio → ANN
+    * bridge: real decode → 8-bin time-energy envelope, decoded and
+    * non-silent clips only (an all-zero envelope is cosine-undefined
+    * and would rank arbitrarily). The caller pins it and ranks it with
+    * [[Similarity.annTopK]], unchanged — the same composition as
+    * [[MultimodalOps.imageAnnTopK]] (annTopK reads the frame from both
+    * the query and corpus subtrees, so an unpinned frame decodes every
+    * clip twice).
     */
   def envelopes(audio: Dataset[AudioRow]): DataFrame =
     extractAudioFeatures(audio).toDF()

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Cached
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1139,7 +1139,7 @@ object Dedup {
     * components over the pigeonhole band-join edges, group_id = the
     * smallest doc_id reachable through hamming-≤`maxHamming` links.
     *
-    * Exact-dedup-first is FREE here, the imageDedupPairs argument:
+    * Exact-dedup-first is FREE here, the perceptualPairsFrom argument:
     * hamming depends only on the simhash value, so the band join and
     * the component rounds run over ONE representative per DISTINCT
     * simhash (on a clone-heavy corpus the bucket fan-out shrinks by
@@ -1165,7 +1165,7 @@ object Dedup {
 
   /** The pigeonhole band machinery itself, over ANY (doc_id, <hash64>)
     * frame — shared by [[simhashPairs]] (text fingerprints) and
-    * [[imageDedupPairs]] (perceptual image hashes), so the two
+    * [[perceptualPairsFrom]] (perceptual media hashes), so the two
     * surfaces cannot drift: band count = next divisor of 64 above
     * `maxHamming` (completeness by pigeonhole — unconditional at
     * `maxBucketFrac = 0`, modulo saturated buckets when the caller
@@ -1239,77 +1239,12 @@ object Dedup {
       .distinct()
   }
 
-  /** Perceptual-hash IMAGE dedup (r9 — the multimodal pillar's dedup
-    * pass): real raster decode → dHash-64
-    * ([[graft.operators.MultimodalOps.dhash64]]: 9×8 luminance-grid
-    * difference hash, stable under re-encode/resize/small edits) →
-    * the SAME pigeonhole band join the text simhash family uses
-    * ([[hammingBandPairs]]) → exact hamming filter. Returns
-    * (a_id, b_id, hamming) for image pairs within `maxHamming` bits.
-    *
-    * Undecodable / video / over-budget payloads are EXCLUDED before
-    * banding (`decoded = false` from imageHashes): a stub hash would
-    * pair unrelated corrupt files with each other, the one thing a
-    * dedup pass must never do. Decode is partition-local
-    * (mapPartitions), the join shuffles O(images × bands) band keys —
-    * never all-pairs, no cartesian (plan-audited in ImageDedupSpec).
-    *
-    * Exact-dup-first, the winnow-chain pattern made trivial: hamming
-    * depends ONLY on the dhash values, so the band join runs over one
-    * representative per DISTINCT dhash (on a verbatim-duplicated
-    * corpus the bucket fan-out shrinks by the clone factor squared)
-    * and member pairs compose back by two bounded joins — within-star
-    * pairs at hamming 0, cross-star pairs at their reps' hamming.
-    * Output is bit-for-bit the per-image semantics.
-    */
-  def imageDedupPairs(media: Dataset[MultimodalOps.MediaRow],
-      maxHamming: Int = 5,
-      maxPixels: Long = MultimodalOps.DefaultMaxPixels,
-      maxBucketFrac: Double = SaturatedBucketFrac): DataFrame = {
-    // pinned: the composed plan reads the 16-byte hash rows from SIX
-    // subtrees (stars, members, band join sides, both expansion
-    // joins), and Catalyst does not reuse the un-exchanged
-    // MapPartitions decode across them
-    val hashes = Cached.pin(MultimodalOps.imageHashes(media, maxPixels)
-      .where(col("decoded"))
-      .select(col("docId").as("doc_id"), col("dhash")))
-    perceptualPairs(hashes, "dhash", maxHamming, maxBucketFrac)
-  }
-
-  /** Perceptual-hash AUDIO dedup — the clip twin of
-    * [[imageDedupPairs]], byte-for-byte the same composition with the
-    * modality swapped: real RIFF/WAV decode → 64-bit energy-delta
-    * hash ([[graft.operators.AudioOps.energyHash64]]: gain- and
-    * duration-invariant frame-energy sign profile, stable under
-    * re-encode / volume normalization / small local edits) → the
-    * shared [[hammingBandPairs]] pigeonhole band join → exact hamming
-    * filter. Returns (a_id, b_id, hamming) for clip pairs within
-    * `maxHamming` bits.
-    *
-    * Undecodable / non-audio / too-short / digitally-silent payloads
-    * are EXCLUDED before banding (`decoded = false` from audioHashes):
-    * all four hash degenerately (an all-zero or all-tie energy
-    * profile) and would pair unrelated clips, the one thing a dedup
-    * pass must never do. Decode is partition-local, the join shuffles
-    * O(clips × bands) band keys — never all-pairs, no cartesian
-    * (plan-audited in AudioOpsSpec). Exact-dup-first via the shared
-    * distinct-hash rep reduction ([[perceptualPairs]]), hash frame
-    * pinned as in the image op.
-    */
-  def audioDedupPairs(audio: Dataset[AudioOps.AudioRow],
-      maxHamming: Int = 5,
-      maxSamples: Long = AudioOps.DefaultMaxSamples,
-      maxBucketFrac: Double = SaturatedBucketFrac): DataFrame = {
-    val hashes = Cached.pin(AudioOps.audioHashes(audio, maxSamples)
-      .where(col("decoded"))
-      .select(col("docId").as("doc_id"), col("ahash")))
-    perceptualPairs(hashes, "ahash", maxHamming, maxBucketFrac)
-  }
-
   /** Near-duplicate VIDEO pairs — the temporal member of the
-    * perceptual family: real AVI/MJPEG parse → per-frame dHash
-    * ([[graft.operators.VideoOps.frameHashes]], bounded to the
-    * leading `maxHashFrames` frames) → pigeonhole band join PER
+    * perceptual family, over a (doc_id, frame_idx, fhash) frame of
+    * per-frame dHashes ([[graft.operators.VideoOps.frameHashes]] over
+    * the decode-once [[graft.operators.VideoOps.videoFrameProfiles]],
+    * bounded to the leading frames; or a stored
+    * [[perceptualIndex]]-style artifact): pigeonhole band join PER
     * ALIGNED FRAME INDEX (one matching frame is enough to surface a
     * candidate pair — the pigeonhole completeness argument applies
     * frame-wise) → exact verification over ALL aligned frames of each
@@ -1320,47 +1255,32 @@ object Dedup {
     * Re-encoded / lightly-edited copies align frame-for-frame and
     * pass both gates; a clip sharing one still with an otherwise
     * different clip surfaces as a candidate but dies on the mean and
-    * coverage gates. Clips with no hashable frames are excluded
-    * (never paired). Stated limitation: alignment is by frame INDEX,
-    * so a copy with frames dropped/inserted (or trimmed from the
-    * front) shifts out of alignment and is missed —
+    * coverage gates. Clips with no hashable frames have no rows, so
+    * they are never paired. Stated limitation: alignment is by frame
+    * INDEX, so a copy with frames dropped/inserted (or trimmed from
+    * the front) shifts out of alignment and is missed —
     * [[videoDedupPairsWarp]] closes exactly this case
     * (content-banded candidates + modal-shift re-alignment); this
     * aligned form stays the cheaper default when copies are
     * re-encodes, not re-edits. Scale shape: the band join shuffles
-    * O(clips × frames × bands) keyed rows — never all-pairs, no
-    * cartesian (plan-audited in VideoOpsSpec); verification joins are
-    * keyed on the candidate set only. Exact-dup-first reduction:
-    * clips with IDENTICAL frame-hash sequences collapse to one
-    * representative before banding (the [[perceptualPairs]] argument
-    * lifted to sequences — hamming relations depend only on the hash
-    * sequence), members compose back at avg 0 / full coverage.
-    */
-  def videoDedupPairs(media: Dataset[MultimodalOps.MediaRow],
-      maxHamming: Int = 5, minFrac: Double = 0.5,
-      maxHashFrames: Int = 64,
-      maxPixels: Long = MultimodalOps.DefaultMaxPixels): DataFrame = {
-    // pinned: the plan below reads the frame-hash frame from seven
-    // subtrees, each of which would re-parse and re-decode every frame
-    val fh = Cached.pin(VideoOps.frameHashes(media, maxHashFrames, maxPixels).toDF()
-      .select(col("docId").as("doc_id"), col("frameIdx").as("frame_idx"),
-        col("fhash")))
-    videoDedupPairsFrom(fh, maxHamming, minFrac)
-  }
-
-  /** The aligned-frame dedup over a PRECOMPUTED (doc_id, frame_idx,
-    * fhash) frame — the [[warpPairsFromFrameHashes]] twin for the
-    * aligned op: a caller holding stored or shared frame hashes (the
-    * registry's memoized decode-once frame; a [[perceptualIndex]]-
-    * style artifact) skips the decode entirely. `fh` should be pinned
-    * (`Cached.pin`) — the plan reads it from seven subtrees. CONTRACT: `frame_idx` must be unique per `doc_id`
+    * O(clips × frames × bands) keyed rows — a band equi-join, never
+    * all-pairs, no cartesian (plan-audited in VideoOpsSpec);
+    * verification joins are keyed on the candidate set only.
+    * Exact-dup-first reduction: clips with IDENTICAL frame-hash
+    * sequences collapse to one representative before banding (the
+    * [[perceptualPairsFrom]] argument lifted to sequences — hamming
+    * relations depend only on the hash sequence), members compose back
+    * at avg 0 / full coverage.
+    *
+    * `fh` should be pinned (`Cached.pin`) — the plan reads it from
+    * seven subtrees. CONTRACT: `frame_idx` must be unique per `doc_id`
     * (every in-repo producer samples distinct indices); the packed
     * merge fold matches each index at most once, where the old
     * equi-join shape cross-producted duplicate rows — a caller
     * passing duplicate (doc_id, frame_idx) gets the fold semantics
     * (the AlignedHamming contract), not the cross-product.
     */
-  def videoDedupPairsFrom(fh: DataFrame, maxHamming: Int = 5,
+  def videoDedupPairs(fh: DataFrame, maxHamming: Int = 5,
       minFrac: Double = 0.5): DataFrame = {
     graft.GraftFunctions.register(fh.sparkSession)
     val (members, repFh, counts) = clipStarFrames(fh)
@@ -1577,32 +1497,19 @@ object Dedup {
     * distinct frame PAIR (a multi-band match is one vote), and a
     * candidate needs `minVotes` agreeing votes (default 2) before
     * verification runs — see the inline rationale. Same
-    * exact-dup-first star reduction, decode-once pin, and member
+    * exact-dup-first star reduction and member
     * composition as the aligned op ([[clipStarFrames]] — shared
     * code, the views cannot drift). A single-frame overlap still
     * surfaces a candidate but dies on the coverage gate, exactly as
     * in the aligned op.
+    *
+    * Input is the aligned op's (doc_id, frame_idx, fhash) frame, which
+    * should be pinned: the randomized model spec drives it with
+    * synthetic hash corpora (no codec in the loop).
     */
-  def videoDedupPairsWarp(media: Dataset[MultimodalOps.MediaRow],
-      maxHamming: Int = 5, minFrac: Double = 0.5,
-      maxHashFrames: Int = 64, bucketCap: Int = 10000, minVotes: Int = 2,
-      maxPixels: Long = MultimodalOps.DefaultMaxPixels): DataFrame = {
-    val fh = Cached.pin(VideoOps.frameHashes(media, maxHashFrames, maxPixels).toDF()
-      .select(col("docId").as("doc_id"), col("frameIdx").as("frame_idx"),
-        col("fhash")))
-    warpPairsFromFrameHashes(fh, maxHamming, minFrac, bucketCap, minVotes)
-  }
-
-  /** The warp machinery over a PRECOMPUTED (doc_id, frame_idx,
-    * fhash) frame — split out so the randomized model spec can drive
-    * it with synthetic hash corpora (no codec in the loop) and so a
-    * caller with stored frame hashes (a [[perceptualIndex]]-style
-    * artifact) skips the decode. `fh` should be pinned (the
-    * videoDedupPairsWarp contract).
-    */
-  private[graft] def warpPairsFromFrameHashes(fh: DataFrame,
-      maxHamming: Int, minFrac: Double, bucketCap: Int,
-      minVotes: Int): DataFrame = {
+  def videoDedupPairsWarp(fh: DataFrame, maxHamming: Int = 5,
+      minFrac: Double = 0.5, bucketCap: Int = 10000,
+      minVotes: Int = 2): DataFrame = {
     // the warp plan reads the pinned rep frame rows from FIVE subtrees
     // (band totals, the hot-bucket aggregate, the banded anti-join
     // input, and both verification sides)
@@ -1676,17 +1583,34 @@ object Dedup {
     cross.unionByName(within)
   }
 
-  /** Perceptual-hash pairs from a PRECOMPUTED hash frame (first two
-    * columns = id, 64-bit hash) — the public door for callers that
-    * already decoded, e.g. [[graft.operators.MediaPipeline]]'s fused
-    * profile pass or a stored [[perceptualIndex]]: the same
-    * distinct-hash rep reduction + pigeonhole band join + member
-    * composition as [[imageDedupPairs]]/[[audioDedupPairs]], without
-    * re-decoding anything. Pins the two-column frame (the
-    * composed plan reads it from six subtrees); callers must
-    * pre-exclude degenerate hashes (the modality ops' `decoded` /
-    * `hashValid` flags) — a stub hash would pair unrelated corrupt
-    * payloads.
+  /** Perceptual-hash near-duplicate pairs over a hash frame (first
+    * two columns = id, 64-bit hash) — the image and audio dedup door:
+    * the dHash-64 of [[graft.operators.MultimodalOps.imageHashes]]
+    * (9×8 luminance-grid difference hash, stable under
+    * re-encode/resize/small edits) or the energy-delta hash of
+    * [[graft.operators.AudioOps.audioProfile]] (gain- and
+    * duration-invariant frame-energy sign profile), both projected
+    * from the decode-once profile frames, or a stored
+    * [[perceptualIndex]]. The SAME pigeonhole band join the text
+    * simhash family uses ([[hammingBandPairs]]) → exact hamming
+    * filter; returns (a_id, b_id, hamming) for pairs within
+    * `maxHamming` bits.
+    *
+    * Callers EXCLUDE undecodable and degenerate hashes before this
+    * door (the profiles' `decoded` / `hashValid` flags): a stub hash
+    * would pair unrelated corrupt files with each other, the one
+    * thing a dedup pass must never do. The join shuffles O(rows ×
+    * bands) band keys — a band equi-join, never all-pairs, no
+    * cartesian (plan-audited in ImageDedupSpec and AudioOpsSpec).
+    *
+    * Exact-dup-first, the winnow-chain pattern made trivial: hamming
+    * depends ONLY on the hash values, so the band join runs over one
+    * representative per DISTINCT hash (on a verbatim-duplicated
+    * corpus the bucket fan-out shrinks by the clone factor squared)
+    * and member pairs compose back by two bounded joins — within-star
+    * pairs at hamming 0, cross-star pairs at their reps' hamming.
+    * Output is bit-for-bit the per-row semantics. Pins the two-column
+    * frame (the composed plan reads it from six subtrees).
     */
   def perceptualPairsFrom(hashes: DataFrame, maxHamming: Int = 5,
       maxBucketFrac: Double = SaturatedBucketFrac): DataFrame = {
@@ -1726,19 +1650,6 @@ object Dedup {
     members.join(labels.withColumnRenamed("id", "rep_id"), "rep_id")
       .select(col("doc_id"), col("label").as("group_id"))
   }
-
-  /** [[perceptualGroups]] over the real image decode — the group form
-    * of [[imageDedupPairs]] (same hashes, same exclusion rule).
-    */
-  def imageDedupGroups(media: Dataset[MultimodalOps.MediaRow],
-      maxHamming: Int = 5, maxRounds: Int = 25,
-      maxPixels: Long = MultimodalOps.DefaultMaxPixels,
-      maxBucketFrac: Double = SaturatedBucketFrac): DataFrame =
-    perceptualGroups(
-      MultimodalOps.imageHashes(media, maxPixels)
-        .where(col("decoded"))
-        .select(col("docId"), col("dhash")),
-      maxHamming, maxRounds, maxBucketFrac)
 
   /** Persist a snapshot's perceptual-hash index — the MEDIA twin of
     * [[writeBandIndex]] (r9 session 5): 16-byte (doc_id, h64) rows,
@@ -1919,7 +1830,7 @@ object Dedup {
     * bit-for-bit with NO divergence cases (round-trip spec-asserted
     * through the parquet artifact). Caller contract: doc_ids unique
     * across snapshots; hash frames pre-filtered to decoded rows (the
-    * [[imageDedupPairs]] exclusion rule — a degenerate hash in the
+    * [[perceptualPairsFrom]] exclusion rule — a degenerate hash in the
     * index would pair unrelated corrupt files forever after).
     *
     * Plan: stored-hash scan union the new frame (pinned:
@@ -1946,7 +1857,8 @@ object Dedup {
   }
 
   /** Shared distinct-hash rep reduction + band join + member
-    * composition behind [[imageDedupPairs]] and [[audioDedupPairs]]:
+    * composition behind [[perceptualPairsFrom]] and
+    * [[perceptualDedupAgainst]]:
     * hamming depends ONLY on the hash value, so the band join runs
     * over one representative per DISTINCT hash (on a
     * verbatim-duplicated corpus the bucket fan-out shrinks by the

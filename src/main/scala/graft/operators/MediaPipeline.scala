@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Cached
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The composed MULTIMODAL curation capstone — the media analog of
@@ -69,50 +68,24 @@ object MediaPipeline {
           .otherwise(lit("")).as("reason"))
   }
 
-  /** Full three-modality run. Image and audio decode exactly ONCE:
-    * the fused profile pass ([[MultimodalOps.imageProfile]] /
-    * [[AudioOps.audioProfile]]) emits gate fields AND perceptual hash
-    * from the same decode, the profile frame is pinned (small rows,
-    * decoupled from payloads), and the dedup consumes gate SURVIVORS'
-    * hashes via [[Dedup.perceptualPairsFrom]] — no payload is
-    * re-touched after the profile (the first cut ran gate and dedup
-    * as separate operators and decoded every surviving raster/clip
-    * twice; measured 9.3 s → see SURVEY §5b). Degenerate hashes are
-    * excluded twice over (gate + the profile's own validity flag).
-    * Video still parses its container in both the meta gate and the
-    * frame-hash pass — the expensive per-frame JPEG decode runs once,
-    * in the dedup only.
+  /** Full three-modality run over the decode-once frames — the
+    * capstone is pure frame algebra: gates are projections, pair
+    * frames band-join 16-byte hash rows, no payload is touched.
+    * Inputs: `imgProfile` ([[MultimodalOps.imageProfile]], whose
+    * thresholds are the image gate's), `audProfile`
+    * ([[AudioOps.audioProfile]]), `vidMeta` ([[VideoOps.videoMeta]],
+    * the container-parse gate) and `vidFrameHashes`, the
+    * (doc_id, frame_idx, fhash) projection of
+    * [[VideoOps.videoFrameProfiles]] through [[VideoOps.frameHashes]].
+    * The caller pins the profile and hash frames (the dedup reads each
+    * from several subtrees). The dedup consumes gate SURVIVORS' hashes
+    * via [[Dedup.perceptualPairsFrom]] / [[Dedup.videoDedupPairs]];
+    * degenerate hashes are excluded twice over (gate + the profile's
+    * own validity flag). The frame hashes may cover all clips — an
+    * undecodable container yields no hash rows, and restricting to
+    * gate survivors happens in the semi-join below either way.
     */
-  def curateMedia(images: Dataset[MultimodalOps.MediaRow],
-      audio: Dataset[AudioOps.AudioRow],
-      videos: Dataset[MultimodalOps.MediaRow],
-      imgMinSide: Int = 16, imgMinEntropy: Double = 1.2,
-      maxHamming: Int = 5, canonical: Boolean = false): DataFrame = {
-    val imgProfile = Cached.pin(MultimodalOps.imageProfile(images,
-      minSide = imgMinSide, minEntropy = imgMinEntropy).toDF())
-    val audProfile = Cached.pin(AudioOps.audioProfile(audio).toDF())
-    // videoDedupPairsFrom reads the hash frame from seven subtrees;
-    // unpinned, every read re-parses + re-decodes every frame
-    val fh = Cached.pin(VideoOps.frameHashes(videos).toDF()
-      .select(col("docId").as("doc_id"), col("frameIdx").as("frame_idx"),
-        col("fhash")))
-    curateMediaFromProfiles(imgProfile, audProfile,
-      VideoOps.videoMeta(videos).toDF(), fh, maxHamming, canonical)
-  }
-
-  /** [[curateMedia]] over ALREADY-computed profile/hash frames — the
-    * decode-ZERO door for a registry or pipeline that holds the
-    * shared fused frames anyway ([[MultimodalOps.imageProfile]] /
-    * [[AudioOps.audioProfile]] / [[VideoOps.videoMeta]] /
-    * [[VideoOps.videoFrameProfiles]]' hash projection): the capstone
-    * becomes pure frame algebra — gates are projections, pair frames
-    * band-join 16-byte hash rows, no payload is touched. Identical
-    * output to [[curateMedia]] (which now delegates here; the frame
-    * hashes may cover all clips — an undecodable container yields no
-    * hash rows, so restricting to gate survivors happens in the
-    * semi-join below either way).
-    */
-  def curateMediaFromProfiles(imgProfile: DataFrame, audProfile: DataFrame,
+  def curateMedia(imgProfile: DataFrame, audProfile: DataFrame,
       vidMeta: DataFrame, vidFrameHashes: DataFrame,
       maxHamming: Int = 5, canonical: Boolean = false): DataFrame = {
     val imgGate = imgProfile
@@ -138,7 +111,7 @@ object MediaPipeline {
           .as("fail_reasons"))
     val vidIds = vidMeta.select(col("docId").as("doc_id"))
     val vidKeepSet = vidGate.where(col("keep")).select("doc_id")
-    val vidPairs = Dedup.videoDedupPairsFrom(
+    val vidPairs = Dedup.videoDedupPairs(
       vidFrameHashes.join(vidKeepSet, "doc_id"), maxHamming)
       .select("a_id", "b_id")
 

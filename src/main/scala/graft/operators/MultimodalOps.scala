@@ -1,51 +1,35 @@
 package graft.operators
 
-import graft.Cached
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.imageio.ImageIO
 
 import org.apache.spark.sql.{Dataset, Encoders}
 
-/** Typed multimodal pipeline plumbing: opaque binary payloads +
-  * metadata in, per-batch decoded features out, via `mapPartitions`
-  * over case-class rows — the Scala shape of a batched decode stage
-  * (a native decoder wants contiguous batches, not row-at-a-time
-  * calls).
+/** Typed image pipeline plumbing: opaque binary payloads + metadata
+  * in, one decoded profile row per image out ([[imageProfile]]), via
+  * `mapPartitions` over case-class rows. The gate, hash and ANN doors
+  * read that profile; none of them touches a payload.
   *
   * Image payloads (PNG/JPEG/BMP/GIF — whatever the JDK's
   * `javax.imageio` service registry provides, zero external
   * dependencies) are decoded for REAL: dimensions from the actual
-  * bitstream, an 8-bin luminance histogram as the feature vector, and
-  * a real raster rescale for [[resize]]. Video payloads remain a
-  * deterministic STUB (the JDK ships no video codec); undecodable
-  * bytes degrade to the same stub rather than failing the batch
-  * (poison-pill tolerance — one corrupt file must not kill a 100 TB
-  * decode pass).
+  * bitstream, an 8-bin luminance histogram as the feature vector, a
+  * dHash-64 as the perceptual hash, and a real raster rescale for
+  * [[resize]]. Undecodable bytes degrade to a `decoded = false` row
+  * rather than failing the batch (poison-pill tolerance — one corrupt
+  * file must not kill a 100 TB decode pass).
   */
 object MultimodalOps {
 
   case class MediaRow(docId: Long, payload: Array[Byte], format: String)
-  case class MediaFeatures(docId: Long, width: Int, height: Int,
-      nFrames: Int, feature: Array[Float])
 
-  /** Stub frame count shared by decodeBatch and frameSample so a real
-    * codec binding replaces ONE formula, not two drifting copies.
+  /** STUB feature vector (video / undecodable payloads): deterministic
+    * in the payload bytes, so a profile row always carries 8 floats.
     */
-  private[operators] def frameCount(payload: Array[Byte], format: String): Int =
-    if (format == "video") 1 + (payload.length % 16) else 1
-
-  /** STUB features (video / undecodable payloads): deterministic in
-    * the payload bytes.
-    */
-  private[operators] def stubFeatures(m: MediaRow): MediaFeatures = {
-    val n = m.payload.length
-    val sum = m.payload.foldLeft(0L)((a, b) => a + (b & 0xff))
-    MediaFeatures(m.docId,
-      width = 320 + (n * 7) % 1600,
-      height = 240 + (n * 13) % 840,
-      nFrames = frameCount(m.payload, m.format),
-      feature = Array.tabulate(8)(i => ((sum + i * 31) % 997).toFloat / 997f))
+  private[graft] def stubFeature(payload: Array[Byte]): Array[Float] = {
+    val sum = payload.foldLeft(0L)((a, b) => a + (b & 0xff))
+    Array.tabulate(8)(i => ((sum + i * 31) % 997).toFloat / 997f)
   }
 
   /** Pixel budget for a full decode: 32 Mpixel ≈ 128 MB of ARGB
@@ -84,25 +68,11 @@ object MultimodalOps {
       } finally iis.close()
     } catch { case _: Exception => None }
 
-  /** Real image decode via the JDK registry: None when the bytes are
-    * not a readable image or declare over-budget dimensions (caller
-    * falls back to the stub). Features = 8-bin luminance histogram
-    * over a bounded probe grid (≤64×64 samples), so cost is constant
-    * in the image size.
+  /** 8-bin luminance histogram of an already-decoded raster, over a
+    * bounded probe grid (≤64×64 samples), so cost is constant in the
+    * image size.
     */
-  private def decodeImage(m: MediaRow, maxPixels: Long): Option[MediaFeatures] =
-    decodeWithHistogram(m.payload, maxPixels).map { case (w, h, hist) =>
-      MediaFeatures(m.docId, w, h, 1, hist)
-    }
-
-  /** Payload-level decode + histogram — shared by [[decodeImage]] and
-    * [[graft.operators.VideoOps.videoKeyframes]]' per-frame deltas.
-    */
-  /** 8-bin luminance histogram of an already-decoded raster — split
-    * out of [[decodeWithHistogram]] so [[imageProfile]] can derive
-    * histogram AND dHash from ONE decode.
-    */
-  private[operators] def histogramOf(
+  private[graft] def histogramOf(
       img: java.awt.image.BufferedImage): Array[Float] = {
     val w = img.getWidth; val h = img.getHeight
     val hist = new Array[Float](8)
@@ -123,40 +93,6 @@ object MultimodalOps {
     }
     if (n > 0) { var i = 0; while (i < 8) { hist(i) /= n; i += 1 } }
     hist
-  }
-
-  private[operators] def decodeWithHistogram(payload: Array[Byte],
-      maxPixels: Long = DefaultMaxPixels): Option[(Int, Int, Array[Float])] =
-    try {
-      val img = readImageBounded(payload, maxPixels).orNull
-      if (img == null) None
-      else Some((img.getWidth, img.getHeight, histogramOf(img)))
-    } catch { case _: Exception => None }
-
-  /** The 8-bin luminance histogram alone (pixel-budget-guarded). */
-  private[operators] def decodeForHistogram(payload: Array[Byte],
-      maxPixels: Long = DefaultMaxPixels): Option[Array[Float]] =
-    decodeWithHistogram(payload, maxPixels).map(_._3)
-
-  /** Decode one batch: real image decode (pixel-budget-guarded), stub
-    * for video/undecodable/over-budget.
-    */
-  private[graft] def decodeBatch(batch: Seq[MediaRow],
-      maxPixels: Long = DefaultMaxPixels): Seq[MediaFeatures] =
-    batch.map { m =>
-      if (m.format == "video") stubFeatures(m)
-      else decodeImage(m, maxPixels).getOrElse(stubFeatures(m))
-    }
-
-  /** Batched feature extraction: payloads stream through the decoder
-    * `batchSize` rows at a time, partition-local (no shuffle, no
-    * driver involvement — the partitioning of the input is the
-    * parallelism of the decode).
-    */
-  def extractFeatures(media: Dataset[MediaRow], batchSize: Int = 64,
-      maxPixels: Long = DefaultMaxPixels): Dataset[MediaFeatures] = {
-    implicit val enc = Encoders.product[MediaFeatures]
-    media.mapPartitions(_.grouped(batchSize).flatMap(decodeBatch(_, maxPixels)))
   }
 
   case class ImageHash(docId: Long, dhash: Long, decoded: Boolean)
@@ -217,27 +153,6 @@ object MultimodalOps {
   private[graft] def decodeForHash(payload: Array[Byte],
       maxPixels: Long = DefaultMaxPixels): Option[Long] =
     readImageBounded(payload, maxPixels).map(dhash64)
-
-  /** Perceptual hash per media row: REAL decode (pixel-budget-guarded
-    * like every decode here) → [[dhash64]]. Undecodable / video /
-    * over-budget payloads return `decoded = false` with dhash 0 —
-    * consumers (the dedup band join) must exclude them rather than
-    * pair unrelated garbage on a stub hash. Partition-local map, no
-    * shuffle: the input partitioning is the decode parallelism.
-    */
-  def imageHashes(media: Dataset[MediaRow],
-      maxPixels: Long = DefaultMaxPixels): Dataset[ImageHash] = {
-    implicit val enc = Encoders.product[ImageHash]
-    media.mapPartitions(_.map { m =>
-      val img =
-        if (m.format == "video") None
-        else readImageBounded(m.payload, maxPixels)
-      img match {
-        case Some(i) => ImageHash(m.docId, dhash64(i), decoded = true)
-        case None => ImageHash(m.docId, 0L, decoded = false)
-      }
-    })
-  }
 
   /** Deterministic token-block image per document — the registry /
     * fixture bridge: the driver's testdata carries no binary column,
@@ -314,67 +229,18 @@ object MultimodalOps {
     img
   }
 
-  /** Top-k similar images by decoded luminance-feature cosine (r9) —
-    * the multimodal → ANN bridge: REAL decode → 8-bin luminance
-    * histogram ([[extractFeatures]]) → the embedding family's own
-    * [[graft.operators.Similarity.annTopK]] machinery, unchanged
-    * (broadcast queries, codegen cosine kernel, rank through
-    * WindowGroupLimit). [[graft.operators.Dedup.imageDedupPairs]] is
-    * the NEAR-DUPLICATE view (hamming on structure); this is the
-    * SIMILARITY view (cosine on tone distribution) — a histogram is
-    * resolution-invariant, so re-rendered/rescaled variants rank
-    * together even when their dHashes drift. The scale paths
-    * (LSH/IVF/PQ) accept the same (vec_id, embedding) frame.
-    */
-  def imageAnnTopK(media: Dataset[MediaRow], nQueries: Long = 10,
-      k: Int = 5): org.apache.spark.sql.DataFrame = {
-    // pinned: annTopK reads the 8-float feature frame from BOTH the
-    // query and the corpus subtree, and Catalyst does not reuse an
-    // un-exchanged MapPartitions decode — unpinned, every raster
-    // decodes twice
-    val feats = Cached.pin(extractFeatures(media).toDF()
-      .select(org.apache.spark.sql.functions.col("docId").as("vec_id"),
-        org.apache.spark.sql.functions.col("feature").as("embedding")))
-    Similarity.annTopK(feats, nQueries, k)
-  }
-
   case class ImageGate(docId: Long, width: Int, height: Int,
       entropy: Double, keep: Boolean, failReasons: String)
 
-  /** Image quality gate with NAMED failure reasons — the multimodal
-    * pillar's [[TextOps.gopherGate]]: a 100 TB image-text corpus pass
-    * drops thumbnails/trackers (`too_small`), banner strips
-    * (`extreme_aspect`), flat placeholders (`low_entropy` — Shannon
-    * entropy in nats over the decoded 8-bin luminance histogram; a
-    * solid color scores 0) and bytes no decoder accepts
-    * (`undecodable`; video payloads gate as `not_image` — this pass
-    * judges stills only). Real decode, same pixel-budget guard as
-    * every decode here; partition-local map, no shuffle — the named
-    * reasons make the drop AUDITABLE per source, which is the point:
-    * a one-bit gate can't tell a crawl that ships banners from one
-    * that ships placeholders.
-    */
-  def imageFilter(media: Dataset[MediaRow], minSide: Int = 64,
-      maxAspect: Double = 4.0, minEntropy: Double = 0.5,
-      maxPixels: Long = DefaultMaxPixels): Dataset[ImageGate] = {
-    implicit val enc = Encoders.product[ImageGate]
-    // one source of truth: the gate is a projection of the fused
-    // profile (the dHash it also computes costs ≤72 grid cells × ≤64
-    // probes next to the decode it shares)
-    imageProfile(media, minSide, maxAspect, minEntropy, maxPixels)
-      .map(p => ImageGate(p.docId, p.width, p.height, p.entropy, p.keep,
-        p.failReasons))
-  }
-
   /** One row per image from ONE decode: the gate fields of
-    * [[imageFilter]] AND the perceptual dHash of [[imageHashes]] —
-    * the "decode once, derive everything, never re-touch payloads"
-    * shape a 100 TB media pass needs (running gate and hash as
-    * separate operators decodes every raster twice; measured on
-    * [[MediaPipeline.curateMedia]]). `decoded` mirrors imageHashes'
-    * exclusion flag; gate thresholds and emitted columns are
-    * byte-identical to imageFilter's (which is now a projection of
-    * this).
+    * [[imageFilter]], the perceptual dHash of [[imageHashes]] and the
+    * histogram feature of [[imageAnnTopK]] — the "decode once, derive
+    * everything, never re-touch payloads" shape a 100 TB media pass
+    * needs: every consumer reads these rows, so each raster decodes
+    * once. Undecodable / video / over-budget payloads come
+    * out `decoded = false` with dhash 0 and the deterministic
+    * [[stubFeature]]; their gate reason is `undecodable` (`not_image`
+    * for video — this pass judges stills only).
     */
   case class ImageProfile(docId: Long, decoded: Boolean, width: Int,
       height: Int, entropy: Double, dhash: Long, keep: Boolean,
@@ -387,14 +253,14 @@ object MultimodalOps {
     media.mapPartitions(_.map { m =>
       if (m.format == "video")
         ImageProfile(m.docId, decoded = false, 0, 0, 0.0, 0L,
-          keep = false, "not_image", stubFeatures(m).feature)
+          keep = false, "not_image", stubFeature(m.payload))
       else {
         val img =
           try readImageBounded(m.payload, maxPixels).orNull
           catch { case _: Exception => null }
         if (img == null)
           ImageProfile(m.docId, decoded = false, 0, 0, 0.0, 0L,
-            keep = false, "undecodable", stubFeatures(m).feature)
+            keep = false, "undecodable", stubFeature(m.payload))
         else {
           val hist = histogramOf(img)
           var ent = 0.0
@@ -416,36 +282,52 @@ object MultimodalOps {
     })
   }
 
-  /** [[imageFilter]]'s gate as a projection of an ALREADY-computed
-    * profile frame — the decode-once door for a registry that shares
-    * ONE profile pass across the gate / ANN / hash consumers (three
-    * separate full-corpus decodes before; the 10× sweep measured the
-    * per-op decode at ~8 s each).
+  /** Image quality gate with NAMED failure reasons, projected from the
+    * profile frame — the multimodal pillar's [[TextOps.gopherGate]]: a
+    * 100 TB image-text corpus pass drops thumbnails/trackers
+    * (`too_small`), banner strips (`extreme_aspect`), flat
+    * placeholders (`low_entropy` — Shannon entropy in nats over the
+    * decoded 8-bin luminance histogram; a solid color scores 0) and
+    * bytes no decoder accepts (`undecodable`; video payloads gate as
+    * `not_image`). The thresholds are [[imageProfile]]'s arguments.
+    * The named reasons make the drop AUDITABLE per source: a one-bit
+    * gate can't tell a crawl that ships banners from one that ships
+    * placeholders.
     */
-  def gateFromProfiles(profiles: Dataset[ImageProfile]): Dataset[ImageGate] = {
+  def imageFilter(profiles: Dataset[ImageProfile]): Dataset[ImageGate] = {
     implicit val enc = Encoders.product[ImageGate]
     profiles.map(p =>
       ImageGate(p.docId, p.width, p.height, p.entropy, p.keep, p.failReasons))
   }
 
-  /** [[imageHashes]] as a projection of the profile frame — identical
-    * rows (decoded ⇒ its dHash, else (0, false)), zero decode.
+  /** Perceptual hash per image, projected from the profile frame:
+    * decoded ⇒ its dHash-64 ([[dhash64]]), else (0, `decoded =
+    * false`). Consumers (the dedup band join) must exclude the
+    * undecodable rows rather than pair unrelated garbage on a stub
+    * hash.
     */
-  def imageHashesFromProfiles(
-      profiles: Dataset[ImageProfile]): Dataset[ImageHash] = {
+  def imageHashes(profiles: Dataset[ImageProfile]): Dataset[ImageHash] = {
     implicit val enc = Encoders.product[ImageHash]
     profiles.map(p =>
       ImageHash(p.docId, if (p.decoded) p.dhash else 0L, p.decoded))
   }
 
-  /** [[imageAnnTopK]] over the profile frame's features — identical
-    * ranking (the profile carries [[extractFeatures]]' histogram for
-    * decoded rasters and its deterministic stub otherwise), zero
-    * decode. The caller pins `profiles` (a registry memo pins one
-    * shared instance; annTopK reads the feature frame from both the
-    * query and corpus subtrees).
+  /** Top-k similar images by luminance-feature cosine — the
+    * multimodal → ANN bridge: the profile's 8-bin luminance histogram
+    * (the stub feature for undecodable payloads) → the embedding
+    * family's own [[graft.operators.Similarity.annTopK]] machinery,
+    * unchanged (broadcast queries, codegen cosine kernel, rank through
+    * WindowGroupLimit). The dHash pair join
+    * ([[graft.operators.Dedup.perceptualPairsFrom]] over
+    * [[imageHashes]]) is the NEAR-DUPLICATE view (hamming on
+    * structure); this is the SIMILARITY view (cosine on tone
+    * distribution) — a histogram is resolution-invariant, so
+    * re-rendered/rescaled variants rank together even when their
+    * dHashes drift. The scale paths (LSH/IVF/PQ) accept the same
+    * (vec_id, embedding) frame. The caller pins `profiles` (annTopK
+    * reads the feature frame from both the query and corpus subtrees).
     */
-  def imageAnnFromProfiles(profiles: Dataset[ImageProfile],
+  def imageAnnTopK(profiles: Dataset[ImageProfile],
       nQueries: Long = 10, k: Int = 5): org.apache.spark.sql.DataFrame =
     Similarity.annTopK(
       profiles.toDF().select(
@@ -491,20 +373,4 @@ object MultimodalOps {
         Some(ResizedMedia(m.docId, w, h, bos.toByteArray))
       }
     } catch { case _: Exception => None }
-
-  case class Frame(docId: Long, frameIdx: Int, payload: Array[Byte])
-
-  /** STUB frame sampling for video payloads: emit every `everyN`-th
-    * frame index of the (stub-decoded) frame count. Partition-local
-    * flatMap — output cardinality scales with frames, input stays
-    * opaque bytes until here.
-    */
-  def frameSample(media: Dataset[MediaRow], everyN: Int = 4): Dataset[Frame] = {
-    implicit val enc = Encoders.product[Frame]
-    media.mapPartitions(_.flatMap { m =>
-      if (m.payload.isEmpty) Iterator.empty // nothing to decode
-      else (0 until frameCount(m.payload, m.format) by everyN).iterator.map(i =>
-        Frame(m.docId, i, Array(m.payload(i % m.payload.length), i.toByte)))
-    })
-  }
 }

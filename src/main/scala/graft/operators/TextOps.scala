@@ -2752,7 +2752,7 @@ object TextOps {
     * byte-length formulas because these payloads are text, not media;
     * REAL bitstream decode (JDK `javax.imageio`, dimensions +
     * luminance-histogram features + raster resize) lives in
-    * [[MultimodalOps.extractFeatures]]/[[MultimodalOps.resize]].
+    * [[MultimodalOps.imageProfile]]/[[MultimodalOps.resize]].
     */
   def multimodalMeta(documents: DataFrame): DataFrame = {
     val payload = encode(col("text"), "UTF-8")

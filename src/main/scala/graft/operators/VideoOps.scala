@@ -18,8 +18,9 @@ import graft.operators.MultimodalOps.MediaRow
   * container-parse + per-frame raster decode path with zero external
   * dependencies. Formats outside it (h264 in mp4, etc.) degrade to
   * `decoded = false` exactly like undecodable images/clips do
-  * (poison-pill tolerance); the [[MultimodalOps.frameSample]] stub
-  * remains for fully-opaque payloads.
+  * (poison-pill tolerance). The per-frame decode runs in one place,
+  * [[videoFrameProfiles]]; the hash, keyframe and ANN doors read its
+  * rows.
   *
   * Same bomb-guard discipline as the WAV parser: every declared chunk
   * size is clamped to the bytes present, the recursive LIST walk is
@@ -198,7 +199,8 @@ object VideoOps {
     * shuffle. For mp4, nFrames is the video track's `stsz` sample
     * count and fps derives from it against the mvhd duration; frame
     * DECODE stays AVI/MJPEG-only (stated — no JDK h264/h265 codec),
-    * so [[frameSample]]/[[frameHashes]] still yield zero rows for mp4.
+    * so [[frameSample]]/[[videoFrameProfiles]] still yield zero rows
+    * for mp4.
     */
   def videoMeta(media: Dataset[MediaRow],
       maxFrames: Int = DefaultMaxFrames): Dataset[VideoMeta] = {
@@ -249,63 +251,21 @@ object VideoOps {
     })
   }
 
-  /** Top-k similar clips by mean sampled-frame luminance histogram —
-    * the video → ANN bridge completing the three-modality symmetry
-    * ([[MultimodalOps.imageAnnTopK]] / [[AudioOps.audioAnnTopK]]):
-    * every `everyN`-th frame decodes through the image family's OWN
-    * feature extractor, the per-frame 8-bin histograms average into
-    * one clip vector (resolution- and trim-robust: dropping leading
-    * frames moves a mean far less than it shifts every index — the
-    * similarity-view complement to [[Dedup.videoDedupPairsWarp]]'s
-    * exact re-alignment), and the embedding family's
-    * [[Similarity.annTopK]] ranks it unchanged. All-zero clip vectors
-    * (no sampled frame decoded to content) are excluded — cosine
-    * against a zero vector ranks arbitrarily. A frame that fails
-    * decode contributes the deterministic stub histogram (bounded
-    * per-frame influence on the mean; the dedup ops DROP such frames
-    * because a hash must never fake, a mean may degrade — stated
-    * difference). The 8-float clip frame is pinned before ranking
-    * (annTopK reads it from both the query and corpus subtrees). The
-    * mean assembles through an 8-element `transform` — interpreted,
-    * but over the CLIP-sized aggregate frame, never per frame (the §5b
-    * lambda rule).
-    */
-  def videoAnnTopK(media: Dataset[MultimodalOps.MediaRow],
-      nQueries: Long = 10, k: Int = 5, everyN: Int = 4,
-      maxFrames: Int = DefaultMaxFrames,
-      maxPixels: Long = MultimodalOps.DefaultMaxPixels): DataFrame = {
-    val spark = media.sparkSession
-    implicit val enc = Encoders.product[MultimodalOps.MediaRow]
-    val frameImgs = frameSample(media, everyN, maxFrames)
-      .map(f => MultimodalOps.MediaRow(f.docId, f.payload, "image"))
-    val clipVecs = Cached.pin(MultimodalOps.extractFeatures(frameImgs, maxPixels = maxPixels)
-      .toDF()
-      .select(col("docId"), posexplode(col("feature")).as(Seq("bin", "v")))
-      .groupBy("docId", "bin").agg(avg(col("v")).as("mv"))
-      .groupBy("docId")
-      .agg(sort_array(collect_list(struct(col("bin"), col("mv")))).as("z"))
-      .select(col("docId").as("vec_id"),
-        expr("transform(z, x -> cast(x.mv as float))").as("embedding"))
-      .where(expr(
-        "aggregate(embedding, cast(0.0 as double), (a, x) -> a + x) > 0")))
-    Similarity.annTopK(clipVecs, nQueries, k)
-  }
-
   case class FrameHash(docId: Long, frameIdx: Int, fhash: Long)
 
   /** One row per container frame from ONE decode — the video twin of
-    * [[MultimodalOps.imageProfile]]: the per-frame dHash
-    * ([[frameHashes]]' output), the real 8-bin luminance histogram
-    * ([[videoKeyframes]]' deltas / [[videoAnnTopK]]'s features) and
-    * the decoded flag, so a registry runs the frame decode ONCE and
-    * derives all three consumers ([[frameHashesFromProfiles]] /
-    * [[keyframesFromProfiles]] / [[videoAnnFromProfiles]] — before,
-    * each op paid its own full per-frame JPEG decode; the 10× sweep
-    * measured q_video_keyframes at 21.5 s and q_video_ann at 2.9 s
-    * beside the hash family's own pass). Undecodable frames carry
+    * [[MultimodalOps.imageProfile]]: real AVI parse → per-frame JPEG
+    * decode (pixel-budget-guarded) → the image family's own dHash-64
+    * and 8-bin luminance histogram, plus the decoded flag, so the
+    * frame decode runs ONCE and all three consumers read it
+    * ([[frameHashes]] / [[videoKeyframes]] / [[videoAnnTopK]]; a
+    * per-frame JPEG decode per consumer measured q_video_keyframes at
+    * 21.5 s and q_video_ann at 2.9 s at the 10× sweep, beside the hash
+    * family's own pass). Undecodable frames carry
     * `decoded = false` with the deterministic stub histogram (what
     * [[videoAnnTopK]]'s mean uses; hash and keyframe consumers skip
-    * them — their documented drop semantics).
+    * them — their documented drop semantics). Undecodable containers
+    * contribute no rows. Partition-local flatMap, no shuffle.
     */
   case class VideoFrameProfile(docId: Long, frameIdx: Int,
       decoded: Boolean, fhash: Long, hist: Array[Float])
@@ -325,8 +285,7 @@ object VideoOps {
             catch { case _: Exception => null }
           if (img == null)
             VideoFrameProfile(m.docId, i, decoded = false, 0L,
-              MultimodalOps.stubFeatures(
-                MultimodalOps.MediaRow(m.docId, f, "image")).feature)
+              MultimodalOps.stubFeature(f))
           else
             VideoFrameProfile(m.docId, i, decoded = true,
               MultimodalOps.dhash64(img), MultimodalOps.histogramOf(img))
@@ -335,23 +294,31 @@ object VideoOps {
     })
   }
 
-  /** [[frameHashes]] as a projection of the profile frame — identical
-    * rows (decoded frames below the signature cap), zero decode.
+  /** Per-frame perceptual hashes, projected from the profile frame.
+    * Frames that failed to decode are dropped (one bad frame must not
+    * kill the clip; a clip with NO hashable frames simply contributes
+    * no rows — the exclusion [[Dedup.videoDedupPairs]] relies on).
+    * Only the leading `maxFrames` frames are kept — the clip signature
+    * is a bounded prefix, the band-join cost cap.
     */
-  def frameHashesFromProfiles(profiles: Dataset[VideoFrameProfile],
+  def frameHashes(profiles: Dataset[VideoFrameProfile],
       maxFrames: Int = 64): Dataset[FrameHash] = {
     implicit val enc = Encoders.product[FrameHash]
     profiles.filter(p => p.decoded && p.frameIdx < maxFrames)
       .map(p => FrameHash(p.docId, p.frameIdx, p.fhash))
   }
 
-  /** [[videoKeyframes]] over the profile frame — identical emissions
-    * (same sequential last-emitted fold over decoded frames, same
-    * 4-dp deltas), zero decode. Pays one ≤maxFrames-per-clip
-    * groupByKey the direct op avoids — a 16+32-byte-row shuffle
-    * against a full per-frame JPEG decode.
+  /** Keyframe (scene-change) selection over the profile frame — the
+    * frame-diversity sampler a training pipeline runs before feature
+    * extraction: emit the decoded frames whose L1 histogram distance to
+    * the PREVIOUS EMITTED keyframe ≥ `threshold` (a clip's first
+    * decoded frame always emits, carrying delta 2.0 — the L1 maximum —
+    * as its sentinel; deltas are 4-dp). Consecutive near-identical
+    * frames collapse to one representative; a cut to new content
+    * re-emits; undecodable frames are skipped. Per-clip sequential by
+    * nature: one groupByKey over the clips' small profile rows.
     */
-  def keyframesFromProfiles(profiles: Dataset[VideoFrameProfile],
+  def videoKeyframes(profiles: Dataset[VideoFrameProfile],
       threshold: Double = 0.2): Dataset[Keyframe] = {
     implicit val enc = Encoders.product[Keyframe]
     implicit val kEnc = Encoders.scalaLong
@@ -371,14 +338,27 @@ object VideoOps {
     }
   }
 
-  /** [[videoAnnTopK]] over the profile frame — identical ranking
-    * (every `everyN`-th frame's histogram, stub included for
-    * undecodable frames, mean-pooled per clip into the same annTopK),
-    * zero decode. The caller pins `profiles`; the clip-vector frame
-    * is pinned here as in the direct op (annTopK reads it from the
-    * query and corpus subtrees).
+  /** Top-k similar clips by mean sampled-frame luminance histogram —
+    * the video → ANN bridge completing the three-modality symmetry
+    * ([[MultimodalOps.imageAnnTopK]] / [[AudioOps.envelopes]]): every
+    * `everyN`-th frame's profile histogram averages into one clip
+    * vector (resolution- and trim-robust: dropping leading frames
+    * moves a mean far less than it shifts every index — the
+    * similarity-view complement to [[Dedup.videoDedupPairsWarp]]'s
+    * exact re-alignment), and the embedding family's
+    * [[Similarity.annTopK]] ranks it unchanged. All-zero clip vectors
+    * (no sampled frame decoded to content) are excluded — cosine
+    * against a zero vector ranks arbitrarily. A frame that failed
+    * decode contributes its deterministic stub histogram (bounded
+    * per-frame influence on the mean; the dedup ops DROP such frames
+    * because a hash must never fake, a mean may degrade — stated
+    * difference). The caller pins `profiles`; the 8-float clip frame
+    * is pinned here (annTopK reads it from both the query and corpus
+    * subtrees). The mean assembles through an 8-element `transform` —
+    * interpreted, but over the CLIP-sized aggregate frame, never per
+    * frame (the §5b lambda rule).
     */
-  def videoAnnFromProfiles(profiles: Dataset[VideoFrameProfile],
+  def videoAnnTopK(profiles: Dataset[VideoFrameProfile],
       nQueries: Long = 10, k: Int = 5, everyN: Int = 4): DataFrame = {
     val clipVecs = Cached.pin(profiles.toDF()
       .where(col("frameIdx") % everyN === 0)
@@ -391,67 +371,6 @@ object VideoOps {
       .where(expr(
         "aggregate(embedding, cast(0.0 as double), (a, x) -> a + x) > 0")))
     Similarity.annTopK(clipVecs, nQueries, k)
-  }
-
-  /** Per-frame perceptual hashes: real AVI parse → per-frame JPEG
-    * decode (pixel-budget-guarded) → the image family's own dHash-64.
-    * Frames that fail to decode are dropped (one bad frame must not
-    * kill the clip; a clip with NO hashable frames simply contributes
-    * no rows — the exclusion [[Dedup.videoDedupPairs]] relies on).
-    * At most `maxFrames` leading frames are hashed — the clip
-    * signature is a bounded prefix, the band-join cost cap.
-    * Partition-local flatMap, no shuffle.
-    */
-  def frameHashes(media: Dataset[MediaRow], maxFrames: Int = 64,
-      maxPixels: Long = MultimodalOps.DefaultMaxPixels): Dataset[FrameHash] = {
-    implicit val enc = Encoders.product[FrameHash]
-    media.mapPartitions(_.flatMap { m =>
-      (if (m.format == "video") decodeAvi(m.payload, maxFrames)
-       else None) match {
-        case None => Iterator.empty
-        case Some(a) => a.frames.iterator.zipWithIndex.flatMap {
-          case (f, i) => MultimodalOps.decodeForHash(f, maxPixels)
-            .map(h => FrameHash(m.docId, i, h)).iterator
-        }
-      }
-    })
-  }
-
-  /** Keyframe (scene-change) selection — the frame-diversity sampler
-    * a training pipeline runs before feature extraction: decode each
-    * frame through the image pixel-budget guard, compute its 8-bin
-    * luminance histogram, and emit the frames whose L1 histogram
-    * distance to the PREVIOUS EMITTED keyframe ≥ `threshold` (frame 0
-    * always emits, carrying delta 2.0 — the L1 maximum — as its
-    * sentinel). Consecutive near-identical frames collapse to one
-    * representative; a cut to new content re-emits. Per-clip
-    * sequential by nature, partition-local across clips, no shuffle.
-    */
-  def videoKeyframes(media: Dataset[MediaRow], threshold: Double = 0.2,
-      maxFrames: Int = DefaultMaxFrames): Dataset[Keyframe] = {
-    implicit val enc = Encoders.product[Keyframe]
-    media.mapPartitions(_.flatMap { m =>
-      (if (m.format == "video") decodeAvi(m.payload, maxFrames)
-       else None) match {
-        case None => Iterator.empty
-        case Some(a) =>
-          var last: Array[Float] = null
-          a.frames.iterator.zipWithIndex.flatMap { case (f, i) =>
-            MultimodalOps.decodeForHistogram(f) match {
-              case None => None // one bad frame must not kill the clip
-              case Some(h) =>
-                val d =
-                  if (last == null) 2.0
-                  else h.indices.map(j =>
-                    math.abs(h(j) - last(j)).toDouble).sum
-                if (d >= threshold || last == null) {
-                  last = h
-                  Some(Keyframe(m.docId, i, math.rint(d * 1e4) / 1e4))
-                } else None
-            }
-          }
-      }
-    })
   }
 
   /** Deterministic token-block AVI/MJPEG per document — the registry /

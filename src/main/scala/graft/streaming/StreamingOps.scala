@@ -771,7 +771,8 @@ object StreamingOps {
   }
 
   /** Streaming IMAGE near-duplicate gate (r9) — the ingest-time dual
-    * of [[graft.operators.Dedup.imageDedupPairs]], and the multimodal
+    * of [[graft.operators.Dedup.perceptualPairsFrom]] over image
+    * dHashes, and the multimodal
     * twin of [[nearDupDocStream]]: each arriving image is decoded
     * row-locally (REAL raster decode, the batch pixel-budget guard),
     * dHashed, split into the SAME pigeonhole bands as the batch op
@@ -825,7 +826,8 @@ object StreamingOps {
   }
 
   /** Streaming AUDIO near-duplicate gate (r9 session 4) — the
-    * ingest-time dual of [[graft.operators.Dedup.audioDedupPairs]],
+    * ingest-time dual of [[graft.operators.Dedup.perceptualPairsFrom]]
+    * over audio energy hashes,
     * completing the per-modality gate family (text
     * [[nearDupDocStream]], image [[imageDupDocStream]], this): each
     * arriving clip is decoded row-locally (REAL RIFF/WAV parse, the

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
 
-/** The r14-opt rewrite of [[Dedup.videoDedupPairsFrom]]'s verification
+/** The r14-opt rewrite of [[Dedup.videoDedupPairs]]' verification
   * stage (per-pair aligned_hamming fold over packed frame arrays)
   * must be ROW-IDENTICAL to the old shape (candidate pairs joined
   * back to per-frame hash rows, grouped, counted). This spec rebuilds
@@ -45,7 +45,7 @@ class AlignedHammingSpec extends SparkSuite {
       .persist()
   }
 
-  /** The PRE-r14 videoDedupPairsFrom, verbatim (star frames inline —
+  /** The PRE-r14 videoDedupPairs, verbatim (star frames inline —
     * the shared clipStarFrames now persists, which is value-neutral
     * but this reconstruction stays plain).
     */
@@ -113,7 +113,7 @@ class AlignedHammingSpec extends SparkSuite {
     // the inline old shape pins pigeonholeBands(5)'s 6×11 geometry, so
     // sweep minFrac at maxHamming=5 (the registered parameterization)
     for ((mh, mf) <- Seq((5, 0.5), (5, 0.0), (5, 1.0))) {
-      val nu = Dedup.videoDedupPairsFrom(f, mh, mf)
+      val nu = Dedup.videoDedupPairs(f, mh, mf)
         .orderBy("a_id", "b_id").collect().toSeq
       val old = oldVideoDedupPairs(f, mh, mf)
         .orderBy("a_id", "b_id").collect().toSeq

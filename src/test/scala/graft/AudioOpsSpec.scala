@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.Encoders
 
-import graft.operators.{AudioOps, Dedup}
+import graft.operators.{AudioOps, Dedup, Similarity}
 import graft.operators.AudioOps.AudioRow
 
 /** The audio leg of the multimodal pillar: real RIFF/WAV chunk-parse
@@ -28,6 +28,14 @@ class AudioOpsSpec extends SparkSuite {
   private def rows(rs: (Long, Array[Byte], String)*) = {
     implicit val enc = Encoders.product[AudioRow]
     spark.createDataset(rs.map { case (id, p, f) => AudioRow(id, p, f) })
+  }
+
+  /** The dedup door over the decode-once profile: valid hashes only. */
+  private def dedupPairs(m: org.apache.spark.sql.Dataset[AudioRow],
+      maxHamming: Int = 5) = {
+    import org.apache.spark.sql.functions.col
+    Dedup.perceptualPairsFrom(AudioOps.audioProfile(m)
+      .where(col("hashValid")).select(col("docId"), col("ehash")), maxHamming)
   }
 
   test("known-answer: 440 Hz sine decodes to its true rate/length/stats") {
@@ -143,7 +151,7 @@ class AudioOpsSpec extends SparkSuite {
       (5L, "garbage".getBytes("UTF-8"), "audio"),
       (6L, wav(Array.fill[Short](8000)(0)), "audio"), // silent
       (7L, wav(Array.fill[Short](8000)(0)), "audio"))
-    val pairs = Dedup.audioDedupPairs(m, maxHamming = 5).collect()
+    val pairs = dedupPairs(m).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(pairs.get((0L, 1L)).contains(0L), s"clone pair missing: $pairs")
     assert(pairs.contains((0L, 2L)) && pairs((0L, 2L)) <= 5, "edit pair")
@@ -153,8 +161,7 @@ class AudioOpsSpec extends SparkSuite {
     assert(!pairs.contains((4L, 5L)) && !pairs.contains((6L, 7L)),
       "degenerate rows paired")
     // plan stays an equi-join — never cartesian
-    val plan = Dedup.audioDedupPairs(m, maxHamming = 5)
-      .queryExecution.executedPlan.toString
+    val plan = dedupPairs(m).queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"))
   }
 
@@ -167,7 +174,8 @@ class AudioOpsSpec extends SparkSuite {
         if (i % 16 < 8) 32767 else -32768)), "audio"), // clipped
       (4L, "junk".getBytes("UTF-8"), "audio"), // undecodable
       (5L, wav(sine(300, 0.5, 0.5)), "video")) // not_audio
-    val g = AudioOps.audioFilter(m).collect().sortBy(_.docId)
+    val g = AudioOps.audioFilter(AudioOps.audioProfile(m))
+      .collect().sortBy(_.docId)
     assert(g(0).keep && g(0).failReasons.isEmpty)
     assert(!g(1).keep && g(1).failReasons == "too_short")
     assert(!g(2).keep && g(2).failReasons.contains("silent"))
@@ -187,21 +195,35 @@ class AudioOpsSpec extends SparkSuite {
       (3L, "junk".getBytes("UTF-8"), "audio"),
       (4L, wav(sine(440, 0.4, 0.3)), "video"))
     val p = AudioOps.audioProfile(m).collect().map(r => r.docId -> r).toMap
-    val g = AudioOps.audioFilter(m).collect().map(r => r.docId -> r).toMap
-    val h = AudioOps.audioHashes(m).collect().map(r => r.docId -> r).toMap
-    (0L to 4L).foreach { id =>
-      assert((p(id).durationMs, p(id).rms, p(id).peak, p(id).keep,
-        p(id).failReasons) ==
-        (g(id).durationMs, g(id).rms, g(id).peak, g(id).keep,
-          g(id).failReasons), s"gate drift at $id")
-      // audioHashes folds decode failure AND hash degeneracy into one
-      // `decoded` flag; the profile separates them — the conjunction
-      // must agree
-      assert((p(id).decoded && p(id).hashValid) == h(id).decoded,
+    val g = AudioOps.audioFilter(AudioOps.audioProfile(m)).collect()
+      .map(r => r.docId -> r).toMap
+    // the row kernels on the driver: decodeWav, then energyHash64
+    m.collect().foreach { row =>
+      val id = row.docId
+      val pcm =
+        if (row.format == "audio") AudioOps.decodeWav(row.payload) else None
+      val mono = pcm.map(_.mono).getOrElse(Array.empty[Double])
+      val durMs = pcm.map(q => q.mono.length * 1000.0 / q.sampleRate)
+        .getOrElse(0.0)
+      val rms = if (mono.isEmpty) 0.0
+        else math.sqrt(mono.map(x => x * x).sum / mono.length)
+      val peak = if (mono.isEmpty) 0.0 else mono.map(math.abs).max
+      assert(p(id).decoded == pcm.isDefined, s"decoded drift at $id")
+      assert(math.abs(p(id).durationMs - durMs) < 1e-9 &&
+        math.abs(p(id).rms - rms) < 1e-6 &&
+        math.abs(p(id).peak - peak) < 1e-6, s"stats drift at $id")
+      assert((g(id).durationMs, g(id).rms, g(id).peak, g(id).keep,
+        g(id).failReasons) == (p(id).durationMs, p(id).rms, p(id).peak,
+        p(id).keep, p(id).failReasons), s"gate drift at $id")
+      val h = pcm.flatMap(q => AudioOps.energyHash64(q.mono))
+      // the profile separates decode failure from hash degeneracy; the
+      // kernel folds both into one Option — the conjunction must agree
+      assert((p(id).decoded && p(id).hashValid) == h.isDefined,
         s"hash-validity drift at $id")
-      if (h(id).decoded)
-        assert(p(id).ehash == h(id).ahash, s"ehash drift at $id")
+      h.foreach(v => assert(p(id).ehash == v, s"ehash drift at $id"))
     }
+    assert((0L to 4L).map(p(_).failReasons) ==
+      Seq("", "too_short", "silent", "undecodable", "not_audio"))
   }
 
   test("audioAnnTopK: a volume-normalized variant is its twin's nearest neighbor") {
@@ -216,12 +238,13 @@ class AudioOpsSpec extends SparkSuite {
     val m = rows((0L, wav(a), "audio"), (1L, wav(b), "audio"),
       (2L, wav(c), "audio"), (3L, wav(aQuiet), "audio"),
       (4L, "junk".getBytes("UTF-8"), "audio"))
-    val top = AudioOps.audioAnnTopK(m, nQueries = 3, k = 1).collect()
+    val envelopes = AudioOps.envelopes(m)
+    val top = Similarity.annTopK(envelopes, nQueries = 3, k = 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // flat envelope at any gain ≡ flat envelope: cosine 1.0
     assert(top(0L) == 3L, s"query 0 nearest ${top(0L)}")
     // undecodable rows never appear
-    val all = AudioOps.audioAnnTopK(m, nQueries = 3, k = 4).collect()
+    val all = Similarity.annTopK(envelopes, nQueries = 3, k = 4).collect()
     assert(!all.exists(r => r.getLong(1) == 4L))
   }
 
@@ -240,14 +263,14 @@ class AudioOpsSpec extends SparkSuite {
     val clips = AudioOps.syntheticAudio(docs).collect().sortBy(_.docId)
     assert(clips(0).payload.toSeq == clips(1).payload.toSeq)
     assert(clips(0).payload.toSeq != clips(2).payload.toSeq)
-    val hashes = AudioOps.audioHashes(AudioOps.syntheticAudio(docs))
+    val hashes = AudioOps.audioProfile(AudioOps.syntheticAudio(docs))
       .collect().sortBy(_.docId)
-    assert(hashes.forall(_.decoded))
+    assert(hashes.forall(h => h.decoded && h.hashValid))
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    assert(ham(hashes(0).ahash, hashes(1).ahash) == 0)
-    assert(ham(hashes(0).ahash, hashes(2).ahash) <= 5,
-      s"near-dup hamming ${ham(hashes(0).ahash, hashes(2).ahash)}")
-    assert(ham(hashes(0).ahash, hashes(3).ahash) > 5, "unrelated too close")
+    assert(ham(hashes(0).ehash, hashes(1).ehash) == 0)
+    assert(ham(hashes(0).ehash, hashes(2).ehash) <= 5,
+      s"near-dup hamming ${ham(hashes(0).ehash, hashes(2).ehash)}")
+    assert(ham(hashes(0).ehash, hashes(3).ehash) > 5, "unrelated too close")
   }
 
   test("resample: rate conversion preserves duration and tone; idempotent at same rate") {
@@ -335,7 +358,7 @@ class AudioOpsSpec extends SparkSuite {
     // only even ids get a variant
     assert(variants.collect().map(_.docId).sorted.toSeq ==
       Seq(1000L, 1002L, 1004L))
-    val pairs = Dedup.audioDedupPairs(base.union(variants)).collect()
+    val pairs = dedupPairs(base.union(variants)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     Seq(0L, 2L, 4L).foreach(i =>
       assert(pairs.get((i, 1000L + i)).exists(_ <= 2),

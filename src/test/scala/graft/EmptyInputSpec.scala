@@ -93,50 +93,46 @@ class EmptyInputSpec extends SparkSuite {
     assertEmptyOk("stratifiedSample",
       graft.operators.Curation.stratifiedSample(noDocs))
     assertEmptyOk("diverseSelect", Similarity.diverseSelect(noEmb))
-    assertEmptyOk("imageAnnTopK", graft.operators.MultimodalOps.imageAnnTopK {
-      implicit val e = org.apache.spark.sql.Encoders.product[
-        graft.operators.MultimodalOps.MediaRow]
-      spark.emptyDataset[graft.operators.MultimodalOps.MediaRow]
-    })
-    assertEmptyOk("imageDedupPairs", Dedup.imageDedupPairs {
-      implicit val e = org.apache.spark.sql.Encoders.product[
-        graft.operators.MultimodalOps.MediaRow]
-      spark.emptyDataset[graft.operators.MultimodalOps.MediaRow]
-    })
-    assertEmptyOk("imageDedupGroups", Dedup.imageDedupGroups {
-      implicit val e = org.apache.spark.sql.Encoders.product[
-        graft.operators.MultimodalOps.MediaRow]
-      spark.emptyDataset[graft.operators.MultimodalOps.MediaRow]
-    })
-    def noAudio = {
-      implicit val e = org.apache.spark.sql.Encoders.product[
-        graft.operators.AudioOps.AudioRow]
-      spark.emptyDataset[graft.operators.AudioOps.AudioRow]
-    }
-    assertEmptyOk("audioDedupPairs", Dedup.audioDedupPairs(noAudio))
     def noMedia = {
       implicit val e = org.apache.spark.sql.Encoders.product[
         graft.operators.MultimodalOps.MediaRow]
       spark.emptyDataset[graft.operators.MultimodalOps.MediaRow]
     }
-    assertEmptyOk("videoDedupPairs", Dedup.videoDedupPairs(noMedia))
-    assertEmptyOk("videoDedupPairsWarp", Dedup.videoDedupPairsWarp(noMedia))
+    def noAudio = {
+      implicit val e = org.apache.spark.sql.Encoders.product[
+        graft.operators.AudioOps.AudioRow]
+      spark.emptyDataset[graft.operators.AudioOps.AudioRow]
+    }
+    import graft.operators.{AudioOps, MultimodalOps, VideoOps}
+    def imgProfiles = MultimodalOps.imageProfile(noMedia)
+    def imgHashes = MultimodalOps.imageHashes(imgProfiles)
+      .where($"decoded").select($"docId", $"dhash")
+    def frameHashes = VideoOps.frameHashes(VideoOps.videoFrameProfiles(noMedia))
+      .toDF().select($"docId".as("doc_id"), $"frameIdx".as("frame_idx"),
+        $"fhash")
+    assertEmptyOk("imageAnnTopK", MultimodalOps.imageAnnTopK(imgProfiles))
+    assertEmptyOk("imageDedupPairs", Dedup.perceptualPairsFrom(imgHashes))
+    assertEmptyOk("imageDedupGroups", Dedup.perceptualGroups(imgHashes))
+    assertEmptyOk("audioDedupPairs", Dedup.perceptualPairsFrom(
+      AudioOps.audioProfile(noAudio).where($"hashValid")
+        .select($"docId", $"ehash")))
+    assertEmptyOk("videoDedupPairs", Dedup.videoDedupPairs(frameHashes))
+    assertEmptyOk("videoDedupPairsWarp", Dedup.videoDedupPairsWarp(frameHashes))
     assertEmptyOk("videoAnnTopK",
-      graft.operators.VideoOps.videoAnnTopK(noMedia))
-    assertEmptyOk("videoMeta",
-      graft.operators.VideoOps.videoMeta(noMedia).toDF())
+      VideoOps.videoAnnTopK(VideoOps.videoFrameProfiles(noMedia)))
+    assertEmptyOk("videoMeta", VideoOps.videoMeta(noMedia).toDF())
     assertEmptyOk("videoKeyframes",
-      graft.operators.VideoOps.videoKeyframes(noMedia).toDF())
-    assertEmptyOk("videoFrameSample",
-      graft.operators.VideoOps.frameSample(noMedia).toDF())
-    assertEmptyOk("curateMedia",
-      graft.operators.MediaPipeline.curateMedia(noMedia, noAudio, noMedia))
+      VideoOps.videoKeyframes(VideoOps.videoFrameProfiles(noMedia)).toDF())
+    assertEmptyOk("videoFrameSample", VideoOps.frameSample(noMedia).toDF())
+    assertEmptyOk("curateMedia", graft.operators.MediaPipeline.curateMedia(
+      imgProfiles.toDF(), AudioOps.audioProfile(noAudio).toDF(),
+      VideoOps.videoMeta(noMedia).toDF(), frameHashes))
     assertEmptyOk("audioAnnTopK",
-      graft.operators.AudioOps.audioAnnTopK(noAudio))
+      Similarity.annTopK(AudioOps.envelopes(noAudio)))
     assertEmptyOk("extractAudioFeatures",
-      graft.operators.AudioOps.extractAudioFeatures(noAudio).toDF())
+      AudioOps.extractAudioFeatures(noAudio).toDF())
     assertEmptyOk("audioFilter",
-      graft.operators.AudioOps.audioFilter(noAudio).toDF())
+      AudioOps.audioFilter(AudioOps.audioProfile(noAudio)).toDF())
     assertEmptyOk("decontaminateBloom",
       graft.operators.Curation.decontaminateBloom(noDocs))
     assertEmptyOk("contamAttribution",
@@ -187,11 +183,7 @@ class EmptyInputSpec extends SparkSuite {
       Dedup.noveltyAgainst(Dedup.gramIndex(noDocs), noDocs))
     assertEmptyOk("sourceOverlapHll", Dedup.sourceOverlapHll(noDocs))
     assertEmptyOk("compressRatio", TextOps.compressRatio(noDocs))
-    assertEmptyOk("imageFilter", graft.operators.MultimodalOps.imageFilter {
-      implicit val e = org.apache.spark.sql.Encoders.product[
-        graft.operators.MultimodalOps.MediaRow]
-      spark.emptyDataset[graft.operators.MultimodalOps.MediaRow]
-    }.toDF())
+    assertEmptyOk("imageFilter", MultimodalOps.imageFilter(imgProfiles).toDF())
   }
 
   test("similarity operators tolerate empty input") {

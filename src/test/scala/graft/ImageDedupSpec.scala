@@ -56,9 +56,18 @@ class ImageDedupSpec extends SparkSuite {
     spark.createDataset(rows.map { case (id, p, f) => MediaRow(id, p, f) })
   }
 
+  /** The decoded rows' dHashes, projected from the decode-once
+    * profile — the frame both dedup doors read.
+    */
+  private def hashes(ds: org.apache.spark.sql.Dataset[MediaRow]) = {
+    import org.apache.spark.sql.functions.col
+    MultimodalOps.imageHashes(MultimodalOps.imageProfile(ds))
+      .where(col("decoded")).select(col("docId"), col("dhash"))
+  }
+
   private def pairs(ds: org.apache.spark.sql.Dataset[MediaRow],
       maxHamming: Int = 5) =
-    Dedup.imageDedupPairs(ds, maxHamming).collect()
+    Dedup.perceptualPairsFrom(hashes(ds), maxHamming).collect()
       .map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")) ->
         r.getAs[Long]("hamming")).toMap
 
@@ -103,7 +112,7 @@ class ImageDedupSpec extends SparkSuite {
       (5L, noise(7), "image"), // clone of 4
       (6L, "junk".getBytes("UTF-8"), "image")) // excluded entirely
     val p = pairs(m).keySet
-    val groups = Dedup.imageDedupGroups(m).collect()
+    val groups = Dedup.perceptualGroups(hashes(m)).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("group_id"))).toMap
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
@@ -154,7 +163,8 @@ class ImageDedupSpec extends SparkSuite {
 
   test("plan: band equi-join, never cartesian") {
     val m = media((0L, gradient(16, 16), "image"), (1L, noise(7), "image"))
-    val p = Dedup.imageDedupPairs(m).queryExecution.executedPlan.toString
+    val p = Dedup.perceptualPairsFrom(hashes(m))
+      .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"image dedup must stay a band equi-join:\n$p")
@@ -167,7 +177,8 @@ class ImageDedupSpec extends SparkSuite {
       (0L, gradient(64, 64), "image"), // the query (vec_id < nQueries)
       (10L, gradient(128, 96), "image"), // rescaled sibling
       (11L, noise(42), "image"))
-    val top = MultimodalOps.imageAnnTopK(m, nQueries = 1, k = 1).collect()
+    val top = MultimodalOps.imageAnnTopK(MultimodalOps.imageProfile(m),
+        nQueries = 1, k = 1).collect()
       .map(r => r.getAs[Long]("q_id") ->
         (r.getAs[Long]("n_id"), r.getAs[Double]("cos_sim"))).toMap
     assert(top(0L)._1 == 10L,
@@ -180,8 +191,8 @@ class ImageDedupSpec extends SparkSuite {
     val big = gradient(128, 96)
     val small = gradient(32, 24)
     implicit val enc = Encoders.product[MediaRow]
-    val hs = MultimodalOps.imageHashes(media(
-      (0L, big, "image"), (1L, big, "image"), (2L, small, "image")))
+    val hs = MultimodalOps.imageHashes(MultimodalOps.imageProfile(media(
+      (0L, big, "image"), (1L, big, "image"), (2L, small, "image"))))
       .collect().sortBy(_.docId)
     assert(hs.forall(_.decoded))
     assert(hs(0).dhash == hs(1).dhash, "same bytes, same hash")

@@ -412,7 +412,8 @@ class IncrementalDedupSpec extends SparkSuite {
       spark.createDataset(rs.map { case (id, p) => MediaRow(id, p, "image") })
     }
     def hashesOf(m: org.apache.spark.sql.Dataset[MediaRow]) =
-      MultimodalOps.imageHashes(m).where(col("decoded"))
+      MultimodalOps.imageHashes(MultimodalOps.imageProfile(m))
+        .where(col("decoded"))
         .select(col("docId").as("doc_id"), col("dhash"))
     def triples(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
@@ -427,7 +428,8 @@ class IncrementalDedupSpec extends SparkSuite {
     val idx = hashesOf(media(rowsA: _*))
     val inc = triples(Dedup.perceptualDedupAgainst(idx,
       hashesOf(media(rowsB: _*))))
-    val joint = triples(Dedup.imageDedupPairs(media((rowsA ++ rowsB): _*)))
+    val joint = triples(Dedup.perceptualPairsFrom(
+      hashesOf(media((rowsA ++ rowsB): _*))))
     val jointNew = joint.filter { case (a, b, _) => a >= 100L || b >= 100L }
     assert(inc == jointNew,
       s"missing=${jointNew -- inc} extra=${inc -- jointNew}")

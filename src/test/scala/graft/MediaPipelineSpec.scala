@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.functions.col
 
 import graft.operators.{AudioOps, MediaPipeline, MultimodalOps, VideoOps}
 import graft.operators.AudioOps.AudioRow
@@ -51,6 +52,23 @@ class MediaPipelineSpec extends SparkSuite {
     bos.toByteArray
   }
 
+  /** The capstone over the fixtures' decode-once frames: image and
+    * audio profiles, the container-parse gate and the per-frame hash
+    * projection of the video frame profile.
+    */
+  private def curate(images: Dataset[MediaRow], audio: Dataset[AudioRow],
+      videos: Dataset[MediaRow], imgMinSide: Int, imgMinEntropy: Double,
+      canonical: Boolean = false): DataFrame =
+    MediaPipeline.curateMedia(
+      MultimodalOps.imageProfile(images, minSide = imgMinSide,
+        minEntropy = imgMinEntropy).toDF(),
+      AudioOps.audioProfile(audio).toDF(),
+      VideoOps.videoMeta(videos).toDF(),
+      VideoOps.frameHashes(VideoOps.videoFrameProfiles(videos)).toDF()
+        .select(col("docId").as("doc_id"), col("frameIdx").as("frame_idx"),
+          col("fhash")),
+      canonical = canonical)
+
   test("curateMedia: gates name their reasons, dedup keeps first, survivors pass") {
     implicit val mEnc = Encoders.product[MediaRow]
     implicit val aEnc = Encoders.product[AudioRow]
@@ -71,7 +89,7 @@ class MediaPipelineSpec extends SparkSuite {
       MediaRow(0L, avi, "video"), // keep
       MediaRow(1L, avi, "video"), // clone -> dup_of:0
       MediaRow(2L, "junk".getBytes("UTF-8"), "video"))) // undecodable
-    val inv = MediaPipeline.curateMedia(images, audio, videos,
+    val inv = curate(images, audio, videos,
         imgMinSide = 16, imgMinEntropy = 0.5)
       .collect()
       .map(r => (r.getString(1), r.getLong(0)) ->
@@ -89,44 +107,6 @@ class MediaPipelineSpec extends SparkSuite {
     assert(inv(("video", 2L)) == (false, "undecodable"))
     // inventory is total: one row per (doc, modality)
     assert(inv.size == 11)
-  }
-
-  test("curateMediaFromProfiles: the decode-zero door over shared " +
-      "profile frames equals curateMedia row-for-row") {
-    implicit val mEnc = Encoders.product[MediaRow]
-    implicit val aEnc = Encoders.product[AudioRow]
-    val images = spark.createDataset(Seq(
-      MediaRow(0L, png(1), "image"), MediaRow(1L, png(1), "image"),
-      MediaRow(2L, png(2, side = 8), "image"),
-      MediaRow(3L, "junk".getBytes("UTF-8"), "image")))
-    val audio = spark.createDataset(Seq(
-      AudioRow(0L, clipBytes(5), "audio"),
-      AudioRow(1L, clipBytes(5), "audio"),
-      AudioRow(2L, AudioOps.writeWav(Array.fill[Short](4000)(0), 8000),
-        "audio"),
-      AudioRow(3L, "junk".getBytes("UTF-8"), "audio")))
-    val avi = VideoOps.writeAviMjpeg(
-      Seq(jpegFill(7), jpegFill(8), jpegFill(9)), 32, 32, 10)
-    val videos = spark.createDataset(Seq(
-      MediaRow(0L, avi, "video"), MediaRow(1L, avi, "video"),
-      MediaRow(2L, "junk".getBytes("UTF-8"), "video")))
-    def invRows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getString(1), r.getLong(0), r.getBoolean(2),
-        r.getString(3))).sortBy(t => (t._1, t._2)).toSeq
-    val direct = invRows(MediaPipeline.curateMedia(images, audio, videos,
-      imgMinSide = 16, imgMinEntropy = 0.5))
-    val imgProfiles = MultimodalOps.imageProfile(images,
-      minSide = 16, minEntropy = 0.5).toDF()
-    val audProfiles = AudioOps.audioProfile(audio).toDF()
-    val fh = VideoOps.frameHashesFromProfiles(
-      VideoOps.videoFrameProfiles(videos)).toDF()
-      .select(org.apache.spark.sql.functions.col("docId").as("doc_id"),
-        org.apache.spark.sql.functions.col("frameIdx").as("frame_idx"),
-        org.apache.spark.sql.functions.col("fhash"))
-    val viaProfiles = invRows(MediaPipeline.curateMediaFromProfiles(
-      imgProfiles, audProfiles, VideoOps.videoMeta(videos).toDF(), fh))
-    assert(viaProfiles == direct,
-      s"profile door diverged:\n$viaProfiles\nvs\n$direct")
   }
 
   test("inventory drop rules: keep-first keeps both arms of a variant " +
@@ -172,7 +152,7 @@ class MediaPipelineSpec extends SparkSuite {
       MediaRow(3L, "junk".getBytes("UTF-8"), "image")))
     val audio = spark.emptyDataset[AudioRow]
     val videos = spark.emptyDataset[MediaRow]
-    def run(canonical: Boolean) = MediaPipeline.curateMedia(
+    def run(canonical: Boolean) = curate(
         images, audio, videos, imgMinSide = 16, imgMinEntropy = 0.5,
         canonical = canonical)
       .collect()
@@ -192,7 +172,7 @@ class MediaPipelineSpec extends SparkSuite {
       MediaRow(1L, png(3, side = 8), "image")))
     val audio = spark.emptyDataset[AudioRow]
     val videos = spark.emptyDataset[MediaRow]
-    val inv = MediaPipeline.curateMedia(images, audio, videos,
+    val inv = curate(images, audio, videos,
         imgMinSide = 16, imgMinEntropy = 0.5)
       .collect()
       .map(r => (r.getString(1), r.getLong(0)) ->

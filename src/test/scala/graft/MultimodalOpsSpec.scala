@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.Encoders
 
-import graft.operators.MultimodalOps
-import graft.operators.MultimodalOps.{MediaFeatures, MediaRow}
+import graft.operators.{MultimodalOps, Similarity}
+import graft.operators.MultimodalOps.MediaRow
 
 class MultimodalOpsSpec extends SparkSuite {
 
@@ -14,17 +14,6 @@ class MultimodalOpsSpec extends SparkSuite {
         MediaRow(i, s"payload-$i-${"x" * (i % 17).toInt}".getBytes("UTF-8"),
           if (i % 3 == 0) "video" else "image")))
       .repartition(4)
-  }
-
-  test("extractFeatures: typed batch decode preserves rows and is deterministic") {
-    val f1 = MultimodalOps.extractFeatures(media, batchSize = 8).collect()
-    val f2 = MultimodalOps.extractFeatures(media, batchSize = 32).collect()
-    assert(f1.length == 100)
-    // batch size must not change results — decode is per-row semantically
-    assert(f1.sortBy(_.docId).map(_.feature.toSeq).toSeq ==
-      f2.sortBy(_.docId).map(_.feature.toSeq).toSeq)
-    assert(f1.forall(f => f.width >= 320 && f.height >= 240 && f.feature.length == 8))
-    assert(f1.filter(_.nFrames > 1).forall(_.docId % 3 == 0))
   }
 
   test("resize: typed output carries target dims, deterministic payload") {
@@ -51,11 +40,13 @@ class MultimodalOpsSpec extends SparkSuite {
       MediaRow(0L, testImage(5, 7, "png"), "image"),
       MediaRow(1L, testImage(6, 4, "jpg"), "image"),
       MediaRow(2L, "definitely not an image".getBytes("UTF-8"), "image")))
-    val f = MultimodalOps.extractFeatures(m).collect().sortBy(_.docId)
-    assert(f(0).width == 5 && f(0).height == 7 && f(0).nFrames == 1)
-    assert(f(1).width == 6 && f(1).height == 4)
-    // undecodable bytes degrade to the deterministic stub, not an error
-    assert(f(2).width >= 320 && f(2).height >= 240)
+    val f = MultimodalOps.imageProfile(m).collect().sortBy(_.docId)
+    assert(f(0).decoded && f(0).width == 5 && f(0).height == 7)
+    assert(f(1).decoded && f(1).width == 6 && f(1).height == 4)
+    // undecodable bytes degrade to a flagged row carrying the
+    // deterministic stub feature, not an error
+    assert(!f(2).decoded && f(2).failReasons == "undecodable")
+    assert(f(2).feature.toSeq == MultimodalOps.stubFeature(m.collect()(2).payload).toSeq)
     // luminance histogram is a probability distribution over 8 bins
     assert(math.abs(f(0).feature.sum - 1f) < 1e-3)
     assert(f(0).feature.forall(v => v >= 0f && v <= 1f))
@@ -79,36 +70,26 @@ class MultimodalOpsSpec extends SparkSuite {
       MediaRow(1L, Array.emptyByteArray, "video"),
       MediaRow(2L, "x".getBytes, "image")))
     assert(MultimodalOps.resize(m, 32, 32).collect().length == 3)
-    // empty payloads produce no frames; non-empty image produces one
-    assert(MultimodalOps.frameSample(m).collect().map(_.docId).toSeq == Seq(2L))
-    assert(MultimodalOps.extractFeatures(m).collect().length == 3)
+    assert(MultimodalOps.imageProfile(m).collect().length == 3)
   }
 
   test("pixel budget: over-budget declared dimensions degrade to the stub") {
+    implicit val enc = Encoders.product[MediaRow]
     val png = testImage(8, 8, "png") // 64 pixels, decodes fine normally
-    val rows = Seq(MediaRow(0L, png, "image"))
-    val real = MultimodalOps.decodeBatch(rows).head
-    assert(real.width == 8 && real.height == 8)
+    val rows = spark.createDataset(Seq(MediaRow(0L, png, "image")))
+    val real = MultimodalOps.imageProfile(rows).collect().head
+    assert(real.decoded && real.width == 8 && real.height == 8)
     // with a 32-pixel budget the SAME payload is rejected at the
     // header read (no raster allocation) and falls back to the stub —
     // the mechanism that keeps a decompression-bomb header from
     // OOM-ing an executor
-    val guarded = MultimodalOps.decodeBatch(rows, maxPixels = 32L).head
-    assert(guarded.width >= 320 && guarded.height >= 240,
+    val guarded = MultimodalOps.imageProfile(rows, maxPixels = 32L)
+      .collect().head
+    assert(!guarded.decoded && guarded.failReasons == "undecodable",
       "over-budget image must take the stub path")
+    assert(guarded.feature.toSeq == MultimodalOps.stubFeature(png).toSeq)
     // at the default budget the cap is far above any legitimate image
     assert(MultimodalOps.DefaultMaxPixels == 32L * 1024 * 1024)
-  }
-
-  test("frameSample: every-Nth frame for videos, single frame for images") {
-    val frames = MultimodalOps.frameSample(media, everyN = 4).collect()
-    val byDoc = frames.groupBy(_.docId)
-    assert(byDoc.keySet.size == 100)
-    // images (docId % 3 != 0) produce exactly one frame at index 0
-    assert(byDoc.filter(_._1 % 3 != 0).values.forall(f =>
-      f.length == 1 && f.head.frameIdx == 0))
-    // sampled indices step by 4
-    assert(frames.forall(_.frameIdx % 4 == 0))
   }
 
   /** Gray-gradient PNG: v = (x·53 + y·97) mod 256 in all channels —
@@ -136,7 +117,8 @@ class MultimodalOpsSpec extends SparkSuite {
       MediaRow(3L, grayImage(128, 128, flat = true), "image"), // low_entropy
       MediaRow(4L, "not an image".getBytes("UTF-8"), "image"), // undecodable
       MediaRow(5L, grayImage(128, 128), "video")))             // not_image
-    val g = MultimodalOps.imageFilter(m).collect().sortBy(_.docId)
+    val g = MultimodalOps.imageFilter(MultimodalOps.imageProfile(m))
+      .collect().sortBy(_.docId)
     assert(g.map(_.failReasons).toSeq == Seq("", "too_small", "extreme_aspect",
       "low_entropy", "undecodable", "not_image"))
     assert(g.map(_.keep).toSeq == Seq(true, false, false, false, false, false))
@@ -145,68 +127,86 @@ class MultimodalOpsSpec extends SparkSuite {
     // entropy is the audit column: gradient near ln(8), flat exactly 0
     assert(g(0).entropy > 1.8 && g(3).entropy == 0.0)
     // thresholds are knobs: lowering minEntropy re-admits the flat image
-    val relaxed = MultimodalOps.imageFilter(m, minEntropy = 0.0)
-      .collect().sortBy(_.docId)
+    val relaxed = MultimodalOps.imageFilter(
+      MultimodalOps.imageProfile(m, minEntropy = 0.0)).collect().sortBy(_.docId)
     assert(relaxed(3).keep)
+  }
+
+  /** The row kernels run on the driver over one payload: what every
+    * profile column must equal — (decoded, width, height, entropy at
+    * 4 dp, dhash, feature). An undecodable or video payload is
+    * (false, 0, 0, 0.0, 0, stub feature).
+    */
+  private def kernelRow(m: MediaRow) = {
+    val img =
+      if (m.format == "video") null
+      else javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.payload))
+    if (img == null)
+      (false, 0, 0, 0.0, 0L, MultimodalOps.stubFeature(m.payload).toSeq)
+    else {
+      val hist = MultimodalOps.histogramOf(img)
+      val ent = -hist.filter(_ > 0f).map(p => p * math.log(p.toDouble)).sum
+      (true, img.getWidth, img.getHeight, math.rint(ent * 1e4) / 1e4,
+        MultimodalOps.decodeForHash(m.payload).get, hist.toSeq)
+    }
   }
 
   test("imageProfile: one decode yields exactly imageFilter's gate AND " +
       "imageHashes' dhash") {
     implicit val enc = Encoders.product[MediaRow]
-    val m = spark.createDataset(Seq(
+    val rows = Seq(
       MediaRow(0L, grayImage(128, 128), "image"),
       MediaRow(1L, grayImage(8, 8), "image"),
       MediaRow(2L, grayImage(128, 128, flat = true), "image"),
       MediaRow(3L, "not an image".getBytes("UTF-8"), "image"),
-      MediaRow(4L, grayImage(64, 64), "video")))
-    val p = MultimodalOps.imageProfile(m).collect()
+      MediaRow(4L, grayImage(64, 64), "video"))
+    val p = MultimodalOps.imageProfile(spark.createDataset(rows)).collect()
       .map(r => r.docId -> r).toMap
-    val g = MultimodalOps.imageFilter(m).collect()
-      .map(r => r.docId -> r).toMap
-    val h = MultimodalOps.imageHashes(m).collect()
-      .map(r => r.docId -> r).toMap
-    (0L to 4L).foreach { id =>
-      assert((p(id).width, p(id).height, p(id).entropy, p(id).keep,
-        p(id).failReasons) ==
-        (g(id).width, g(id).height, g(id).entropy, g(id).keep,
-          g(id).failReasons), s"gate drift at $id")
-      assert(p(id).decoded == h(id).decoded, s"decoded drift at $id")
-      if (h(id).decoded)
-        assert(p(id).dhash == h(id).dhash, s"dhash drift at $id")
+    rows.foreach { m =>
+      val r = p(m.docId)
+      assert((r.decoded, r.width, r.height, r.entropy, r.dhash,
+        r.feature.toSeq) == kernelRow(m), s"profile drift at ${m.docId}")
     }
+    // the gate is cut from those columns with the default thresholds
+    assert(p.toSeq.sortBy(_._1).map(_._2.failReasons) == Seq("",
+      "too_small", "low_entropy", "undecodable", "not_image"))
+    assert(p.values.forall(r => r.keep == r.failReasons.isEmpty))
   }
 
   test("profile projections: gateFromProfiles / imageHashesFromProfiles " +
       "/ imageAnnFromProfiles equal the standalone decode ops " +
       "(incl. the stub features of undecodable payloads)") {
     implicit val enc = Encoders.product[MediaRow]
-    val m = spark.createDataset(Seq(
+    val rows = Seq(
       MediaRow(0L, grayImage(128, 128), "image"),
       MediaRow(1L, grayImage(8, 8), "image"),
       MediaRow(2L, grayImage(128, 128, flat = true), "image"),
       MediaRow(3L, "not an image".getBytes("UTF-8"), "image"),
       MediaRow(4L, grayImage(64, 64), "video"),
-      MediaRow(5L, grayImage(96, 48), "image")))
-    val profiles = MultimodalOps.imageProfile(m)
-    def gateRows(ds: org.apache.spark.sql.Dataset[MultimodalOps.ImageGate]) =
-      ds.collect().map(g => (g.docId, g.width, g.height, g.entropy,
-        g.keep, g.failReasons)).sortBy(_._1).toSeq
-    assert(gateRows(MultimodalOps.gateFromProfiles(profiles)) ==
-      gateRows(MultimodalOps.imageFilter(m)))
-    def hashRows(ds: org.apache.spark.sql.Dataset[MultimodalOps.ImageHash]) =
-      ds.collect().map(x => (x.docId, x.dhash, x.decoded)).sortBy(_._1).toSeq
-    assert(hashRows(MultimodalOps.imageHashesFromProfiles(profiles)) ==
-      hashRows(MultimodalOps.imageHashes(m)))
-    // the profile's feature column IS extractFeatures' (stub included)
-    val pf = profiles.collect().map(p => p.docId -> p.feature.toSeq).toMap
-    val ef = MultimodalOps.extractFeatures(m).collect()
-      .map(f => f.docId -> f.feature.toSeq).toMap
-    assert(pf == ef, "profile features must equal extractFeatures'")
+      MediaRow(5L, grayImage(96, 48), "image"))
+    val profiles = MultimodalOps.imageProfile(spark.createDataset(rows))
+    val byId = profiles.collect().map(p => p.docId -> p).toMap
+    val kernels = rows.map(m => m.docId -> kernelRow(m)).toMap
+    assert(MultimodalOps.imageFilter(profiles).collect()
+      .map(g => (g.docId, g.width, g.height, g.entropy, g.keep,
+        g.failReasons)).sortBy(_._1).toSeq ==
+      rows.map { m =>
+        val p = byId(m.docId); val k = kernels(m.docId)
+        (m.docId, k._2, k._3, k._4, p.keep, p.failReasons)
+      })
+    assert(MultimodalOps.imageHashes(profiles).collect()
+      .map(x => (x.docId, x.dhash, x.decoded)).sortBy(_._1).toSeq ==
+      rows.map(m => (m.docId, kernels(m.docId)._5, kernels(m.docId)._1)))
+    // the ANN ranks the kernels' features (stub included) exactly as
+    // annTopK ranks them when handed the driver-built frame
+    import spark.implicits._
+    val kernelFeatures = rows.map(m =>
+      (m.docId, kernels(m.docId)._6.toArray)).toDF("vec_id", "embedding")
     def annRows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("n_id"),
         r.getAs[Long]("rnk"))).sortBy(t => (t._1, t._3)).toSeq
-    assert(annRows(MultimodalOps.imageAnnFromProfiles(profiles,
+    assert(annRows(MultimodalOps.imageAnnTopK(profiles,
         nQueries = 3, k = 2)) ==
-      annRows(MultimodalOps.imageAnnTopK(m, nQueries = 3, k = 2)))
+      annRows(Similarity.annTopK(kernelFeatures, 3, 2)))
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.Encoders
 
-import graft.operators.{Dedup, MultimodalOps, VideoOps}
+import graft.operators.{Dedup, MultimodalOps, Similarity, VideoOps}
 import graft.operators.MultimodalOps.MediaRow
 
 /** Real AVI/MJPEG video decode: container round trip, metadata,
@@ -30,6 +30,16 @@ class VideoOpsSpec extends SparkSuite {
   private def rows(rs: (Long, Array[Byte], String)*) = {
     implicit val enc = Encoders.product[MediaRow]
     spark.createDataset(rs.map { case (id, p, f) => MediaRow(id, p, f) })
+  }
+
+  /** The (doc_id, frame_idx, fhash) frame the dedup doors read,
+    * projected from the decode-once frame profile.
+    */
+  private def frameHashFrame(m: org.apache.spark.sql.Dataset[MediaRow]) = {
+    import org.apache.spark.sql.functions.col
+    VideoOps.frameHashes(VideoOps.videoFrameProfiles(m)).toDF()
+      .select(col("docId").as("doc_id"), col("frameIdx").as("frame_idx"),
+        col("fhash"))
   }
 
   test("writeAviMjpeg -> decodeAvi round trip preserves header and frames") {
@@ -114,7 +124,7 @@ class VideoOpsSpec extends SparkSuite {
     assert(v.codec == "avc1")
     // no JDK h264 decoder: the frame family yields ZERO rows for mp4
     assert(VideoOps.frameSample(m).count() == 0L)
-    assert(VideoOps.frameHashes(m).count() == 0L)
+    assert(VideoOps.frameHashes(VideoOps.videoFrameProfiles(m)).count() == 0L)
   }
 
   test("decodeMp4Meta: truncated / garbage / bomb atoms degrade, never crash") {
@@ -167,7 +177,8 @@ class VideoOpsSpec extends SparkSuite {
     val white = jpeg(0xffffff)
     val avi = VideoOps.writeAviMjpeg(
       Seq(black, black, black, white, white, black), 32, 32, fps = 10)
-    val kf = VideoOps.videoKeyframes(rows((0L, avi, "video")),
+    val kf = VideoOps.videoKeyframes(
+      VideoOps.videoFrameProfiles(rows((0L, avi, "video"))),
       threshold = 0.5).collect().sortBy(_.frameIdx)
     assert(kf.map(_.frameIdx).toSeq == Seq(0, 3, 5), s"got ${kf.toSeq}")
     assert(kf(0).delta == 2.0) // sentinel: first frame always emits
@@ -248,7 +259,8 @@ class VideoOpsSpec extends SparkSuite {
       (2L, unrelated, "video"), (3L, sharedStill, "video"),
       (4L, "garbage".getBytes("UTF-8"), "video"),
       (5L, "garbage".getBytes("UTF-8"), "video"))
-    val out = Dedup.videoDedupPairs(m, maxHamming = 5, minFrac = 0.6)
+    val out = Dedup.videoDedupPairs(frameHashFrame(m), maxHamming = 5,
+      minFrac = 0.6)
     val pairs = out.collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getDouble(2), r.getLong(3))).toMap
@@ -273,11 +285,13 @@ class VideoOpsSpec extends SparkSuite {
       (2L, unrelated, "video"))
     // aligned verification: frame i of the trim is frame i+2 of the
     // original — no index ever matches, the stated limitation
-    val aligned = Dedup.videoDedupPairs(m, maxHamming = 5, minFrac = 0.5)
+    val aligned = Dedup.videoDedupPairs(frameHashFrame(m), maxHamming = 5,
+      minFrac = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!aligned.contains((0L, 1L)),
       s"aligned op unexpectedly caught the trimmed copy: $aligned")
-    val warp = Dedup.videoDedupPairsWarp(m, maxHamming = 5, minFrac = 0.5)
+    val warp = Dedup.videoDedupPairsWarp(frameHashFrame(m), maxHamming = 5,
+      minFrac = 0.5)
     val pairs = warp.collect().map(r => (r.getLong(0), r.getLong(1)) ->
       ((r.getInt(2), r.getDouble(3), r.getLong(4)))).toMap
     assert(pairs.get((0L, 1L)).exists { case (shift, avg, n) =>
@@ -298,7 +312,7 @@ class VideoOpsSpec extends SparkSuite {
     // orientation SWAPPED relative to the rep pair (0, 1).
     val m = rows((0L, full, "video"), (1L, trimmed, "video"),
       (3L, full, "video"))
-    val pairs = Dedup.videoDedupPairsWarp(m, maxHamming = 5,
+    val pairs = Dedup.videoDedupPairsWarp(frameHashFrame(m), maxHamming = 5,
       minFrac = 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     assert(pairs.get((0L, 3L)).contains(0), s"within-star shift 0: $pairs")
@@ -318,7 +332,7 @@ class VideoOpsSpec extends SparkSuite {
     // noise dHashes differ by ~32 bits)
     val clipB = VideoOps.writeAviMjpeg(Seq(b(0), b(1), a(0), b(3)), 32, 32, 10)
     val m = rows((0L, clipA, "video"), (1L, clipB, "video"))
-    val pairs = Dedup.videoDedupPairsWarp(m, maxHamming = 5,
+    val pairs = Dedup.videoDedupPairsWarp(frameHashFrame(m), maxHamming = 5,
       minFrac = 0.75).collect()
     assert(pairs.isEmpty, s"one still must not pair clips: ${pairs.toSeq}")
   }
@@ -333,7 +347,8 @@ class VideoOpsSpec extends SparkSuite {
       (0 until 4).map(_ => jpeg(0xF0F0F0)), 32, 32, 10)
     val m = rows((0L, clipA, "video"), (1L, clipATrim, "video"),
       (2L, bright, "video"))
-    val out = VideoOps.videoAnnTopK(m, nQueries = 1, k = 2, everyN = 1)
+    val out = VideoOps.videoAnnTopK(VideoOps.videoFrameProfiles(m),
+        nQueries = 1, k = 2, everyN = 1)
       .collect().sortBy(_.getAs[Long]("rnk"))
       .map(r => r.getAs[Long]("n_id"))
     assert(out.head == 1L,
@@ -357,26 +372,57 @@ class VideoOpsSpec extends SparkSuite {
     val m = rows((1L, cutClip, "video"), (2L, noisy, "video"),
       (3L, poison, "video"), (4L, jpeg(0x123456), "image"))
     val profiles = VideoOps.videoFrameProfiles(m)
-    def hashRows(ds: org.apache.spark.sql.Dataset[VideoOps.FrameHash]) =
-      ds.collect().map(x => (x.docId, x.frameIdx, x.fhash))
-        .sortBy(t => (t._1, t._2)).toSeq
-    assert(hashRows(VideoOps.frameHashesFromProfiles(profiles)) ==
-      hashRows(VideoOps.frameHashes(m)))
-    def kfRows(ds: org.apache.spark.sql.Dataset[VideoOps.Keyframe]) =
-      ds.collect().map(x => (x.docId, x.frameIdx, x.delta))
-        .sortBy(t => (t._1, t._2)).toSeq
-    assert(kfRows(VideoOps.keyframesFromProfiles(profiles)) ==
-      kfRows(VideoOps.videoKeyframes(m)))
+    // the row kernels on the driver: decodeAvi, then per-frame decode
+    // (decodeForHash for the dHash, ImageIO + histogramOf for the
+    // histogram; a frame neither accepts carries the stub histogram)
+    val frames = m.collect().toSeq.flatMap { row =>
+      (if (row.format == "video") VideoOps.decodeAvi(row.payload) else None)
+        .toSeq.flatMap(_.frames.zipWithIndex.map { case (f, i) =>
+          val img = javax.imageio.ImageIO.read(
+            new java.io.ByteArrayInputStream(f))
+          (row.docId, i, MultimodalOps.decodeForHash(f),
+            if (img == null) MultimodalOps.stubFeature(f)
+            else MultimodalOps.histogramOf(img))
+        })
+    }.sortBy(t => (t._1, t._2))
+    assert(VideoOps.frameHashes(profiles).collect()
+      .map(x => (x.docId, x.frameIdx, x.fhash))
+      .sortBy(t => (t._1, t._2)).toSeq ==
+      frames.flatMap { case (d, i, h, _) => h.map((d, i, _)) })
+    // keyframes: the sequential last-emitted fold over decoded frames
+    val expectKf = frames.filter(_._3.isDefined).groupBy(_._1).toSeq
+      .flatMap { case (d, fs) =>
+        var last: Array[Float] = null
+        fs.flatMap { case (_, i, _, hist) =>
+          val delta =
+            if (last == null) 2.0
+            else hist.indices.map(j => math.abs(hist(j) - last(j)).toDouble).sum
+          if (last == null || delta >= 0.2) {
+            last = hist; Some((d, i, math.rint(delta * 1e4) / 1e4))
+          } else None
+        }
+      }.sortBy(t => (t._1, t._2))
+    assert(VideoOps.videoKeyframes(profiles).collect()
+      .map(x => (x.docId, x.frameIdx, x.delta))
+      .sortBy(t => (t._1, t._2)).toSeq == expectKf)
     // the poison frame is SKIPPED by hashes/keyframes but contributes
     // its deterministic stub to the profile (ANN-mean semantics)
     val p3 = profiles.collect().filter(_.docId == 3L).sortBy(_.frameIdx)
     assert(p3.length == 3 && !p3(1).decoded && p3(1).hist.nonEmpty)
+    assert(p3(1).hist.toSeq == frames.find(t => t._1 == 3L && t._2 == 1)
+      .get._4.toSeq)
+    // ANN: the driver's mean of every frame's histogram per clip, ranked
+    // by annTopK, equals the door's ranking
+    import spark.implicits._
+    val clipVecs = frames.groupBy(_._1).toSeq.map { case (d, fs) =>
+      (d, Array.tabulate(8)(b => (fs.map(_._4(b).toDouble).sum / fs.length).toFloat))
+    }.filter(_._2.sum > 0).toDF("vec_id", "embedding")
     def annRows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("n_id"),
         r.getAs[Long]("rnk"))).sortBy(t => (t._1, t._3)).toSeq
-    assert(annRows(VideoOps.videoAnnFromProfiles(profiles,
+    assert(annRows(VideoOps.videoAnnTopK(profiles,
         nQueries = 3, k = 2, everyN = 1)) ==
-      annRows(VideoOps.videoAnnTopK(m, nQueries = 3, k = 2, everyN = 1)))
+      annRows(Similarity.annTopK(clipVecs, 3, 2)))
   }
 
   test("syntheticVideos: dup texts pack identical containers; near-dups pair in dedup") {
@@ -394,8 +440,9 @@ class VideoOpsSpec extends SparkSuite {
     val meta = VideoOps.videoMeta(VideoOps.syntheticVideos(docs))
       .collect().sortBy(_.docId)
     assert(meta.forall(v => v.decoded && v.nFrames == 6))
-    val pairs = Dedup.videoDedupPairs(VideoOps.syntheticVideos(docs),
-      maxHamming = 10).collect()
+    val pairs = Dedup.videoDedupPairs(
+      frameHashFrame(VideoOps.syntheticVideos(docs)), maxHamming = 10)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((0L, 1L)), "dup-text clips must pair")
     assert(pairs.contains((0L, 2L)), s"near-dup-text clips must pair: $pairs")

@@ -3,7 +3,7 @@ package graft
 import graft.operators.Dedup
 
 /** Randomized model-based verification of the warp video dedup
-  * machinery ([[Dedup.warpPairsFromFrameHashes]]) against an
+  * machinery ([[Dedup.videoDedupPairsWarp]]) against an
   * independent in-memory reference: over synthetic frame-hash corpora
   * with planted trims, noisy copies, exact clones and strangers, the
   * operator's (pair → shift, avg_hamming, n_matched) map must equal
@@ -74,7 +74,7 @@ class WarpModelSpec extends SparkSuite {
     val fh = rows.toDF("doc_id", "frame_idx", "fhash")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     fh.count()
-    val out = Dedup.warpPairsFromFrameHashes(fh, maxHamming, minFrac,
+    val out = Dedup.videoDedupPairsWarp(fh, maxHamming, minFrac,
       bucketCap = 10000, minVotes = minVotes).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getInt(2), r.getDouble(3), r.getLong(4)))).toMap
