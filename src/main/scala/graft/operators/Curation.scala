@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Cached
+import graft.sources.IndexStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -709,16 +710,13 @@ object Curation {
   private[graft] def dsirFeatureRows(documents: DataFrame, buckets: Int,
       carryCols: Seq[String] = Nil): DataFrame = {
     val carry = carryCols.map(col)
-    val toks = filter(tokenize(col("text")), t => t =!= "")
     val uni = documents
-      .select(carry :+ col("doc_id") :+ explode(toks).as("f"): _*)
+      .select(carry :+ col("doc_id") :+
+        explode(TextOps.lmTokens).as("f"): _*)
       .where(col("f") =!= "")
-    val bi = documents.where(size(toks) >= 2)
+    val bi = TextOps.lmBigrams(documents, carryCols :+ "doc_id": _*)
       .select(carry :+ col("doc_id") :+
-        explode(shingleStructs(toks, 2)).as("z"): _*)
-      .select(carry :+ col("doc_id") :+
-        graft.functions.TextFunctions.shingleFromStruct(col("z"), 2)
-          .as("f"): _*)
+        concat_ws(" ", col("w1"), col("w2")).as("f"): _*)
     uni.unionByName(bi)
       .select(carry :+ col("doc_id") :+
         graft.functions.TextFunctions.hashBucket(col("f"), buckets)
@@ -791,13 +789,21 @@ object Curation {
   def writeDsirIndex(documents: DataFrame, path: String,
       buckets: Int = 1024, targetEvery: Int = 10,
       targetRem: Int = 7): Unit = {
-    val spark = documents.sparkSession
+    writeDsirArtifacts(documents.sparkSession, path,
+      dsirCounts(documents, buckets, targetEvery, targetRem), buckets,
+      targetEvery, targetRem)
+  }
+
+  /** The per-bucket (b, ct, cr) target/raw feature counts a DSIR index
+    * stores — what [[writeDsirIndex]] writes and [[updateDsirIndex]]
+    * retracts and adds.
+    */
+  private def dsirCounts(documents: DataFrame, buckets: Int,
+      targetEvery: Int, targetRem: Int): DataFrame = {
     val isTarget = dsirTargetExpr(col("doc_id"), targetEvery, targetRem)
-    val counts = dsirFeatures(documents, buckets)
-      .groupBy("b").agg(
-        sum(when(isTarget, col("tf")).otherwise(0L)).as("ct"),
-        sum(when(!isTarget, col("tf")).otherwise(0L)).as("cr"))
-    writeDsirArtifacts(spark, path, counts, buckets, targetEvery, targetRem)
+    dsirFeatures(documents, buckets).groupBy("b").agg(
+      sum(when(isTarget, col("tf")).otherwise(0L)).as("ct"),
+      sum(when(!isTarget, col("tf")).otherwise(0L)).as("cr"))
   }
 
   /** The write half shared by [[writeDsirIndex]] and
@@ -823,38 +829,29 @@ object Curation {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** Maintain a persisted DSIR model across a re-crawl — the
-    * index-surgery leg, with the [[TextOps.updateLmIndex]] property:
-    * per-bucket target/raw counts form an exact MONOID, so retract =
-    * subtract, add = add, and the surgered index is BIT-EQUAL to a
-    * scratch [[writeDsirIndex]] over the post-diff corpus
-    * (spec-asserted) — not "equal under frozen artifacts", actually
-    * equal, totals and fully-retracted buckets included. Pass the
-    * retracted slice's DOCUMENTS (the [[snapshotDiff]] removed +
-    * changed-old rows); only the changed slices are re-featurized,
-    * the stored corpus contributes its ≤`buckets` count rows.
+  /** Maintain a persisted DSIR model across a re-crawl: count surgery
+    * ([[graft.sources.IndexStore.counts]]) on the stored per-bucket
+    * target/raw counts, under the stored geometry — bit-equal to a
+    * scratch [[writeDsirIndex]] over the post-diff corpus, totals and
+    * fully retracted buckets included. Pass the retracted slice's
+    * DOCUMENTS (the [[snapshotDiff]] removed + changed-old rows); only
+    * the changed slices are re-featurized.
     */
   def updateDsirIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, outPath: String, retractDocs: DataFrame,
       addedDocs: DataFrame): Unit = {
-    require(outPath != indexPath,
-      s"updateDsirIndex cannot overwrite the index it reads ($indexPath)")
+    IndexStore.guard(spark, "updateDsirIndex", indexPath, outPath)
     val meta = spark.read.parquet(s"$indexPath/meta").collect()(0)
     val buckets = meta.getAs[Int]("buckets")
     val targetEvery = meta.getAs[Int]("target_every")
     val targetRem = meta.getAs[Int]("target_rem")
-    val isTarget = dsirTargetExpr(col("doc_id"), targetEvery, targetRem)
-    def delta(docs: DataFrame, sign: Int) =
-      dsirFeatures(docs, buckets).groupBy("b").agg(
-        (sum(when(isTarget, col("tf")).otherwise(0L)) * sign).as("ct"),
-        (sum(when(!isTarget, col("tf")).otherwise(0L)) * sign).as("cr"))
-    val counts = spark.read.parquet(s"$indexPath/counts")
-      .unionByName(delta(retractDocs, -1))
-      .unionByName(delta(addedDocs, 1))
-      .groupBy("b").agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
-      .where(col("ct") > 0 || col("cr") > 0)
-    writeDsirArtifacts(spark, outPath, counts, buckets, targetEvery,
-      targetRem)
+    def build(docs: DataFrame) =
+      dsirCounts(docs, buckets, targetEvery, targetRem)
+    IndexStore.counts("updateDsirIndex",
+        spark.read.parquet(s"$indexPath/counts"), Seq("b"),
+        build(retractDocs), build(addedDocs)) {
+      writeDsirArtifacts(spark, outPath, _, buckets, targetEvery, targetRem)
+    }
   }
 
   /** Score a NEW snapshot under a persisted [[writeDsirIndex]] model:

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Cached
+import graft.sources.IndexStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -156,57 +157,20 @@ object Dedup {
   def writeGramIndex(documents: DataFrame, path: String, n: Int = 4): Unit =
     gramIndex(documents, n).write.mode("overwrite").parquet(path)
 
-  /** Maintain a persisted gram index across a re-crawl — the exact
-    * count-monoid surgery of [[graft.operators.TextOps.updateLmIndex]]
-    * applied to the novelty seam: per-gram distinct-doc counts
-    * subtract for the retracted slice and add for the added slice, and
-    * rows reaching zero DROP (a fully retracted gram must leave the
-    * index or a joint-rebuild novelty pass would disagree). BIT-EQUAL
-    * to a scratch [[writeGramIndex]] over the post-diff corpus
-    * (fuzz-spec-asserted in IncrementalDedupSpec) — not "equal under
-    * frozen artifacts", actually equal, because per-doc distinct-gram
-    * sets are deterministic in the text. Pass the retracted slice's
-    * DOCUMENTS (the snapshotDiff `removed` + `changed` old rows):
-    * only the changed slices are ever re-tokenized; the stored corpus
-    * contributes its count rows. `outPath` must differ from
-    * `indexPath` (parquet cannot overwrite its own scan — the
-    * corpus-store versioning discipline).
+  /** Maintain a persisted gram index across a re-crawl: count surgery
+    * ([[graft.sources.IndexStore.counts]]) on the per-gram doc counts,
+    * bit-equal to a scratch [[writeGramIndex]] over the post-diff
+    * corpus. Pass the retracted slice's DOCUMENTS (the snapshotDiff
+    * `removed` + `changed` old rows): only the changed slices are
+    * re-tokenized.
     */
   def updateGramIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, outPath: String, retractDocs: DataFrame,
       addedDocs: DataFrame, n: Int = 4): Unit = {
-    require(outPath != indexPath,
-      s"updateGramIndex cannot overwrite the index it reads ($indexPath)")
-    val stored = spark.read.parquet(indexPath)
-    // loud on a legacy distinct-gram index (pre-r11 writeGramIndex
-    // stored no counts): only the count knows when a retracted gram
-    // must leave the index, so surgery on a countless index cannot be
-    // exact — the caller rebuilds once with writeGramIndex and the
-    // versioned chain is exact from then on
-    require(stored.columns.contains("n_docs"),
-      s"updateGramIndex: the stored index at $indexPath has no n_docs " +
-        "column (written by a pre-count writeGramIndex) — rebuild it " +
-        "with writeGramIndex before applying surgery")
-    def delta(docs: DataFrame, sign: Int) = shingled(docs, n)
-      .select(col("doc_id"), col("shingle").as("gram")).distinct()
-      .groupBy("gram").agg((count(lit(1)) * sign).as("n_docs"))
-    Cached.scoped(stored
-        .unionByName(delta(retractDocs, -1))
-        .unionByName(delta(addedDocs, 1))
-        .groupBy("gram").agg(sum(col("n_docs")).as("n_docs"))) { merged =>
-      // loud on a violated retract contract (the r11 advice item): a
-      // doc retracted twice — or never indexed — drives still-present
-      // grams' counts negative, and the old silent `> 0` filter would
-      // drop them from the index with no diagnostic. A count of 0 is
-      // legitimate (a fully retracted gram leaving the index); below
-      // zero only a caller bug can reach.
-      val negative = merged.where(col("n_docs") < 0).count()
-      require(negative == 0L,
-        s"updateGramIndex: $negative grams went negative — retractDocs " +
-          "does not match the stored snapshot (a doc retracted twice, " +
-          "or never indexed); refusing to write a corrupted index")
-      merged.where(col("n_docs") > 0)
-        .write.mode("overwrite").parquet(outPath)
+    IndexStore.guard(spark, "updateGramIndex", indexPath, outPath)
+    IndexStore.counts("updateGramIndex", spark.read.parquet(indexPath),
+        Seq("gram"), gramIndex(retractDocs, n), gramIndex(addedDocs, n)) {
+      _.write.mode("overwrite").parquet(outPath)
     }
   }
 
@@ -425,35 +389,29 @@ object Dedup {
     * re-tokenization of 100 TB.
     */
   def writeBandIndex(documents: DataFrame, path: String,
-      numHashes: Int = 64, bands: Int = 16, shingleLen: Int = 3): Unit = {
-    val sk = minhashSketch(documents, numHashes, shingleLen)
-    // one sketch job feeds both artifacts; sigs first so a partial
-    // write (bands present, sigs missing) cannot masquerade as a
-    // complete index for the candidate path
-    sk.write.mode("overwrite").parquet(s"$path/sigs")
-    bandRows(sk.sparkSession.read.parquet(s"$path/sigs"), numHashes, bands)
+      numHashes: Int = 64, bands: Int = 16, shingleLen: Int = 3): Unit =
+    writeBandArtifacts(documents.sparkSession, path,
+      minhashSketch(documents, numHashes, shingleLen), numHashes, bands)
+
+  /** The band-index writer: sigs first, so a partial write (bands
+    * present, sigs missing) cannot masquerade as a complete index for
+    * the candidate path; bands derive from the WRITTEN sigs.
+    */
+  private def writeBandArtifacts(spark: org.apache.spark.sql.SparkSession,
+      path: String, sigs: DataFrame, numHashes: Int, bands: Int): Unit = {
+    sigs.write.mode("overwrite").parquet(s"$path/sigs")
+    bandRows(spark.read.parquet(s"$path/sigs"), numHashes, bands)
       .write.mode("overwrite").parquet(s"$path/bands")
   }
 
   /** Maintain a persisted MinHash index across a RE-crawl — the
     * index-update leg [[graft.operators.Curation.snapshotDiff]]
-    * drives: `retractIds` (the diff's `removed` + `changed` ids)
-    * drop out of the stored signatures, `addedDocs` (the `added` +
-    * `changed` documents — a changed doc re-enters under its own id
-    * with fresh content) are sketched and appended, and the result is
-    * written to `outPath` as a complete [[writeBandIndex]]-shaped
-    * index. EXACT contract (spec-asserted): the updated index's
-    * `sigs` and `bands` row SETS equal a scratch
-    * [[writeBandIndex]] over the post-diff corpus — sketching is
-    * deterministic per document, so surgery on the stored rows and a
-    * full rebuild cannot disagree; the saving is that only the
-    * CHANGED slice is ever re-tokenized (the stored corpus's text is
-    * never read, just its 24-byte index rows).
-    *
-    * `outPath` must differ from `indexPath` (parquet cannot overwrite
-    * its own scan; production versions indexes by snapshot anyway —
-    * the corpus-store discipline) — violating this throws before any
-    * write.
+    * drives: row-set surgery ([[graft.sources.IndexStore.rows]]) on
+    * the stored `sigs`, with `retractIds` the diff's `removed` +
+    * `changed` ids and `addedDocs` the `added` + `changed` documents,
+    * sketched here. Sketching is deterministic per document, so the
+    * result equals a scratch [[writeBandIndex]] over the post-diff
+    * corpus while only the changed slice is re-tokenized.
     *
     * Epoch processing order (spec-pinned end-to-end): run
     * [[dedupAgainst]] for the changed slice against the RETRACT-ONLY
@@ -466,18 +424,11 @@ object Dedup {
       indexPath: String, outPath: String, retractIds: DataFrame,
       addedDocs: DataFrame, numHashes: Int = 64, bands: Int = 16,
       shingleLen: Int = 3): Unit = {
-    require(outPath != indexPath,
-      s"updateBandIndex cannot overwrite the index it reads ($indexPath)")
-    val retract = retractIds
-      .select(col(retractIds.columns.head).cast("long").as("doc_id"))
-    val kept = spark.read.parquet(s"$indexPath/sigs")
-      .join(retract, Seq("doc_id"), "left_anti")
-    kept.unionByName(minhashSketch(addedDocs, numHashes, shingleLen))
-      .write.mode("overwrite").parquet(s"$outPath/sigs")
-    // bands re-derive from the WRITTEN sigs (the writeBandIndex
-    // partial-write discipline: sigs first, bands from disk)
-    bandRows(spark.read.parquet(s"$outPath/sigs"), numHashes, bands)
-      .write.mode("overwrite").parquet(s"$outPath/bands")
+    IndexStore.guard(spark, "updateBandIndex", indexPath, outPath)
+    writeBandArtifacts(spark, outPath,
+      IndexStore.rows(spark.read.parquet(s"$indexPath/sigs"), "doc_id",
+        retractIds, minhashSketch(addedDocs, numHashes, shingleLen)),
+      numHashes, bands)
   }
 
   /** Incremental dedup of a NEW snapshot against a persisted index
@@ -1663,9 +1614,12 @@ object Dedup {
     * into a scan of 16-byte rows.
     */
   def writePerceptualIndex(hashes: DataFrame, path: String): Unit =
+    perceptualRows(hashes).write.mode("overwrite").parquet(s"$path/hashes")
+
+  /** The (doc_id, h64) index rows of a hash frame's first two columns. */
+  private def perceptualRows(hashes: DataFrame): DataFrame =
     hashes.select(col(hashes.columns.head).cast("long").as("doc_id"),
       col(hashes.columns(1)).cast("long").as("h64"))
-      .write.mode("overwrite").parquet(s"$path/hashes")
 
   /** Read a [[writePerceptualIndex]] artifact back as the index frame
     * [[perceptualDedupAgainst]] consumes.
@@ -1673,30 +1627,20 @@ object Dedup {
   def perceptualIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = spark.read.parquet(s"$path/hashes")
 
-  /** Maintain a persisted perceptual-hash index across a re-crawl —
-    * the [[updateBandIndex]] surgery applied to the MEDIA index:
-    * `retractIds` drop from the stored 16-byte rows (one anti-join;
-    * retracted payloads are never re-decoded — decode is the expensive
-    * stage for media), `addedHashes` (the changed slice's freshly
-    * decoded (doc_id, h64) rows — the only decode the epoch pays)
-    * append. EXACT contract (fuzz-spec-asserted): perceptual hashing
-    * is per-payload deterministic, so the surgered `hashes/` row SET
-    * equals a scratch [[writePerceptualIndex]] over the post-diff
-    * hash frame — bit-equal. `outPath` must differ from `indexPath`
-    * (parquet cannot overwrite its own scan).
+  /** Maintain a persisted perceptual-hash index across a re-crawl:
+    * row-set surgery ([[graft.sources.IndexStore.rows]]) on the stored
+    * 16-byte rows. Retracted payloads are never re-decoded; `addedHashes`
+    * are the changed slice's freshly decoded (doc_id, h64) rows, the
+    * only decode the epoch pays. Perceptual hashing is per-payload
+    * deterministic, so the result equals a scratch
+    * [[writePerceptualIndex]] over the post-diff hash frame.
     */
   def updatePerceptualIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, outPath: String, retractIds: DataFrame,
       addedHashes: DataFrame): Unit = {
-    require(outPath != indexPath,
-      s"updatePerceptualIndex cannot overwrite the index it reads ($indexPath)")
-    val retract = retractIds
-      .select(col(retractIds.columns.head).cast("long").as("doc_id"))
-    spark.read.parquet(s"$indexPath/hashes")
-      .join(retract, Seq("doc_id"), "left_anti")
-      .unionByName(addedHashes.select(
-        col(addedHashes.columns.head).cast("long").as("doc_id"),
-        col(addedHashes.columns(1)).cast("long").as("h64")))
+    IndexStore.guard(spark, "updatePerceptualIndex", indexPath, outPath)
+    IndexStore.rows(perceptualIndex(spark, indexPath), "doc_id", retractIds,
+        perceptualRows(addedHashes))
       .write.mode("overwrite").parquet(s"$outPath/hashes")
   }
 

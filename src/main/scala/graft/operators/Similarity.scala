@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Cached
+import graft.sources.IndexStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -390,64 +391,44 @@ object Similarity {
     * fresh buckets incomparable).
     */
   def writeLshIndex(embeddings: DataFrame, path: String, nTables: Int = 4,
-      nPlanes: Int = 12, dim: Int = 64): Unit = {
-    val spark = embeddings.sparkSession
-    embeddings
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .write.mode("overwrite").parquet(s"$path/vecs")
+      nPlanes: Int = 12, dim: Int = 64): Unit =
+    writeLshArtifacts(embeddings.sparkSession, path, lshVecs(embeddings),
+      nTables, nPlanes, dim)
+
+  /** The (vec_id, embedding) rows an LSH index stores. */
+  private def lshVecs(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id").cast("long").as("vec_id"),
+      col("embedding"))
+
+  /** The LSH index writer: `vecs/` first, then `buckets/` hashed from
+    * the WRITTEN vecs.
+    */
+  private def writeLshArtifacts(spark: org.apache.spark.sql.SparkSession,
+      path: String, vecs: DataFrame, nTables: Int, nPlanes: Int,
+      dim: Int): Unit = {
+    vecs.write.mode("overwrite").parquet(s"$path/vecs")
     lshBuckets(spark.read.parquet(s"$path/vecs"), nTables, nPlanes, dim)
       .select("vec_id", "table_id", "bucket")
       .write.mode("overwrite").parquet(s"$path/buckets")
   }
 
-  /** Maintain a persisted embedding LSH index across a re-crawl — the
-    * [[graft.operators.Dedup.updateBandIndex]] surgery applied to the
-    * EMBEDDING index: `retractIds` drop from both stored artifacts
-    * (anti-joins; retracted vectors are never re-hashed), `addedVecs`
-    * append to `vecs/` and their bucket rows derive from the WRITTEN
-    * vecs read back off disk (the writeLshIndex partial-write rule:
-    * `buckets/` rows can never disagree with the `vecs/` they were
-    * hashed from). EXACT contract (fuzz-spec-asserted): the
-    * hyperplanes are md5-seeded literals — deterministic in
-    * (nTables, nPlanes, dim) — so the surgered artifacts' row SETS
-    * equal a scratch [[writeLshIndex]] over the post-diff corpus,
-    * bit-equal. Caller contract: the same (nTables, nPlanes) the index
-    * was written with (a mismatch makes stored and fresh buckets
-    * incomparable — the writeLshIndex contract). `outPath` must differ
-    * from `indexPath`.
+  /** Maintain a persisted embedding LSH index across a re-crawl:
+    * row-set surgery ([[graft.sources.IndexStore.rows]]) on the stored
+    * `vecs/`, with `buckets/` re-hashed from the written vecs. The
+    * hyperplanes are md5-seeded literals, deterministic in
+    * (nTables, nPlanes, dim), so the result equals a scratch
+    * [[writeLshIndex]] over the post-diff corpus. Caller contract: the
+    * same (nTables, nPlanes) the index was written with.
     */
   def updateLshIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, outPath: String, retractIds: DataFrame,
       addedVecs: DataFrame, nTables: Int = 4, nPlanes: Int = 12,
       dim: Int = 64): Unit = {
-    require(outPath != indexPath,
-      s"updateLshIndex cannot overwrite the index it reads ($indexPath)")
-    val retract = retractIds
-      .select(col(retractIds.columns.head).cast("long").as("vec_id"))
-    val kept = spark.read.parquet(s"$indexPath/vecs")
-      .join(retract, Seq("vec_id"), "left_anti")
-    // an added id that duplicates a KEPT stored id is dropped (kept
-    // wins): without the anti-join, vecs/ would carry two rows for the
-    // id and the added-slice bucket derivation below would hash both —
-    // the surgered buckets diverging from a scratch rebuild (the r11
-    // advice item). Replacing a vector is retract-then-add, the
-    // contract the fuzz spec exercises.
-    val added = addedVecs
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .join(kept.select(col("vec_id")), Seq("vec_id"), "left_anti")
-    kept.unionByName(added)
-      .write.mode("overwrite").parquet(s"$outPath/vecs")
-    // added bucket rows hash from the WRITTEN vecs slice; kept bucket
-    // rows are surgered in place (hashing is per-row deterministic, so
-    // the union equals hashing the whole written frame)
-    val addedIds = added.select(col("vec_id"))
-    spark.read.parquet(s"$indexPath/buckets")
-      .join(retract, Seq("vec_id"), "left_anti")
-      .unionByName(
-        lshBuckets(spark.read.parquet(s"$outPath/vecs")
-            .join(addedIds, "vec_id"), nTables, nPlanes, dim)
-          .select("vec_id", "table_id", "bucket"))
-      .write.mode("overwrite").parquet(s"$outPath/buckets")
+    IndexStore.guard(spark, "updateLshIndex", indexPath, outPath)
+    writeLshArtifacts(spark, outPath,
+      IndexStore.rows(spark.read.parquet(s"$indexPath/vecs"), "vec_id",
+        retractIds, lshVecs(addedVecs)),
+      nTables, nPlanes, dim)
   }
 
   /** Incremental embedding near-dup of a NEW snapshot against a
@@ -1462,25 +1443,41 @@ object Similarity {
     val k = if (nCells > 0) nCells else annAutoCells(e.count(), maxCells)
     val centroids = learnedCentroids(e, k, iters, dim)
     val books = pqCodebooks(embeddings, m, kCodes, iters, dim)
-    centroids.zipWithIndex
-      .map { case (c, i) => (i, c) }
-      .toDF("cell", "centroid")
-      .repartition(1) // nCells rows — one small file, not 32 shards
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    books.zipWithIndex
-      .flatMap { case (book, s) =>
-        book.zipWithIndex.map { case (cw, j) => (s, j, cw) } }
-      .toDF("subspace", "code", "codeword")
-      .repartition(1) // m × kCodes rows
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    // encode with the READ-BACK artifacts (the writeBandIndex
-    // partial-write rule: stored codes can never disagree with the
-    // stored codebooks)
-    val (cs, bks) = readAnnArtifacts(spark, path)
-    cellsFor(e, cs, nProbe = 1)
-      .select(col("vec_id"), col("cell"),
-        pqCodeArray(bks, col("embedding"), dim).as("codes"))
+    writeAnnArtifacts(spark, "writeAnnIndex", path, dim,
+      centroids.zipWithIndex.map { case (c, i) => (i, c) }
+        .toDF("cell", "centroid"),
+      books.zipWithIndex
+        .flatMap { case (book, s) =>
+          book.zipWithIndex.map { case (cw, j) => (s, j, cw) } }
+        .toDF("subspace", "code", "codeword"))(annCodes(e, _, dim))
+  }
+
+  private type AnnArtifacts = (IndexedSeq[IndexedSeq[Float]],
+    IndexedSeq[IndexedSeq[IndexedSeq[Float]]])
+
+  /** The ANN index writer: centroids and codebooks first, each one
+    * small file (nCells and m × kCodes rows), then `codes/` built from
+    * the READ-BACK artifacts (the writeBandIndex partial-write rule:
+    * stored codes can never disagree with the stored codebooks).
+    */
+  private def writeAnnArtifacts(spark: org.apache.spark.sql.SparkSession,
+      op: String, path: String, dim: Int, centroids: DataFrame,
+      codebooks: DataFrame)(codes: AnnArtifacts => DataFrame): Unit = {
+    centroids.repartition(1).write.mode("overwrite")
+      .parquet(s"$path/centroids")
+    codebooks.repartition(1).write.mode("overwrite")
+      .parquet(s"$path/codebooks")
+    codes(readAnnArtifactsAt(spark, op, path, dim))
       .write.mode("overwrite").parquet(s"$path/codes")
+  }
+
+  /** The (vec_id, cell, codes) rows of `e` under the given artifacts. */
+  private def annCodes(e: DataFrame, artifacts: AnnArtifacts,
+      dim: Int): DataFrame = {
+    val (centroids, books) = artifacts
+    cellsFor(e, centroids, nProbe = 1)
+      .select(col("vec_id"), col("cell"),
+        pqCodeArray(books, col("embedding"), dim).as("codes"))
   }
 
   /** The stored [[writeAnnIndex]] artifacts, back as driver values —
@@ -1488,8 +1485,7 @@ object Similarity {
     * defaults regardless of corpus size.
     */
   private def readAnnArtifacts(spark: org.apache.spark.sql.SparkSession,
-      path: String): (IndexedSeq[IndexedSeq[Float]],
-        IndexedSeq[IndexedSeq[IndexedSeq[Float]]]) = {
+      path: String): AnnArtifacts = {
     val cs = spark.read.parquet(s"$path/centroids").collect()
       .map(r => r.getAs[Int]("cell") ->
         r.getSeq[Float](r.fieldIndex("centroid")).toIndexedSeq)
@@ -1500,6 +1496,20 @@ object Similarity {
     val bks = bkRows.groupBy(_._1).toIndexedSeq.sortBy(_._1)
       .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toIndexedSeq }
     (cs, bks)
+  }
+
+  /** [[readAnnArtifacts]] for a caller that encodes or serves at `dim`:
+    * loud on empty artifacts or on artifacts built for another dim.
+    */
+  private def readAnnArtifactsAt(spark: org.apache.spark.sql.SparkSession,
+      op: String, path: String, dim: Int): AnnArtifacts = {
+    val artifacts @ (centroids, books) = readAnnArtifacts(spark, path)
+    require(centroids.nonEmpty && books.nonEmpty,
+      s"$op: empty index artifacts at $path")
+    require(centroids.head.length == dim,
+      s"$op: stored centroids are dim=${centroids.head.length}, " +
+        s"caller asked dim=$dim")
+    artifacts
   }
 
   /** Serve ANN queries against a persisted [[writeAnnIndex]] — NO
@@ -1526,31 +1536,33 @@ object Similarity {
       source: DataFrame, nQueries: Long = 10, k: Int = 5, nProbe: Int = 6,
       rerank: Int = 200, dim: Int = 64,
       candidateFilter: Option[Column] = None): DataFrame = {
-    val (centroids, books) = readAnnArtifacts(spark, path)
-    require(centroids.nonEmpty && books.nonEmpty,
-      s"annFromIndex: empty index artifacts at $path")
-    require(centroids.head.length == dim,
-      s"annFromIndex: stored centroids are dim=${centroids.head.length}, " +
-        s"caller asked dim=$dim")
-    // filtered vector search ("nearest neighbors WHERE lang = …" —
-    // the metadata+vector query a curation pipeline actually runs):
-    // PRE-filtering, the standard recipe when the predicate is
-    // row-metadata — the allowed id set semi-joins the stored codes
-    // BEFORE the ADC join, so disallowed candidates never reach
-    // scoring and top-k ranks count allowed rows only. Known honest
-    // cost: a probed cell holding few allowed members yields fewer
-    // candidates (raise nProbe for very selective filters). Queries
-    // themselves are NOT filtered — "find allowed neighbors of any
-    // query" is the contract.
-    val corpus0 = spark.read.parquet(s"$path/codes")
-    val corpus = candidateFilter match {
-      case None => corpus0
-      case Some(p) => corpus0.join(
-        registered(source).where(p).select(col("vec_id")), "vec_id")
-    }
-    val e = registered(source).select(col("vec_id"), col("embedding"))
-      .where(pqEncodable(dim))
+    val (centroids, books) =
+      readAnnArtifactsAt(spark, "annFromIndex", path, dim)
+    val (corpus, e) = servedCodes(spark, path, source, dim, candidateFilter)
     adcSearch(centroids, books, corpus, e, nQueries, k, nProbe, rerank, dim)
+  }
+
+  /** The serve legs' two frames: the stored `codes/` and `source`'s
+    * encodable (vec_id, embedding) rows. A `candidateFilter` is
+    * filtered vector search ("nearest neighbors WHERE lang = …" — the
+    * metadata+vector query a curation pipeline actually runs):
+    * PRE-filtering, the standard recipe when the predicate is
+    * row-metadata — the allowed id set semi-joins the stored codes
+    * BEFORE the ADC join, so disallowed candidates never reach scoring
+    * and top-k ranks count allowed rows only. Known honest cost: a
+    * probed cell holding few allowed members yields fewer candidates
+    * (raise nProbe for very selective filters). Queries themselves are
+    * NOT filtered — "find allowed neighbors of any query" is the
+    * contract.
+    */
+  private def servedCodes(spark: org.apache.spark.sql.SparkSession,
+      path: String, source: DataFrame, dim: Int,
+      candidateFilter: Option[Column]): (DataFrame, DataFrame) = {
+    val codes = spark.read.parquet(s"$path/codes")
+    (candidateFilter.fold(codes)(p => codes.join(
+        registered(source).where(p).select(col("vec_id")), "vec_id")),
+      registered(source).select(col("vec_id"), col("embedding"))
+        .where(pqEncodable(dim)))
   }
 
   /** RANGE search against a persisted [[writeAnnIndex]] — the
@@ -1582,75 +1594,38 @@ object Similarity {
       path: String, source: DataFrame, queryPred: Column,
       threshold: Double, nProbe: Int = 6, rerank: Int = 200, dim: Int = 64,
       candidateFilter: Option[Column] = None): DataFrame = {
-    val (centroids, books) = readAnnArtifacts(spark, path)
-    require(centroids.nonEmpty && books.nonEmpty,
-      s"annRangeFromIndex: empty index artifacts at $path")
-    require(centroids.head.length == dim,
-      s"annRangeFromIndex: stored centroids are dim=${centroids.head.length}, " +
-        s"caller asked dim=$dim")
-    val corpus0 = spark.read.parquet(s"$path/codes")
-    val corpus = candidateFilter match {
-      case None => corpus0
-      case Some(p) => corpus0.join(
-        registered(source).where(p).select(col("vec_id")), "vec_id")
-    }
-    val e = registered(source).select(col("vec_id"), col("embedding"))
-      .where(pqEncodable(dim))
+    val (centroids, books) =
+      readAnnArtifactsAt(spark, "annRangeFromIndex", path, dim)
+    val (corpus, e) = servedCodes(spark, path, source, dim, candidateFilter)
     adcRefinedShortlist(centroids, books, corpus, e, queryPred, nProbe,
         rerank, dim)
       .where(!isnan(col("cos_sim")) && col("cos_sim") >= threshold)
   }
 
-  /** Index SURGERY for the persisted ANN family — the
-    * [[graft.operators.Dedup.updateBandIndex]] discipline applied to
-    * [[writeAnnIndex]] artifacts: `retractIds` drop from the stored
-    * codes (one anti-join over 10-byte rows; the retracted vectors'
-    * full precision is never read), `addedVecs` encode against the
-    * STORED centroids + codebooks and append. Deliberately NO
-    * retraining: between full retrains a production deployment keeps
-    * codebooks frozen so stored codes stay comparable — new vectors
-    * must score through the same geometry the existing corpus was
-    * encoded with (retraining is [[writeAnnIndex]]'s job, a separate
-    * scheduled event; the drift between frozen artifacts and the
-    * evolving corpus is what [[graft.operators.Dedup.indexStats]]'
-    * cell-balance row and q_ann_recall exist to watch). Artifacts are
-    * copied to `outPath` FIRST and the new codes derive from the
-    * copies read back off disk — the partial-write rule: `codes/`
-    * existing implies the artifacts it was encoded with do.
-    * Self-overwrite refused (the update reads what it would clobber).
-    *
-    * EXACT contract (spec-asserted): the updated `codes/` row set
-    * equals encoding the post-diff corpus with the SAME stored
-    * artifacts — surgery and a frozen-artifact re-encode cannot
-    * disagree because cell assignment and PQ encoding are
-    * deterministic in (artifacts, vector).
+  /** Index SURGERY for the persisted ANN family: row-set surgery
+    * ([[graft.sources.IndexStore.rows]]) on the stored `codes/`, with
+    * `addedVecs` encoded against the STORED centroids + codebooks,
+    * copied to `outPath` first. Deliberately NO retraining: between
+    * full retrains a production deployment keeps codebooks frozen so
+    * stored codes stay comparable (retraining is [[writeAnnIndex]]'s
+    * job; the drift it leaves is what
+    * [[graft.operators.Dedup.indexStats]]' cell-balance row and
+    * q_ann_recall watch). Cell assignment and PQ encoding are
+    * deterministic in (artifacts, vector), so the result equals
+    * encoding the post-diff corpus with the same stored artifacts.
     */
   def updateAnnIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, outPath: String, retractIds: DataFrame,
       addedVecs: DataFrame, dim: Int = 64): Unit = {
-    require(outPath != indexPath,
-      s"updateAnnIndex cannot overwrite the index it reads ($indexPath)")
-    spark.read.parquet(s"$indexPath/centroids")
-      .repartition(1).write.mode("overwrite").parquet(s"$outPath/centroids")
-    spark.read.parquet(s"$indexPath/codebooks")
-      .repartition(1).write.mode("overwrite").parquet(s"$outPath/codebooks")
-    val (cs, bks) = readAnnArtifacts(spark, outPath)
-    require(cs.nonEmpty && cs.head.length == dim,
-      s"updateAnnIndex: stored centroids are dim=${cs.headOption
-        .map(_.length).getOrElse(0)}, caller asked dim=$dim")
-    val retract = retractIds
-      .select(col(retractIds.columns.head).cast("long").as("vec_id"))
-    val kept = spark.read.parquet(s"$indexPath/codes")
-      .join(retract, Seq("vec_id"), "left_anti")
-    // kept wins over a duplicate add (the updateLshIndex rule): two
-    // code rows for one id would double-count it in every serve probe
-    val added = registered(addedVecs)
-      .select(col("vec_id"), col("embedding")).where(pqEncodable(dim))
-      .join(kept.select(col("vec_id")), Seq("vec_id"), "left_anti")
-    kept.unionByName(cellsFor(added, cs, nProbe = 1)
-        .select(col("vec_id"), col("cell"),
-          pqCodeArray(bks, col("embedding"), dim).as("codes")))
-      .write.mode("overwrite").parquet(s"$outPath/codes")
+    IndexStore.guard(spark, "updateAnnIndex", indexPath, outPath)
+    writeAnnArtifacts(spark, "updateAnnIndex", outPath, dim,
+        spark.read.parquet(s"$indexPath/centroids"),
+        spark.read.parquet(s"$indexPath/codebooks")) { artifacts =>
+      IndexStore.rows(spark.read.parquet(s"$indexPath/codes"), "vec_id",
+        retractIds, annCodes(registered(addedVecs)
+          .select(col("vec_id"), col("embedding")).where(pqEncodable(dim)),
+          artifacts, dim))
+    }
   }
 
   /** [[writeAnnIndex]]'s auto-geometry rule, separated so the
@@ -2529,12 +2504,8 @@ object Similarity {
       srcLang: String = "en", dstLang: String = "de", k: Int = 4,
       nQueries: Long = 200, marginThreshold: Double = 1.05,
       nProbe: Int = 6, rerank: Int = 200, dim: Int = 64): DataFrame = {
-    val (centroids, books) = readAnnArtifacts(spark, path)
-    require(centroids.nonEmpty && books.nonEmpty,
-      s"mineBitextIndexed: empty index artifacts at $path")
-    require(centroids.head.length == dim,
-      s"mineBitextIndexed: stored centroids are dim=${centroids.head.length}, " +
-        s"caller asked dim=$dim")
+    val (centroids, books) =
+      readAnnArtifactsAt(spark, "mineBitextIndexed", path, dim)
     // the lang-joined embedding frame feeds FOUR subtrees (src ids,
     // dst ids, the query batch, the reverse candidate semi-join) —
     // pinned so the serve derives it once (measured 118 s of summed
@@ -2597,12 +2568,8 @@ object Similarity {
       srcLang: String = "en", dstLang: String = "de", k: Int = 4,
       nQueries: Long = 200, marginThreshold: Double = 1.05,
       nProbe: Int = 6, rerank: Int = 200, dim: Int = 64): DataFrame = {
-    val (centroids, books) = readAnnArtifacts(spark, path)
-    require(centroids.nonEmpty && books.nonEmpty,
-      s"mineBitextIndexedDeduped: empty index artifacts at $path")
-    require(centroids.head.length == dim,
-      s"mineBitextIndexedDeduped: stored centroids are " +
-        s"dim=${centroids.head.length}, caller asked dim=$dim")
+    val (centroids, books) =
+      readAnnArtifactsAt(spark, "mineBitextIndexedDeduped", path, dim)
     // the lang-joined embedding frame feeds FOUR subtrees of the
     // composed plan (both star reductions, the forward shortlist, the
     // reverse candidate semi-join) — pinned so the serve reads it

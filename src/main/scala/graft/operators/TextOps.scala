@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Cached
+import graft.sources.IndexStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -975,35 +976,26 @@ object TextOps {
     */
   def writeWinnowIndex(documents: DataFrame, path: String, k: Int = 4,
       w: Int = 5): Unit =
-    winnow(documents, k, w).select(col("doc_id"), col("fp")).distinct()
-      .write.mode("overwrite").parquet(s"$path/fps")
+    winnowRows(documents, k, w).write.mode("overwrite").parquet(s"$path/fps")
 
-  /** Maintain a persisted winnow index across a re-crawl — the
-    * index-surgery leg ([[graft.operators.Dedup.updateBandIndex]]'s
-    * seam) for the fingerprint family: `retractIds` drop from the
-    * stored rows (one anti-join over ~23-byte rows; retracted
-    * documents' text is never read), `addedDocs` winnow fresh under
-    * the SAME (k, w) and append. EXACT contract (fuzz-spec-asserted
-    * in IncrementalFuzzSpec): fingerprint selection is per-doc
-    * deterministic in the text, so the surgered `fps/` row SET equals
-    * a scratch [[writeWinnowIndex]] over the post-diff corpus —
-    * bit-equal, with only the changed slice ever re-tokenized.
-    * `outPath` must differ from `indexPath` (parquet cannot overwrite
-    * its own scan — the corpus-store versioning discipline). Caller
-    * contract: the same (k, w) the index was written with (geometry is
-    * baked into the stored fingerprints).
+  /** The per-doc distinct (doc_id, fp) rows a winnow index stores. */
+  private def winnowRows(documents: DataFrame, k: Int, w: Int): DataFrame =
+    winnow(documents, k, w).select(col("doc_id"), col("fp")).distinct()
+
+  /** Maintain a persisted winnow index across a re-crawl: row-set
+    * surgery ([[graft.sources.IndexStore.rows]]) on the stored `fps/`
+    * rows, with `addedDocs` winnowed here under the SAME (k, w) the
+    * index was written with. Fingerprint selection is per-doc
+    * deterministic in the text, so the result equals a scratch
+    * [[writeWinnowIndex]] over the post-diff corpus while only the
+    * changed slice is re-tokenized.
     */
   def updateWinnowIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, outPath: String, retractIds: DataFrame,
       addedDocs: DataFrame, k: Int = 4, w: Int = 5): Unit = {
-    require(outPath != indexPath,
-      s"updateWinnowIndex cannot overwrite the index it reads ($indexPath)")
-    val retract = retractIds
-      .select(col(retractIds.columns.head).cast("long").as("doc_id"))
-    spark.read.parquet(s"$indexPath/fps")
-      .join(retract, Seq("doc_id"), "left_anti")
-      .unionByName(
-        winnow(addedDocs, k, w).select(col("doc_id"), col("fp")).distinct())
+    IndexStore.guard(spark, "updateWinnowIndex", indexPath, outPath)
+    IndexStore.rows(spark.read.parquet(s"$indexPath/fps"), "doc_id",
+        retractIds, winnowRows(addedDocs, k, w))
       .write.mode("overwrite").parquet(s"$outPath/fps")
   }
 
@@ -1200,16 +1192,25 @@ object TextOps {
     // q_word_entropy at sf0.1). The unrounded division of an
     // exact-decimal cast by an integer is IEEE-deterministic in both
     // engines — bit-identical with no rounding step at all.
-    tf.join(freq, "tok")
-      .crossJoin(broadcast(total))
+    meanLogProb(tf.join(freq, "tok").crossJoin(broadcast(total)), lp,
+      "n_tokens")
+  }
+
+  /** Per-doc (doc_id, `n`, avg_logprob) over a (doc_id, tf, …) frame:
+    * `lp` summed as DECIMAL × tf (fold-order-free) and ONE unrounded
+    * IEEE division by the tf total — the scoring tail shared by the
+    * unigram and bigram LM legs.
+    */
+  private def meanLogProb(scored: DataFrame, lp: Column, n: String)
+      : DataFrame =
+    scored
       .select(col("doc_id"), col("tf"),
         (col("tf").cast("decimal(10,0)") * lp).as("contrib"))
       .groupBy("doc_id")
-      .agg(sum(col("tf")).as("n_tokens"), sum(col("contrib")).as("sum_lp"))
-      .select(col("doc_id"), col("n_tokens"),
-        (col("sum_lp").cast("double") / col("n_tokens").cast("double"))
+      .agg(sum(col("tf")).as(n), sum(col("contrib")).as("sum_lp"))
+      .select(col("doc_id"), col(n),
+        (col("sum_lp").cast("double") / col(n).cast("double"))
           .as("avg_logprob"))
-  }
 
   /** Per-source KL divergence from the corpus unigram distribution
     * (r9) — the domain-drift diagnostic a mixing pass reads next to
@@ -1443,39 +1444,18 @@ object TextOps {
     * keys.
     */
   def bigramLogProb(documents: DataFrame): DataFrame = {
-    // bigrams come from the EMPTY-FILTERED token stream so P(w2|w1)
-    // is a distribution over the same vocabulary V it smooths with —
-    // a doc with doubled/trailing spaces must not score phantom ""
-    // transitions (the one per-doc `filter` lambda is off the hot
-    // path; the exploded shingle work stays codegen'd)
-    val toks = filter(tokenize(col("text")), t => t =!= "")
-    val bg = documents
-      .where(size(toks) >= 2)
-      .select(col("doc_id"), explode(shingleStructs(toks, 2)).as("z"))
-      .select(col("doc_id"), col("z").getField("0").as("w1"),
-        col("z").getField("1").as("w2"))
     // pinned as in unigramLogProb: the pair-frequency chain
     // and the final join both read tf — un-materialized, the bigram
     // explode runs twice
-    val tf = Cached.pin(
-      bg.groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("tf")))
+    val tf = Cached.pin(lmBigrams(documents, "doc_id")
+      .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("tf")))
     val pairFreq = tf.groupBy("w1", "w2").agg(sum(col("tf")).as("n_pair"))
     val firstFreq = pairFreq.groupBy("w1").agg(sum(col("n_pair")).as("n_first"))
-    val vocab = documents.select(explode(toks).as("tok"))
+    val vocab = documents.select(explode(lmTokens).as("tok"))
       .where(col("tok") =!= "")
       .agg(countDistinct(col("tok")).as("v"))
-    val lp = round(log((col("n_pair") + 1).cast("double") /
-        (col("n_first") + col("v")).cast("double")), 6)
-      .cast("decimal(12,6)")
-    tf.join(pairFreq, Seq("w1", "w2")).join(firstFreq, "w1")
-      .crossJoin(broadcast(vocab))
-      .select(col("doc_id"), col("tf"),
-        (col("tf").cast("decimal(10,0)") * lp).as("contrib"))
-      .groupBy("doc_id")
-      .agg(sum(col("tf")).as("n_bigrams"), sum(col("contrib")).as("sum_lp"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (col("sum_lp").cast("double") / col("n_bigrams").cast("double"))
-          .as("avg_logprob"))
+    meanLogProb(tf.join(pairFreq, Seq("w1", "w2")).join(firstFreq, "w1")
+      .crossJoin(broadcast(vocab)), lmLogProb(col("v")), "n_bigrams")
   }
 
   /** Persist a corpus's add-one-smoothed bigram LM — the frozen
@@ -1493,19 +1473,42 @@ object TextOps {
     * corpus token stream — everything [[lmScoreFrom]] needs, at
     * O(distinct bigrams) rows, with the training text never re-read.
     */
-  def writeLmIndex(documents: DataFrame, path: String): Unit = {
-    val toks = filter(tokenize(col("text")), t => t =!= "")
-    val pairCounts = documents
-      .where(size(toks) >= 2)
-      .select(explode(shingleStructs(toks, 2)).as("z"))
-      .select(col("z").getField("0").as("w1"),
-        col("z").getField("1").as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("n_pair"))
-    val vocabCounts = documents.select(explode(toks).as("tok"))
-      .where(col("tok") =!= "")
-      .groupBy("tok").agg(count(lit(1)).as("n_occ"))
-    writeLmArtifacts(documents.sparkSession, path, pairCounts, vocabCounts)
+  def writeLmIndex(documents: DataFrame, path: String): Unit =
+    writeLmArtifacts(documents.sparkSession, path, lmPairCounts(documents),
+      lmTokenCounts(documents))
+
+  /** The LM family's token stream: whitespace tokens with empties
+    * dropped, so P(w2|w1) is a distribution over the same vocabulary V
+    * it smooths with — a doc with doubled/trailing spaces must not
+    * score phantom "" transitions (the one per-doc `filter` lambda is
+    * off the hot path; the exploded shingle work stays codegen'd).
+    */
+  private[graft] def lmTokens: Column =
+    filter(tokenize(col("text")), t => t =!= "")
+
+  /** One (carry..., w1, w2) row per adjacent pair of [[lmTokens]]; a doc
+    * with fewer than two tokens emits none. The one bigram stream of
+    * the LM legs, batch and streaming, and of the DSIR features.
+    */
+  private[graft] def lmBigrams(docs: DataFrame, carry: String*): DataFrame = {
+    val toks = lmTokens
+    val keep = carry.map(col)
+    docs.where(size(toks) >= 2)
+      .select(keep :+ explode(shingleStructs(toks, 2)).as("z"): _*)
+      .select(keep ++ Seq(col("z").getField("0").as("w1"),
+        col("z").getField("1").as("w2")): _*)
   }
+
+  /** The LM model's count frames: (w1, w2, n_pair) bigram counts and
+    * (tok, n_occ) token counts — what [[writeLmIndex]] stores and
+    * [[updateLmIndex]] retracts and adds.
+    */
+  private def lmPairCounts(docs: DataFrame): DataFrame =
+    lmBigrams(docs).groupBy("w1", "w2").agg(count(lit(1)).as("n_pair"))
+
+  private def lmTokenCounts(docs: DataFrame): DataFrame =
+    docs.select(explode(lmTokens).as("tok")).where(col("tok") =!= "")
+      .groupBy("tok").agg(count(lit(1)).as("n_occ"))
 
   /** The write half shared by [[writeLmIndex]] and [[updateLmIndex]]:
     * pairs first, then marginals and the vocab-size scalar DERIVED
@@ -1527,51 +1530,28 @@ object TextOps {
       .write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** Maintain a persisted LM across a re-crawl — the index-surgery
-    * leg ([[graft.operators.Dedup.updateBandIndex]]'s seam) with a
-    * property the sketch families don't have: bigram and token
-    * counts form an exact MONOID, so retract = subtract, add = add,
-    * and the surgered index is BIT-EQUAL to a scratch
-    * [[writeLmIndex]] over the post-diff corpus (spec-asserted) —
-    * not "equal under frozen artifacts", actually equal. Pass the
-    * retracted slice's DOCUMENTS (the snapshotDiff `removed` +
-    * `changed` old rows — only the changed slices are ever
-    * re-tokenized; the stored corpus contributes its count rows) and
-    * the added slice. Counts reaching zero DROP their rows: a fully
-    * retracted token must leave the vocabulary (V), and an absent
-    * pair row scores identically to a zero row by the
-    * [[lmLogProb]] coalesce — pruning keeps the artifacts
-    * rebuild-identical. `outPath` must differ from `indexPath`
-    * (parquet cannot overwrite its own scan — the corpus-store
-    * versioning discipline).
+  /** Maintain a persisted LM across a re-crawl: count surgery
+    * ([[graft.sources.IndexStore.counts]]) on the stored pair and token
+    * counts, bit-equal to a scratch [[writeLmIndex]] over the post-diff
+    * corpus. A fully retracted token leaves V; an absent pair row scores
+    * as a zero row by the [[lmLogProb]] coalesce. Pass the retracted
+    * slice's DOCUMENTS (the snapshotDiff `removed` + `changed` old
+    * rows): only the changed slices are re-tokenized.
     */
   def updateLmIndex(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, outPath: String, retractDocs: DataFrame,
       addedDocs: DataFrame): Unit = {
-    require(outPath != indexPath,
-      s"updateLmIndex cannot overwrite the index it reads ($indexPath)")
-    val toks = filter(tokenize(col("text")), t => t =!= "")
-    def pairDelta(docs: DataFrame, sign: Int) = docs
-      .where(size(toks) >= 2)
-      .select(explode(shingleStructs(toks, 2)).as("z"))
-      .select(col("z").getField("0").as("w1"),
-        col("z").getField("1").as("w2"))
-      .groupBy("w1", "w2").agg((count(lit(1)) * sign).as("n_pair"))
-    def vocabDelta(docs: DataFrame, sign: Int) = docs
-      .select(explode(toks).as("tok"))
-      .where(col("tok") =!= "")
-      .groupBy("tok").agg((count(lit(1)) * sign).as("n_occ"))
-    val pairs = spark.read.parquet(s"$indexPath/pairs")
-      .unionByName(pairDelta(retractDocs, -1))
-      .unionByName(pairDelta(addedDocs, 1))
-      .groupBy("w1", "w2").agg(sum(col("n_pair")).as("n_pair"))
-      .where(col("n_pair") > 0)
-    val vocab = spark.read.parquet(s"$indexPath/vocab")
-      .unionByName(vocabDelta(retractDocs, -1))
-      .unionByName(vocabDelta(addedDocs, 1))
-      .groupBy("tok").agg(sum(col("n_occ")).as("n_occ"))
-      .where(col("n_occ") > 0)
-    writeLmArtifacts(spark, outPath, pairs, vocab)
+    IndexStore.guard(spark, "updateLmIndex", indexPath, outPath)
+    def surgery(part: String, keys: Seq[String],
+        build: DataFrame => DataFrame)(write: DataFrame => Unit) =
+      IndexStore.counts("updateLmIndex",
+        spark.read.parquet(s"$indexPath/$part"), keys, build(retractDocs),
+        build(addedDocs))(write)
+    surgery("pairs", Seq("w1", "w2"), lmPairCounts) { pairs =>
+      surgery("vocab", Seq("tok"), lmTokenCounts) { vocab =>
+        writeLmArtifacts(spark, outPath, pairs, vocab)
+      }
+    }
   }
 
   /** The frozen-model Laplace log-probability over joined
@@ -1630,24 +1610,11 @@ object TextOps {
     */
   def lmScoreFrom(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, newDocs: DataFrame): DataFrame = {
-    val toks = filter(tokenize(col("text")), t => t =!= "")
-    val tf = newDocs
-      .where(size(toks) >= 2)
-      .select(col("doc_id"), explode(shingleStructs(toks, 2)).as("z"))
-      .select(col("doc_id"), col("z").getField("0").as("w1"),
-        col("z").getField("1").as("w2"))
+    val tf = lmBigrams(newDocs, "doc_id")
       .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("tf"))
     val (pairs, firsts, vocabSize) = readLmArtifacts(spark, indexPath)
-    val lp = lmLogProb(lit(vocabSize))
-    tf.join(pairs, Seq("w1", "w2"), "left")
-      .join(firsts, Seq("w1"), "left")
-      .select(col("doc_id"), col("tf"),
-        (col("tf").cast("decimal(10,0)") * lp).as("contrib"))
-      .groupBy("doc_id")
-      .agg(sum(col("tf")).as("n_bigrams"), sum(col("contrib")).as("sum_lp"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (col("sum_lp").cast("double") / col("n_bigrams").cast("double"))
-          .as("avg_logprob"))
+    meanLogProb(tf.join(pairs, Seq("w1", "w2"), "left")
+      .join(firsts, Seq("w1"), "left"), lmLogProb(lit(vocabSize)), "n_bigrams")
   }
 
   /** Feature-hashing document vectorizer, sparse form — the text →

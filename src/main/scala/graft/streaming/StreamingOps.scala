@@ -427,17 +427,10 @@ object StreamingOps {
   def lmScoreDocStream(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, docs: DataFrame, windowLen: String = "1 minute",
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    import graft.functions.TextFunctions.{shingleStructs, tokenize}
     val (pairs, firsts, vocab) =
       graft.operators.TextOps.readLmArtifacts(spark, indexPath)
-    val toks = filter(tokenize(col("text")), t => t =!= "")
-    docs
-      .withWatermark("ingest_ts", watermarkDelay)
-      .where(size(toks) >= 2)
-      .select(col("doc_id"), col("ingest_ts"),
-        explode(shingleStructs(toks, 2)).as("z"))
-      .select(col("doc_id"), col("ingest_ts"),
-        col("z").getField("0").as("w1"), col("z").getField("1").as("w2"))
+    graft.operators.TextOps.lmBigrams(
+        docs.withWatermark("ingest_ts", watermarkDelay), "doc_id", "ingest_ts")
       .join(pairs, Seq("w1", "w2"), "left")
       .join(firsts, Seq("w1"), "left")
       .groupBy(window(col("ingest_ts"), windowLen), col("doc_id"))

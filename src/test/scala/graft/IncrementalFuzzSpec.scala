@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Curation, Dedup, Similarity, TextOps}
 
 /** Randomized differential fuzz for the cross-snapshot exactness
   * contracts: over generated corpora with planted families, verbatim
@@ -423,5 +423,73 @@ class IncrementalFuzzSpec extends SparkSuite {
           .toDF("doc_id", "text", "lang", "source"))
     }
     assert(err.getMessage.contains("negative"), err.getMessage)
+    // LM and DSIR counts follow the same rule: the phantom retract
+    // fails loud instead of dropping (LM) or keeping (DSIR) the
+    // negative count
+    val noDocs = Seq.empty[(Long, String, String, String)]
+      .toDF("doc_id", "text", "lang", "source")
+    val (ma, mb) = (dirFor("lm-a"), dirFor("lm-b"))
+    TextOps.writeLmIndex(oneDoc, ma)
+    val lmErr = intercept[IllegalArgumentException] {
+      TextOps.updateLmIndex(spark, ma, mb, phantom, noDocs)
+    }
+    assert(lmErr.getMessage.contains("negative"), lmErr.getMessage)
+    val (da, db) = (dirFor("dsir-a"), dirFor("dsir-b"))
+    Curation.writeDsirIndex(oneDoc, da)
+    val dsirErr = intercept[IllegalArgumentException] {
+      Curation.updateDsirIndex(spark, da, db, phantom, noDocs)
+    }
+    assert(dsirErr.getMessage.contains("negative"), dsirErr.getMessage)
+    // band, winnow and perceptual rows: re-adding every stored id with
+    // nothing retracted is the identity (one row set per id, not two)
+    def multiset(p: String) = spark.read.parquet(p).collect()
+      .map(_.toString).sorted.toSeq
+    val docs = (0 until 6).map(i => (i.toLong,
+        s"w$i alpha beta gamma delta epsilon zeta eta theta iota kappa $i",
+        "en", "web")).toDF("doc_id", "text", "lang", "source")
+    val (ba, bb) = (dirFor("band-a"), dirFor("band-b"))
+    Dedup.writeBandIndex(docs, ba)
+    Dedup.updateBandIndex(spark, ba, bb, noRetract, docs)
+    for (part <- Seq("sigs", "bands"))
+      assert(multiset(s"$bb/$part") == multiset(s"$ba/$part"),
+        s"duplicate adds must not double band $part rows")
+    val (wa, wb) = (dirFor("winnow-a"), dirFor("winnow-b"))
+    TextOps.writeWinnowIndex(docs, wa)
+    TextOps.updateWinnowIndex(spark, wa, wb, noRetract, docs)
+    assert(multiset(s"$wa/fps").nonEmpty)
+    assert(multiset(s"$wb/fps") == multiset(s"$wa/fps"),
+      "duplicate adds must not double fingerprint rows")
+    val hashes = (0 until 6).map(i => (i.toLong, i * 7919L))
+      .toDF("doc_id", "h64")
+    val (pa, pb) = (dirFor("phash-a"), dirFor("phash-b"))
+    Dedup.writePerceptualIndex(hashes, pa)
+    Dedup.updatePerceptualIndex(spark, pa, pb, noRetract, hashes)
+    assert(multiset(s"$pb/hashes") == multiset(s"$pa/hashes"),
+      "duplicate adds must not double hash rows")
+  }
+
+  test("every index update refuses to write the index it reads, " +
+      "however the path is spelled") {
+    val p = java.nio.file.Files.createTempDirectory("graft-guard").toString
+    val docs = Seq((0L, "a b c d e f g h", "en", "web"))
+      .toDF("doc_id", "text", "lang", "source")
+    val ids = Seq.empty[Long].toDF("id")
+    val vecs = Seq((0L, Array.fill(64)(0.125f))).toDF("vec_id", "embedding")
+    val hashes = Seq((0L, 1L)).toDF("doc_id", "h64")
+    val updates = Seq[(String, String => Unit)](
+      "band" -> (out => Dedup.updateBandIndex(spark, p, out, ids, docs)),
+      "gram" -> (out => Dedup.updateGramIndex(spark, p, out, docs, docs)),
+      "perceptual" ->
+        (out => Dedup.updatePerceptualIndex(spark, p, out, ids, hashes)),
+      "winnow" -> (out => TextOps.updateWinnowIndex(spark, p, out, ids, docs)),
+      "lm" -> (out => TextOps.updateLmIndex(spark, p, out, docs, docs)),
+      "dsir" -> (out => Curation.updateDsirIndex(spark, p, out, docs, docs)),
+      "lsh" -> (out => Similarity.updateLshIndex(spark, p, out, ids, vecs)),
+      "ann" -> (out => Similarity.updateAnnIndex(spark, p, out, ids, vecs)))
+    for ((kind, update) <- updates; out <- Seq(p + "/", "file:" + p)) {
+      val e = intercept[IllegalArgumentException](update(out))
+      assert(e.getMessage.contains("cannot overwrite the index it reads"),
+        s"$kind with out=$out: ${e.getMessage}")
+    }
   }
 }
