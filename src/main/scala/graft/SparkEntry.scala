@@ -358,9 +358,11 @@ object SparkEntry {
       MultimodalOps.imageProfile(imagesOf(s, d),
         minSide = 16, minEntropy = 1.2)))
 
-  /** Memoized fused audio-profile frame — one full-corpus WAV decode
-    * per (session, dir) serving the gate (q_audio_filter) and the
-    * composed media pipeline's audio leg.
+  /** Memoized fused audio-profile frame — the one full-corpus WAV
+    * decode per (session, dir), serving the gate (q_audio_filter), the
+    * stats (q_audio_meta), the ANN envelopes (q_audio_ann), the
+    * hashes (q_audio_dedup) and the composed media pipeline's audio
+    * leg.
     */
   private def audioProfilesOf(s: SparkSession, d: String) =
     memo(s, d, "audioprofiles")(
@@ -1459,15 +1461,16 @@ object SparkEntry {
     // envelope is flattened to csv in the REGISTERED view only (the
     // q_embed_quantize precedent: array columns crash the driver's
     // pandas row sort) — pipelines keep the array via
-    // AudioOps.extractAudioFeatures directly
+    // AudioOps.audioProfile directly
     "q_audio_meta" -> ((s, d) => {
       import org.apache.spark.sql.functions.{array_join, col, transform}
-      AudioOps.extractAudioFeatures(audioOf(s, d)).toDF(
-        "doc_id", "sample_rate", "channels", "n_samples", "duration_ms",
-        "rms", "zcr", "silence_ratio", "peak", "decoded", "envelope")
-        .withColumn("envelope_csv",
-          array_join(transform(col("envelope"), _.cast("string")), ","))
-        .drop("envelope")
+      audioProfilesOf(s, d).select(col("docId").as("doc_id"),
+        col("sampleRate").as("sample_rate"), col("channels"),
+        col("nSamples").as("n_samples"), col("durationMs").as("duration_ms"),
+        col("rms"), col("zcr"), col("silenceRatio").as("silence_ratio"),
+        col("peak"), col("decoded"),
+        array_join(transform(col("envelope"), _.cast("string")), ",")
+          .as("envelope_csv"))
     }),
     // real decode -> energy-delta hash -> the simhash family's
     // pigeonhole band join. The synthetic clips are all-distinct
@@ -1500,8 +1503,7 @@ object SparkEntry {
     // the audio -> ANN bridge: real decode -> 8-bin time-energy
     // envelope -> the embedding family's exact annTopK
     "q_audio_ann" -> ((s, d) => Similarity.annTopK(
-      memo(s, d, "audioenvelopes")(
-        Cached.pin(AudioOps.envelopes(audioOf(s, d)))))),
+      AudioOps.envelopes(audioProfilesOf(s, d)))),
     // rows-only (binary AVI parse): REAL video decode — AVI/MJPEG
     // container parse + per-frame JPEG decode; the testdata has no
     // binary column, so syntheticVideos packs one deterministic

@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions.col
   * opaque attachments; a training-data pipeline needs the decode /
   * feature / gate / dedup passes per modality). Same shape as
   * [[MultimodalOps]]: opaque binary payloads + metadata in, decoded
-  * rows out ([[audioProfile]] for the gate and the perceptual hash,
-  * [[extractAudioFeatures]] / [[envelopes]] for the stats and the ANN
-  * feature), `mapPartitions` over case-class rows.
+  * rows out: one [[audioProfile]] row per clip carries the gate, the
+  * stats, the ANN envelope and the perceptual hash, and every audio
+  * door ([[audioFilter]], [[envelopes]], the dedup band join, the
+  * streaming gate) reads it. `mapPartitions` over case-class rows.
   *
   * WAV/RIFF payloads (PCM 8/16-bit, any channel count) are decoded
   * for REAL with a hand-rolled chunk parser — zero external
@@ -26,19 +27,6 @@ import org.apache.spark.sql.functions.col
 object AudioOps {
 
   case class AudioRow(docId: Long, payload: Array[Byte], format: String)
-
-  /** Per-clip decoded features. `envelope` is the 8-bin time-energy
-    * envelope normalized to sum 1 (the audio analog of the image
-    * luminance histogram): duration-invariant and gain-invariant, so
-    * re-encoded / volume-normalized variants of a clip land near each
-    * other under cosine — the feature the ANN bridge consumes.
-    * Undecodable rows carry zeroed stats and an all-zero envelope
-    * with `decoded = false`; consumers gate on the flag.
-    */
-  case class AudioFeatures(docId: Long, sampleRate: Int, channels: Int,
-      nSamples: Int, durationMs: Double, rms: Double, zcr: Double,
-      silenceRatio: Double, peak: Double, decoded: Boolean,
-      envelope: Array[Float])
 
   case class AudioGate(docId: Long, durationMs: Double, rms: Double,
       peak: Double, keep: Boolean, failReasons: String)
@@ -142,132 +130,117 @@ object AudioOps {
     Some(h)
   }
 
+  /** Audio quality gate with NAMED failure reasons, projected from the
+    * profile frame — the [[MultimodalOps.imageFilter]] / gopherGate
+    * analog for clips: `not_audio` / `undecodable` / `too_short` /
+    * `silent` / `clipped`. Duration, rms and peak are EMITTED (rms/peak
+    * rounded to 6dp here) so consumers re-cut the gate without
+    * re-decoding 100 TB. The thresholds are [[audioProfile]]'s
+    * arguments.
+    */
+  def audioFilter(profiles: Dataset[AudioProfile]): Dataset[AudioGate] = {
+    implicit val enc = Encoders.product[AudioGate]
+    profiles.map(p => AudioGate(p.docId, p.durationMs,
+      math.rint(p.rms * 1e6) / 1e6, math.rint(p.peak * 1e6) / 1e6,
+      p.keep, p.failReasons))
+  }
+
+  /** One row per clip from ONE decode: the gate fields of
+    * [[audioFilter]], the clip stats, the 8-bin time-energy envelope
+    * of [[envelopes]] AND the perceptual energy hash
+    * ([[energyHash64]]) — the audio member of the decode-once profile
+    * family ([[MultimodalOps.imageProfile]]). `envelope` is normalized
+    * to sum 1 (the audio analog of the image luminance histogram):
+    * duration- and gain-invariant, so re-encoded / volume-normalized
+    * variants of a clip land near each other under cosine. `rms` and
+    * `peak` are raw. `hashValid` carries [[energyHash64]]'s own
+    * degeneracy rule: undecodable, non-audio, too-short (< 2
+    * samples/frame) and digitally-silent clips all hash degenerately
+    * (an all-zero energy profile ties every frame delta) and would
+    * pair unrelated clips in the band join, so the dedup excludes
+    * every row without it — even when the gate thresholds are
+    * caller-loosened. Non-audio and undecodable rows (a null payload
+    * among them) carry zeroed stats and an all-zero envelope with
+    * `decoded = false`; a WAV with zero samples decodes and gates
+    * `too_short,silent`.
+    */
+  case class AudioProfile(docId: Long, decoded: Boolean, sampleRate: Int,
+      channels: Int, nSamples: Int, durationMs: Double, rms: Double,
+      zcr: Double, silenceRatio: Double, peak: Double,
+      envelope: Array[Float], ehash: Long, hashValid: Boolean,
+      keep: Boolean, failReasons: String)
+
   private val SilenceAmp = 0.01
 
-  private def features(m: AudioRow, maxSamples: Long): AudioFeatures =
-    (if (m.format == "audio") decodeWav(m.payload, maxSamples)
-     else None) match {
-      case None =>
-        AudioFeatures(m.docId, 0, 0, 0, 0.0, 0.0, 0.0, 0.0, 0.0,
-          decoded = false, Array.fill(8)(0f))
+  /** [[audioProfile]] for one clip — the only code that turns an
+    * audio payload into decoded values, shared with the streaming
+    * gate ([[graft.streaming.StreamingOps.audioDupDocStream]]).
+    */
+  private[graft] def audioProfileRow(m: AudioRow, minMs: Double = 250.0,
+      minRms: Double = 0.005, maxClipFrac: Double = 0.1,
+      maxSamples: Long = DefaultMaxSamples): AudioProfile = {
+    def failed(reason: String) = AudioProfile(m.docId, decoded = false,
+      0, 0, 0, 0.0, 0.0, 0.0, 0.0, 0.0, Array.fill(8)(0f), 0L,
+      hashValid = false, keep = false, reason)
+    if (m.format != "audio") failed("not_audio")
+    else Option(m.payload).flatMap(decodeWav(_, maxSamples)) match {
+      case None => failed("undecodable")
       case Some(p) =>
         val n = p.mono.length
-        var sumSq = 0.0; var peak = 0.0; var silent = 0L; var cross = 0L
+        var sumSq = 0.0; var peak = 0.0
+        var clipped = 0L; var silent = 0L; var cross = 0L
         val env = Array.ofDim[Double](8)
         var i = 0
         while (i < n) {
           val s = p.mono(i)
-          sumSq += s * s
           val a = math.abs(s)
+          sumSq += s * s
           if (a > peak) peak = a
+          if (a >= 0.985) clipped += 1
           if (a < SilenceAmp) silent += 1
           if (i > 0 && (s > 0) != (p.mono(i - 1) > 0)) cross += 1
           env(((i.toLong * 8) / n).toInt) += s * s
           i += 1
         }
+        val durMs = n * 1000.0 / p.sampleRate
+        val rms = if (n > 0) math.sqrt(sumSq / n) else 0.0
         val envSum = env.sum
-        val envN =
+        val reasons = Seq(
+          if (durMs < minMs) "too_short" else "",
+          if (rms < minRms) "silent" else "",
+          if (n > 0 && clipped.toDouble / n > maxClipFrac) "clipped"
+          else "").filter(_.nonEmpty)
+        val h = energyHash64(p.mono)
+        AudioProfile(m.docId, decoded = true, p.sampleRate, p.channels, n,
+          durMs, rms,
+          if (n > 1) cross.toDouble / (n - 1) else 0.0,
+          if (n > 0) silent.toDouble / n else 0.0, peak,
           if (envSum > 0) env.map(v => (v / envSum).toFloat)
-          else Array.fill(8)(0f)
-        AudioFeatures(m.docId, p.sampleRate, p.channels, n,
-          durationMs = n * 1000.0 / p.sampleRate,
-          rms = if (n > 0) math.sqrt(sumSq / n) else 0.0,
-          zcr = if (n > 1) cross.toDouble / (n - 1) else 0.0,
-          silenceRatio = if (n > 0) silent.toDouble / n else 0.0,
-          peak = peak, decoded = n > 0, envelope = envN)
+          else Array.fill(8)(0f),
+          h.getOrElse(0L), h.isDefined, reasons.isEmpty, reasons.mkString(","))
     }
-
-  /** Typed batched decode → per-clip features. Partition-local map,
-    * no shuffle: the input partitioning is the decode parallelism
-    * (batch size must never change results, asserted in AudioOpsSpec).
-    */
-  def extractAudioFeatures(audio: Dataset[AudioRow], batchSize: Int = 64,
-      maxSamples: Long = DefaultMaxSamples): Dataset[AudioFeatures] = {
-    implicit val enc = Encoders.product[AudioFeatures]
-    audio.mapPartitions(_.grouped(batchSize).flatMap(batch =>
-      batch.map(features(_, maxSamples))))
   }
-
-  /** Audio quality gate with NAMED failure reasons, projected from the
-    * profile frame — the [[MultimodalOps.imageFilter]] / gopherGate
-    * analog for clips: `not_audio` / `undecodable` / `too_short` /
-    * `silent` / `clipped`. Duration, rms and peak are EMITTED (rms/peak
-    * 6dp) so consumers re-cut the gate without re-decoding 100 TB. The
-    * thresholds are [[audioProfile]]'s arguments.
-    */
-  def audioFilter(profiles: Dataset[AudioProfile]): Dataset[AudioGate] = {
-    implicit val enc = Encoders.product[AudioGate]
-    profiles.map(p => AudioGate(p.docId, p.durationMs, p.rms, p.peak,
-      p.keep, p.failReasons))
-  }
-
-  /** One row per clip from ONE decode: the gate fields of
-    * [[audioFilter]] AND the perceptual energy hash
-    * ([[energyHash64]]) — the audio member of the decode-once profile
-    * family ([[MultimodalOps.imageProfile]]). `hashValid` carries
-    * [[energyHash64]]'s own degeneracy rule: undecodable, non-audio,
-    * too-short (< 2 samples/frame) and digitally-silent clips all
-    * hash degenerately (an all-zero energy profile ties every frame
-    * delta) and would pair unrelated clips in the band join, so the
-    * dedup excludes every row without it — even when the gate
-    * thresholds are caller-loosened.
-    */
-  case class AudioProfile(docId: Long, decoded: Boolean, durationMs: Double,
-      rms: Double, peak: Double, ehash: Long, hashValid: Boolean,
-      keep: Boolean, failReasons: String)
 
   def audioProfile(audio: Dataset[AudioRow], minMs: Double = 250.0,
       minRms: Double = 0.005, maxClipFrac: Double = 0.1,
       maxSamples: Long = DefaultMaxSamples): Dataset[AudioProfile] = {
     implicit val enc = Encoders.product[AudioProfile]
-    audio.mapPartitions(_.map { m =>
-      if (m.format != "audio")
-        AudioProfile(m.docId, decoded = false, 0.0, 0.0, 0.0, 0L,
-          hashValid = false, keep = false, "not_audio")
-      else decodeWav(m.payload, maxSamples) match {
-        case None =>
-          AudioProfile(m.docId, decoded = false, 0.0, 0.0, 0.0, 0L,
-            hashValid = false, keep = false, "undecodable")
-        case Some(p) =>
-          val n = p.mono.length
-          var sumSq = 0.0; var peak = 0.0; var clipped = 0L
-          var i = 0
-          while (i < n) {
-            val a = math.abs(p.mono(i))
-            sumSq += a * a
-            if (a > peak) peak = a
-            if (a >= 0.985) clipped += 1
-            i += 1
-          }
-          val durMs = n * 1000.0 / p.sampleRate
-          val rms = if (n > 0) math.sqrt(sumSq / n) else 0.0
-          val reasons = Seq(
-            if (durMs < minMs) "too_short" else "",
-            if (rms < minRms) "silent" else "",
-            if (n > 0 && clipped.toDouble / n > maxClipFrac) "clipped"
-            else "").filter(_.nonEmpty)
-          val h = energyHash64(p.mono)
-          AudioProfile(m.docId, decoded = true, durMs,
-            math.rint(rms * 1e6) / 1e6, math.rint(peak * 1e6) / 1e6,
-            h.getOrElse(0L), h.isDefined,
-            reasons.isEmpty, reasons.mkString(","))
-      }
-    })
+    audio.mapPartitions(_.map(
+      audioProfileRow(_, minMs, minRms, maxClipFrac, maxSamples)))
   }
 
   /** The (vec_id, embedding) envelope frame of the audio → ANN
-    * bridge: real decode → 8-bin time-energy envelope, decoded and
-    * non-silent clips only (an all-zero envelope is cosine-undefined
-    * and would rank arbitrarily). The caller pins it and ranks it with
-    * [[Similarity.annTopK]], unchanged — the same composition as
+    * bridge, projected from the profile frame: decoded and non-silent
+    * clips only (an all-zero envelope is cosine-undefined and would
+    * rank arbitrarily). The caller pins `profiles` and ranks the frame
+    * with [[Similarity.annTopK]], unchanged — the same composition as
     * [[MultimodalOps.imageAnnTopK]] (annTopK reads the frame from both
-    * the query and corpus subtrees, so an unpinned frame decodes every
-    * clip twice).
+    * the query and corpus subtrees, so an unpinned profile decodes
+    * every clip twice).
     */
-  def envelopes(audio: Dataset[AudioRow]): DataFrame =
-    extractAudioFeatures(audio).toDF()
-      .where(col("decoded"))
-      .where(col("rms") > 0.0)
+  def envelopes(profiles: Dataset[AudioProfile]): DataFrame =
+    profiles.toDF()
+      .where(col("decoded") && col("rms") > 0.0)
       .select(col("docId").as("vec_id"), col("envelope").as("embedding"))
 
   /** Deterministic token-segment WAV per document — the registry /

@@ -104,7 +104,7 @@ object MultimodalOps {
     * stable under re-encoding, resizing and small local edits, with
     * hamming distance as the near-dup measure.
     */
-  private[operators] def dhash64(img: java.awt.image.BufferedImage): Long = {
+  private[graft] def dhash64(img: java.awt.image.BufferedImage): Long = {
     val w = img.getWidth; val h = img.getHeight
     val gw = 9; val gh = 8
     val means = Array.ofDim[Double](gh, gw)
@@ -145,14 +145,6 @@ object MultimodalOps {
     }
     bits
   }
-
-  /** Decode + dHash in one call for row-local consumers (the
-    * streaming image gate): None when the payload is not a decodable
-    * within-budget image.
-    */
-  private[graft] def decodeForHash(payload: Array[Byte],
-      maxPixels: Long = DefaultMaxPixels): Option[Long] =
-    readImageBounded(payload, maxPixels).map(dhash64)
 
   /** Deterministic token-block image per document — the registry /
     * fixture bridge: the driver's testdata carries no binary column,
@@ -246,40 +238,47 @@ object MultimodalOps {
       height: Int, entropy: Double, dhash: Long, keep: Boolean,
       failReasons: String, feature: Array[Float])
 
+  /** [[imageProfile]] for one payload — the only code that turns an
+    * image payload into decoded values, shared with the streaming gate
+    * ([[graft.streaming.StreamingOps.imageDupDocStream]]). A null
+    * payload profiles like an empty one.
+    */
+  private[graft] def imageProfileRow(m: MediaRow, minSide: Int = 64,
+      maxAspect: Double = 4.0, minEntropy: Double = 0.5,
+      maxPixels: Long = DefaultMaxPixels): ImageProfile = {
+    val bytes = if (m.payload == null) Array.emptyByteArray else m.payload
+    val img =
+      if (m.format == "video") null
+      else readImageBounded(bytes, maxPixels).orNull
+    if (img == null)
+      ImageProfile(m.docId, decoded = false, 0, 0, 0.0, 0L, keep = false,
+        if (m.format == "video") "not_image" else "undecodable",
+        stubFeature(bytes))
+    else {
+      val hist = histogramOf(img)
+      var ent = 0.0
+      hist.foreach(p => if (p > 0f) ent -= p * math.log(p.toDouble))
+      // the entropy is EMITTED (4dp), not just thresholded —
+      // consumers re-cut the gate without re-decoding 100 TB
+      val entR = math.rint(ent * 1e4) / 1e4
+      val w = img.getWidth; val h = img.getHeight
+      val side = math.min(w, h)
+      val reasons = Seq(
+        if (side < minSide) "too_small" else "",
+        if (math.max(w, h).toDouble / side > maxAspect)
+          "extreme_aspect" else "",
+        if (ent < minEntropy) "low_entropy" else "").filter(_.nonEmpty)
+      ImageProfile(m.docId, decoded = true, w, h, entR, dhash64(img),
+        reasons.isEmpty, reasons.mkString(","), hist)
+    }
+  }
+
   def imageProfile(media: Dataset[MediaRow], minSide: Int = 64,
       maxAspect: Double = 4.0, minEntropy: Double = 0.5,
       maxPixels: Long = DefaultMaxPixels): Dataset[ImageProfile] = {
     implicit val enc = Encoders.product[ImageProfile]
-    media.mapPartitions(_.map { m =>
-      if (m.format == "video")
-        ImageProfile(m.docId, decoded = false, 0, 0, 0.0, 0L,
-          keep = false, "not_image", stubFeature(m.payload))
-      else {
-        val img =
-          try readImageBounded(m.payload, maxPixels).orNull
-          catch { case _: Exception => null }
-        if (img == null)
-          ImageProfile(m.docId, decoded = false, 0, 0, 0.0, 0L,
-            keep = false, "undecodable", stubFeature(m.payload))
-        else {
-          val hist = histogramOf(img)
-          var ent = 0.0
-          hist.foreach(p => if (p > 0f) ent -= p * math.log(p.toDouble))
-          // the entropy is EMITTED (4dp), not just thresholded —
-          // consumers re-cut the gate without re-decoding 100 TB
-          val entR = math.rint(ent * 1e4) / 1e4
-          val w = img.getWidth; val h = img.getHeight
-          val side = math.min(w, h)
-          val reasons = Seq(
-            if (side < minSide) "too_small" else "",
-            if (math.max(w, h).toDouble / side > maxAspect)
-              "extreme_aspect" else "",
-            if (ent < minEntropy) "low_entropy" else "").filter(_.nonEmpty)
-          ImageProfile(m.docId, decoded = true, w, h, entR, dhash64(img),
-            reasons.isEmpty, reasons.mkString(","), hist)
-        }
-      }
-    })
+    media.mapPartitions(_.map(
+      imageProfileRow(_, minSide, maxAspect, minEntropy, maxPixels)))
   }
 
   /** Image quality gate with NAMED failure reasons, projected from the
@@ -348,29 +347,32 @@ object MultimodalOps {
     implicit val enc = Encoders.product[ResizedMedia]
     media.mapPartitions(_.map { m =>
       if (m.payload.isEmpty) ResizedMedia(m.docId, w, h, Array.emptyByteArray)
-      else resizeImage(m, w, h).getOrElse {
-        val outLen = math.max(1, math.min(m.payload.length, w * h / 64))
-        ResizedMedia(m.docId, w, h,
-          Array.tabulate(outLen)(i => (m.payload(i % m.payload.length) ^ (w + h)).toByte))
+      else (if (m.format == "video") None
+            else readImageBounded(m.payload, DefaultMaxPixels))
+        .flatMap(rescaled(_, w, h)) match {
+        case Some(png) => ResizedMedia(m.docId, w, h, png)
+        case None =>
+          val outLen = math.max(1, math.min(m.payload.length, w * h / 64))
+          ResizedMedia(m.docId, w, h, Array.tabulate(outLen)(i =>
+            (m.payload(i % m.payload.length) ^ (w + h)).toByte))
       }
     })
   }
 
-  private def resizeImage(m: MediaRow, w: Int, h: Int): Option[ResizedMedia] =
-    if (m.format == "video") None
-    else try {
-      val img = readImageBounded(m.payload, DefaultMaxPixels).orNull
-      if (img == null) None
-      else {
-        val out = new java.awt.image.BufferedImage(w, h,
-          java.awt.image.BufferedImage.TYPE_INT_RGB)
-        val g = out.createGraphics()
-        try g.drawImage(img.getScaledInstance(w, h,
-          java.awt.Image.SCALE_SMOOTH), 0, 0, null)
-        finally g.dispose()
-        val bos = new ByteArrayOutputStream()
-        ImageIO.write(out, "png", bos)
-        Some(ResizedMedia(m.docId, w, h, bos.toByteArray))
-      }
+  /** `img` rescaled to w×h and re-encoded as PNG; None if drawing or
+    * encoding throws.
+    */
+  private def rescaled(img: java.awt.image.BufferedImage, w: Int,
+      h: Int): Option[Array[Byte]] =
+    try {
+      val out = new java.awt.image.BufferedImage(w, h,
+        java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val g = out.createGraphics()
+      try g.drawImage(img.getScaledInstance(w, h,
+        java.awt.Image.SCALE_SMOOTH), 0, 0, null)
+      finally g.dispose()
+      val bos = new ByteArrayOutputStream()
+      ImageIO.write(out, "png", bos)
+      Some(bos.toByteArray)
     } catch { case _: Exception => None }
 }

@@ -33,13 +33,6 @@ object VideoOps {
       nFrames: Int, fps: Double, durationMs: Double, codec: String,
       decoded: Boolean)
 
-  /** One sampled frame: `payload` is the frame's own JPEG bytes —
-    * directly consumable by the ENTIRE image family (filter, dHash,
-    * ANN) as a MediaRow payload. That composition is the point:
-    * video ops decode the container, image ops own the raster.
-    */
-  case class VideoFrame(docId: Long, frameIdx: Int, payload: Array[Byte])
-
   case class Keyframe(docId: Long, frameIdx: Int, delta: Double)
 
   private[graft] val DefaultMaxFrames: Int = 4096
@@ -199,15 +192,15 @@ object VideoOps {
     * shuffle. For mp4, nFrames is the video track's `stsz` sample
     * count and fps derives from it against the mvhd duration; frame
     * DECODE stays AVI/MJPEG-only (stated — no JDK h264/h265 codec),
-    * so [[frameSample]]/[[videoFrameProfiles]] still yield zero rows
-    * for mp4.
+    * so [[videoFrameProfiles]] still yields zero rows for mp4. A null
+    * payload degrades like an unparseable one.
     */
   def videoMeta(media: Dataset[MediaRow],
       maxFrames: Int = DefaultMaxFrames): Dataset[VideoMeta] = {
     implicit val enc = Encoders.product[VideoMeta]
     media.mapPartitions(_.map { m =>
-      (if (m.format == "video") decodeAvi(m.payload, maxFrames)
-       else None) match {
+      val payload = if (m.format == "video") Option(m.payload) else None
+      payload.flatMap(decodeAvi(_, maxFrames)) match {
         case Some(a) => VideoMeta(m.docId, a.width, a.height,
           a.frames.length,
           fps = if (a.usPerFrame > 0) 1e6 / a.usPerFrame else 0.0,
@@ -215,8 +208,7 @@ object VideoOps {
           codec = if (a.codec.nonEmpty) a.codec else "MJPG",
           decoded = true)
         case None =>
-          (if (m.format == "video") decodeMp4Meta(m.payload)
-           else None) match {
+          payload.flatMap(decodeMp4Meta) match {
             case Some(p) =>
               val durS = p.duration.toDouble / p.timescale
               VideoMeta(m.docId, p.width, p.height, p.nSamples,
@@ -226,27 +218,6 @@ object VideoOps {
             case None =>
               VideoMeta(m.docId, 0, 0, 0, 0.0, 0.0, "", decoded = false)
           }
-      }
-    })
-  }
-
-  /** REAL frame sampling: every `everyN`-th frame's own JPEG bytes.
-    * Undecodable videos contribute zero frames (never fake ones —
-    * downstream image ops would gate fabricated bytes as garbage).
-    * Partition-local flatMap; output cardinality scales with
-    * frames/everyN.
-    */
-  def frameSample(media: Dataset[MediaRow], everyN: Int = 4,
-      maxFrames: Int = DefaultMaxFrames): Dataset[VideoFrame] = {
-    require(everyN >= 1, s"everyN must be >= 1, got $everyN")
-    implicit val enc = Encoders.product[VideoFrame]
-    media.mapPartitions(_.flatMap { m =>
-      (if (m.format == "video") decodeAvi(m.payload, maxFrames)
-       else None) match {
-        case Some(a) =>
-          (0 until a.frames.length by everyN).iterator.map(i =>
-            VideoFrame(m.docId, i, a.frames(i)))
-        case None => Iterator.empty
       }
     })
   }
@@ -270,28 +241,35 @@ object VideoOps {
   case class VideoFrameProfile(docId: Long, frameIdx: Int,
       decoded: Boolean, fhash: Long, hist: Array[Float])
 
+  /** [[videoFrameProfiles]] for one clip — the only code that turns a
+    * video payload into decoded frames, shared with the streaming gate
+    * ([[graft.streaming.StreamingOps.videoDupDocStream]]). A null,
+    * non-video or unparseable payload yields no frames.
+    */
+  private[graft] def videoFrameProfileRows(m: MediaRow,
+      maxFrames: Int = DefaultMaxFrames,
+      maxPixels: Long = MultimodalOps.DefaultMaxPixels)
+      : Iterator[VideoFrameProfile] =
+    (if (m.format == "video") Option(m.payload) else None)
+      .flatMap(decodeAvi(_, maxFrames)) match {
+      case None => Iterator.empty
+      case Some(a) => a.frames.iterator.zipWithIndex.map { case (f, i) =>
+        MultimodalOps.readImageBounded(f, maxPixels) match {
+          case None => VideoFrameProfile(m.docId, i, decoded = false, 0L,
+            MultimodalOps.stubFeature(f))
+          case Some(img) => VideoFrameProfile(m.docId, i, decoded = true,
+            MultimodalOps.dhash64(img), MultimodalOps.histogramOf(img))
+        }
+      }
+    }
+
   def videoFrameProfiles(media: Dataset[MediaRow],
       maxFrames: Int = DefaultMaxFrames,
       maxPixels: Long = MultimodalOps.DefaultMaxPixels)
       : Dataset[VideoFrameProfile] = {
     implicit val enc = Encoders.product[VideoFrameProfile]
-    media.mapPartitions(_.flatMap { m =>
-      (if (m.format == "video") decodeAvi(m.payload, maxFrames)
-       else None) match {
-        case None => Iterator.empty
-        case Some(a) => a.frames.iterator.zipWithIndex.map { case (f, i) =>
-          val img =
-            try MultimodalOps.readImageBounded(f, maxPixels).orNull
-            catch { case _: Exception => null }
-          if (img == null)
-            VideoFrameProfile(m.docId, i, decoded = false, 0L,
-              MultimodalOps.stubFeature(f))
-          else
-            VideoFrameProfile(m.docId, i, decoded = true,
-              MultimodalOps.dhash64(img), MultimodalOps.histogramOf(img))
-        }
-      }
-    })
+    media.mapPartitions(_.flatMap(
+      videoFrameProfileRows(_, maxFrames, maxPixels)))
   }
 
   /** Per-frame perceptual hashes, projected from the profile frame.

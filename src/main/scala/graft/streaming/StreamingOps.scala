@@ -766,9 +766,11 @@ object StreamingOps {
   /** Streaming IMAGE near-duplicate gate (r9) — the ingest-time dual
     * of [[graft.operators.Dedup.perceptualPairsFrom]] over image
     * dHashes, and the multimodal
-    * twin of [[nearDupDocStream]]: each arriving image is decoded
-    * row-locally (REAL raster decode, the batch pixel-budget guard),
-    * dHashed, split into the SAME pigeonhole bands as the batch op
+    * twin of [[nearDupDocStream]]: each arriving image is profiled
+    * row-locally by the batch producer's own row function
+    * ([[graft.operators.MultimodalOps.imageProfileRow]]: the same
+    * raster decode, pixel-budget guard and dHash), its dHash is split
+    * into the SAME pigeonhole bands as the batch op
     * (band count = next divisor of 64 above `maxHamming`, so any pair
     * within the hamming budget shares ≥1 band), and each band row is
     * flagged when its band was already claimed by a DIFFERENT payload
@@ -789,43 +791,23 @@ object StreamingOps {
   def imageDupDocStream(media: Dataset[graft.operators.MultimodalOps.MediaRow],
       maxHamming: Int = 5, ttlMs: Long = 3600 * 1000L,
       maxPixels: Long = graft.operators.MultimodalOps.DefaultMaxPixels)
-      : Dataset[NearDupFlag] = {
-    // the batch op's own band schedule — shared derivation, not a copy
-    val (nBands, width, mask) =
-      graft.operators.Dedup.pigeonholeBands(maxHamming)
-    claimBands(media.mapPartitions { it =>
-      val digest = java.security.MessageDigest.getInstance("MD5")
-      it.flatMap { m =>
-        val img =
-          // null payload = poison row (a nullable binary column
-          // deserializes to null): no band semantics, drop — the
-          // sibling gates' tolerance policy, and a bare .isEmpty here
-          // would NPE and kill the forever-running query
-          if (m.payload == null || m.format == "video" || m.payload.isEmpty)
-            None
-          else graft.operators.MultimodalOps.decodeForHash(m.payload, maxPixels)
-        img match {
-          case None => Iterator.empty // poison tolerance: no band semantics
-          case Some(h) =>
-            digest.reset()
-            val md5hex = digest.digest(m.payload)
-              .map(b => f"$b%02x").mkString
-            (0 until nBands).iterator.map { b =>
-              BandDoc(s"$b:${(h >> (b * width)) & mask}", m.docId, md5hex)
-            }
-        }
-      }
-    }(bandDocEnc), ttlMs)
-  }
+      : Dataset[NearDupFlag] =
+    claimMediaBands(media, maxHamming, ttlMs) { m =>
+      val p = graft.operators.MultimodalOps.imageProfileRow(m,
+        maxPixels = maxPixels)
+      (m.docId, m.payload, if (p.decoded) Seq("" -> p.dhash) else Nil)
+    }
 
   /** Streaming AUDIO near-duplicate gate (r9 session 4) — the
     * ingest-time dual of [[graft.operators.Dedup.perceptualPairsFrom]]
     * over audio energy hashes,
     * completing the per-modality gate family (text
     * [[nearDupDocStream]], image [[imageDupDocStream]], this): each
-    * arriving clip is decoded row-locally (REAL RIFF/WAV parse, the
-    * batch bomb clamps), energy-delta hashed, split into the SAME
-    * pigeonhole bands as the batch op, and flagged when a band was
+    * arriving clip is profiled row-locally by
+    * [[graft.operators.AudioOps.audioProfileRow]] (the batch
+    * producer's RIFF/WAV parse, bomb clamps and energy-delta hash),
+    * its hash is split into the SAME pigeonhole bands as the batch op,
+    * and flagged when a band was
     * already claimed by a DIFFERENT payload inside the TTL horizon.
     * Exact byte-copies are NOT flagged (an exact-dedup stage owns
     * those); undecodable / non-audio / too-short / digitally-silent
@@ -838,38 +820,21 @@ object StreamingOps {
   def audioDupDocStream(audio: Dataset[graft.operators.AudioOps.AudioRow],
       maxHamming: Int = 5, ttlMs: Long = 3600 * 1000L,
       maxSamples: Long = graft.operators.AudioOps.DefaultMaxSamples)
-      : Dataset[NearDupFlag] = {
-    val (nBands, width, mask) =
-      graft.operators.Dedup.pigeonholeBands(maxHamming)
-    claimBands(audio.mapPartitions { it =>
-      val digest = java.security.MessageDigest.getInstance("MD5")
-      it.flatMap { m =>
-        val h =
-          if (m.payload == null || m.format != "audio" || m.payload.isEmpty)
-            None
-          else graft.operators.AudioOps.decodeWav(m.payload, maxSamples)
-            .flatMap(p => graft.operators.AudioOps.energyHash64(p.mono))
-        h match {
-          case None => Iterator.empty // poison tolerance: no band semantics
-          case Some(v) =>
-            digest.reset()
-            val md5hex = digest.digest(m.payload)
-              .map(b => f"$b%02x").mkString
-            (0 until nBands).iterator.map { b =>
-              BandDoc(s"$b:${(v >> (b * width)) & mask}", m.docId, md5hex)
-            }
-        }
-      }
-    }(bandDocEnc), ttlMs)
-  }
+      : Dataset[NearDupFlag] =
+    claimMediaBands(audio, maxHamming, ttlMs) { m =>
+      val p = graft.operators.AudioOps.audioProfileRow(m,
+        maxSamples = maxSamples)
+      (m.docId, m.payload, if (p.hashValid) Seq("" -> p.ehash) else Nil)
+    }
 
   /** Streaming VIDEO near-duplicate gate (r9 session 5) — the
     * ingest-time dual of [[graft.operators.Dedup.videoDedupPairs]],
     * completing the per-modality gate family across all four
-    * modalities (text, image, audio, this): each arriving clip is
-    * container-parsed row-locally (REAL AVI/MJPEG decode, the batch
-    * bomb clamps), its leading ≤ `maxFrames` frames are dHashed
-    * through the image pixel-budget guard, and every (frameIdx, band)
+    * modalities (text, image, audio, this): each arriving clip's
+    * leading ≤ `maxFrames` frames are profiled row-locally by
+    * [[graft.operators.VideoOps.videoFrameProfileRows]] (the batch
+    * producer's AVI/MJPEG decode, bomb clamps and per-frame dHash),
+    * and every (frameIdx, band)
     * of each frame hash claims a key in the shared
     * [[nearDupStep]] state — the batch op's banding PER ALIGNED FRAME
     * INDEX, live: a clip sharing any frame-level band with a
@@ -889,28 +854,38 @@ object StreamingOps {
   def videoDupDocStream(media: Dataset[graft.operators.MultimodalOps.MediaRow],
       maxHamming: Int = 5, ttlMs: Long = 3600 * 1000L, maxFrames: Int = 64,
       maxPixels: Long = graft.operators.MultimodalOps.DefaultMaxPixels)
+      : Dataset[NearDupFlag] =
+    claimMediaBands(media, maxHamming, ttlMs) { m =>
+      (m.docId, m.payload, graft.operators.VideoOps
+        .videoFrameProfileRows(m, maxFrames, maxPixels)
+        .collect { case f if f.decoded => s"f${f.frameIdx}:" -> f.fhash }
+        .toSeq)
+    }
+
+  /** The media gates' banding: `hashes` maps a row to its doc id, its
+    * payload and its (key prefix, 64-bit hash) pairs, taken from the
+    * modality's profile row function. Each hash splits into the batch
+    * op's pigeonhole bands, keyed `<prefix><band>:<bits>` and tagged
+    * with the payload's md5; a row with no hash has no band semantics
+    * and drops before the claim (poison tolerance).
+    */
+  private def claimMediaBands[R](rows: Dataset[R], maxHamming: Int,
+      ttlMs: Long)(hashes: R => (Long, Array[Byte], Seq[(String, Long)]))
       : Dataset[NearDupFlag] = {
+    // the batch op's own band schedule — shared derivation, not a copy
     val (nBands, width, mask) =
       graft.operators.Dedup.pigeonholeBands(maxHamming)
-    claimBands(media.mapPartitions { it =>
+    claimBands(rows.mapPartitions { it =>
       val digest = java.security.MessageDigest.getInstance("MD5")
-      it.flatMap { m =>
-        val frames =
-          if (m.payload == null || m.format != "video" || m.payload.isEmpty)
-            Seq.empty
-          else graft.operators.VideoOps.decodeAvi(m.payload, maxFrames)
-            .map(_.frames).getOrElse(Seq.empty)
-        val hashes = frames.iterator.zipWithIndex.flatMap { case (f, i) =>
-          graft.operators.MultimodalOps.decodeForHash(f, maxPixels)
-            .map(h => (i, h)).iterator
-        }.toSeq
-        if (hashes.isEmpty) Iterator.empty // poison/degenerate tolerance
+      it.flatMap { r =>
+        val (docId, payload, hs) = hashes(r)
+        if (hs.isEmpty) Iterator.empty
         else {
           digest.reset()
-          val md5hex = digest.digest(m.payload).map(b => f"$b%02x").mkString
-          hashes.iterator.flatMap { case (i, h) =>
+          val md5hex = digest.digest(payload).map(b => f"$b%02x").mkString
+          hs.iterator.flatMap { case (prefix, h) =>
             (0 until nBands).iterator.map { b =>
-              BandDoc(s"f$i:$b:${(h >> (b * width)) & mask}", m.docId, md5hex)
+              BandDoc(s"$prefix$b:${(h >> (b * width)) & mask}", docId, md5hex)
             }
           }
         }

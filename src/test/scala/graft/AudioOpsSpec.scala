@@ -10,8 +10,8 @@ import graft.operators.AudioOps.AudioRow
   * energy-delta hash, the named-reason gate, the perceptual dedup
   * band join (clones pair at hamming 0, near-dups within budget,
   * unrelated clips do not, degenerate rows excluded) and the ANN
-  * bridge — plus the bomb-clamp and batch-invariance contracts the
-  * image family established.
+  * bridge — plus the bomb-clamp and poison-row contracts the image
+  * family established.
   */
 class AudioOpsSpec extends SparkSuite {
 
@@ -39,7 +39,7 @@ class AudioOpsSpec extends SparkSuite {
   }
 
   test("known-answer: 440 Hz sine decodes to its true rate/length/stats") {
-    val f = AudioOps.extractAudioFeatures(
+    val f = AudioOps.audioProfile(
       rows((0L, wav(sine(440, 1.0, 0.5)), "audio"))).collect()(0)
     assert(f.decoded && f.sampleRate == 8000 && f.channels == 1)
     assert(f.nSamples == 8000 && math.abs(f.durationMs - 1000.0) < 1e-9)
@@ -82,7 +82,7 @@ class AudioOpsSpec extends SparkSuite {
       .putShort(4).putShort(16)
       .put("data".getBytes("US-ASCII")).putInt(dataLen)
     stereo.foreach(sb.putShort)
-    val f = AudioOps.extractAudioFeatures(
+    val f = AudioOps.audioProfile(
       rows((0L, bb.array(), "audio"), (1L, sb.array(), "audio")))
       .collect().sortBy(_.docId)
     assert(f(0).decoded && f(0).sampleRate == 8000 && f(0).nSamples == 4000)
@@ -91,19 +91,31 @@ class AudioOpsSpec extends SparkSuite {
     assert(math.abs(f(1).rms - 0.4 / math.sqrt(2)) < 0.005)
   }
 
-  test("undecodable / non-audio degrade to decoded=false; batch size is semantics-free") {
+  test("undecodable / non-audio / empty / null payloads degrade to decoded=false") {
     val m = rows(
       (0L, wav(sine(300, 0.5, 0.5)), "audio"),
       (1L, "definitely not a wav".getBytes("UTF-8"), "audio"),
       (2L, wav(sine(300, 0.5, 0.5)), "image"),
-      (3L, Array.emptyByteArray, "audio"))
-    val f1 = AudioOps.extractAudioFeatures(m, batchSize = 2)
-      .collect().sortBy(_.docId)
-    val f2 = AudioOps.extractAudioFeatures(m, batchSize = 64)
-      .collect().sortBy(_.docId)
-    assert(f1.map(_.decoded).toSeq == Seq(true, false, false, false))
-    assert(f1.map(r => (r.rms, r.zcr, r.envelope.toSeq)).toSeq ==
-      f2.map(r => (r.rms, r.zcr, r.envelope.toSeq)).toSeq)
+      (3L, Array.emptyByteArray, "audio"),
+      (4L, null, "audio")) // a nullable binary column's null
+    val f = AudioOps.audioProfile(m).collect().sortBy(_.docId)
+    assert(f.map(_.decoded).toSeq == Seq(true, false, false, false, false))
+    assert(f.map(_.failReasons).toSeq ==
+      Seq("", "undecodable", "not_audio", "undecodable", "undecodable"))
+    assert(f.tail.forall(r => r.nSamples == 0 && r.rms == 0.0 &&
+      r.zcr == 0.0 && r.envelope.toSeq == Seq.fill(8)(0f) && !r.hashValid))
+  }
+
+  test("a zero-sample WAV decodes and gates too_short,silent") {
+    val f = AudioOps.audioProfile(
+      rows((0L, wav(Array.emptyShortArray), "audio"))).collect()(0)
+    assert(f.decoded && f.sampleRate == 8000 && f.nSamples == 0)
+    assert(f.durationMs == 0.0 && f.rms == 0.0 && f.zcr == 0.0 &&
+      f.silenceRatio == 0.0 && f.envelope.toSeq == Seq.fill(8)(0f))
+    assert(!f.keep && f.failReasons == "too_short,silent" && !f.hashValid)
+    // all-zero envelope: no ANN row
+    assert(AudioOps.envelopes(AudioOps.audioProfile(
+      rows((0L, wav(Array.emptyShortArray), "audio")))).count() == 0L)
   }
 
   test("bomb clamp: forged giant data size decodes only the bytes present") {
@@ -113,7 +125,7 @@ class AudioOpsSpec extends SparkSuite {
     val bb = java.nio.ByteBuffer.wrap(forged)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     bb.putInt(40, Int.MaxValue)
-    val f = AudioOps.extractAudioFeatures(rows((0L, forged, "audio")))
+    val f = AudioOps.audioProfile(rows((0L, forged, "audio")))
       .collect()(0)
     assert(f.decoded && f.nSamples == 2000, s"clamped n ${f.nSamples}")
     // over-budget sample counts refuse instead of allocating
@@ -212,8 +224,10 @@ class AudioOpsSpec extends SparkSuite {
       assert(math.abs(p(id).durationMs - durMs) < 1e-9 &&
         math.abs(p(id).rms - rms) < 1e-6 &&
         math.abs(p(id).peak - peak) < 1e-6, s"stats drift at $id")
+      // the profile keeps raw rms/peak; the gate emits them at 6 dp
       assert((g(id).durationMs, g(id).rms, g(id).peak, g(id).keep,
-        g(id).failReasons) == (p(id).durationMs, p(id).rms, p(id).peak,
+        g(id).failReasons) == (p(id).durationMs,
+        math.rint(p(id).rms * 1e6) / 1e6, math.rint(p(id).peak * 1e6) / 1e6,
         p(id).keep, p(id).failReasons), s"gate drift at $id")
       val h = pcm.flatMap(q => AudioOps.energyHash64(q.mono))
       // the profile separates decode failure from hash degeneracy; the
@@ -238,7 +252,7 @@ class AudioOpsSpec extends SparkSuite {
     val m = rows((0L, wav(a), "audio"), (1L, wav(b), "audio"),
       (2L, wav(c), "audio"), (3L, wav(aQuiet), "audio"),
       (4L, "junk".getBytes("UTF-8"), "audio"))
-    val envelopes = AudioOps.envelopes(m)
+    val envelopes = AudioOps.envelopes(AudioOps.audioProfile(m))
     val top = Similarity.annTopK(envelopes, nQueries = 3, k = 1).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // flat envelope at any gain ≡ flat envelope: cosine 1.0
@@ -278,7 +292,7 @@ class AudioOpsSpec extends SparkSuite {
       (1L, "junk".getBytes("UTF-8"), "audio"))
     val down = AudioOps.resample(m, 4000).collect()
     assert(down.map(_.docId).toSeq == Seq(0L), "undecodable dropped")
-    val f = AudioOps.extractAudioFeatures(
+    val f = AudioOps.audioProfile(
       rows((0L, down(0).payload, "audio"))).collect()(0)
     assert(f.sampleRate == 4000 && f.nSamples == 4000)
     assert(math.abs(f.durationMs - 1000.0) < 1e-6, "duration preserved")
@@ -309,7 +323,7 @@ class AudioOpsSpec extends SparkSuite {
       (1L, wav(Array.fill[Short](4000)(0)), "audio"))
     val out = AudioOps.normalizeGain(m, targetPeak = 0.9).collect()
       .sortBy(_.docId)
-    val f = AudioOps.extractAudioFeatures(
+    val f = AudioOps.audioProfile(
       rows((0L, out(0).payload, "audio"))).collect()(0)
     assert(math.abs(f.peak - 0.9) < 0.01, s"peak ${f.peak}")
     // gain-invariance consumed: raw and normalized hash within

@@ -123,14 +123,11 @@ class EmptyInputSpec extends SparkSuite {
     assertEmptyOk("videoMeta", VideoOps.videoMeta(noMedia).toDF())
     assertEmptyOk("videoKeyframes",
       VideoOps.videoKeyframes(VideoOps.videoFrameProfiles(noMedia)).toDF())
-    assertEmptyOk("videoFrameSample", VideoOps.frameSample(noMedia).toDF())
     assertEmptyOk("curateMedia", graft.operators.MediaPipeline.curateMedia(
       imgProfiles.toDF(), AudioOps.audioProfile(noAudio).toDF(),
       VideoOps.videoMeta(noMedia).toDF(), frameHashes))
     assertEmptyOk("audioAnnTopK",
-      Similarity.annTopK(AudioOps.envelopes(noAudio)))
-    assertEmptyOk("extractAudioFeatures",
-      AudioOps.extractAudioFeatures(noAudio).toDF())
+      Similarity.annTopK(AudioOps.envelopes(AudioOps.audioProfile(noAudio))))
     assertEmptyOk("audioFilter",
       AudioOps.audioFilter(AudioOps.audioProfile(noAudio)).toDF())
     assertEmptyOk("decontaminateBloom",

@@ -39,7 +39,8 @@ class MultimodalOpsSpec extends SparkSuite {
     val m = spark.createDataset(Seq(
       MediaRow(0L, testImage(5, 7, "png"), "image"),
       MediaRow(1L, testImage(6, 4, "jpg"), "image"),
-      MediaRow(2L, "definitely not an image".getBytes("UTF-8"), "image")))
+      MediaRow(2L, "definitely not an image".getBytes("UTF-8"), "image"),
+      MediaRow(3L, null, "image"))) // a nullable binary column's null
     val f = MultimodalOps.imageProfile(m).collect().sortBy(_.docId)
     assert(f(0).decoded && f(0).width == 5 && f(0).height == 7)
     assert(f(1).decoded && f(1).width == 6 && f(1).height == 4)
@@ -47,6 +48,7 @@ class MultimodalOpsSpec extends SparkSuite {
     // deterministic stub feature, not an error
     assert(!f(2).decoded && f(2).failReasons == "undecodable")
     assert(f(2).feature.toSeq == MultimodalOps.stubFeature(m.collect()(2).payload).toSeq)
+    assert(!f(3).decoded && f(3).failReasons == "undecodable")
     // luminance histogram is a probability distribution over 8 bins
     assert(math.abs(f(0).feature.sum - 1f) < 1e-3)
     assert(f(0).feature.forall(v => v >= 0f && v <= 1f))
@@ -63,7 +65,7 @@ class MultimodalOpsSpec extends SparkSuite {
     assert(back.getWidth == 4 && back.getHeight == 3)
   }
 
-  test("empty payloads do not crash resize/frameSample") {
+  test("empty payloads do not crash resize/imageProfile/videoFrameProfiles") {
     implicit val enc = org.apache.spark.sql.Encoders.product[MediaRow]
     val m = spark.createDataset(Seq(
       MediaRow(0L, Array.emptyByteArray, "image"),
@@ -71,6 +73,7 @@ class MultimodalOpsSpec extends SparkSuite {
       MediaRow(2L, "x".getBytes, "image")))
     assert(MultimodalOps.resize(m, 32, 32).collect().length == 3)
     assert(MultimodalOps.imageProfile(m).collect().length == 3)
+    assert(graft.operators.VideoOps.videoFrameProfiles(m).count() == 0L)
   }
 
   test("pixel budget: over-budget declared dimensions degrade to the stub") {
@@ -147,7 +150,7 @@ class MultimodalOpsSpec extends SparkSuite {
       val hist = MultimodalOps.histogramOf(img)
       val ent = -hist.filter(_ > 0f).map(p => p * math.log(p.toDouble)).sum
       (true, img.getWidth, img.getHeight, math.rint(ent * 1e4) / 1e4,
-        MultimodalOps.decodeForHash(m.payload).get, hist.toSeq)
+        MultimodalOps.dhash64(img), hist.toSeq)
     }
   }
 

@@ -35,7 +35,7 @@ class PlanAuditSpec extends SparkSuite {
       .map(r => r.getAs[Long]("doc_id") ->
         r.getAs[String]("envelope_csv").split(",").map(_.toFloat).toSeq)
       .toMap
-    val viaArr = graft.operators.AudioOps.extractAudioFeatures(
+    val viaArr = graft.operators.AudioOps.audioProfile(
       graft.operators.AudioOps.syntheticAudio(
         Tables(spark, dir, "documents")))
       .collect().map(f => f.docId -> f.envelope.toSeq).toMap

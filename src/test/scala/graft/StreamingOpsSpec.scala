@@ -755,7 +755,8 @@ class StreamingOpsSpec extends SparkSuite {
         (4L, clip(edit = false, seed = 99), "audio"), // distinct: not
         (5L, "not audio".getBytes("UTF-8"), "audio"), // dropped
         (6L, graft.operators.AudioOps.writeWav( // silence: dropped
-          Array.fill[Short](4000)(0), 8000), "audio"))
+          Array.fill[Short](4000)(0), 8000), "audio"),
+        (7L, null, "audio")) // null payload: dropped
       val out = await(4)
       assert(out == Map(1L -> false, 2L -> false, 3L -> true, 4L -> false),
         s"got $out")
@@ -810,7 +811,8 @@ class StreamingOpsSpec extends SparkSuite {
         (2L, img(edit = false), "image"), // byte-identical: NOT flagged
         (3L, img(edit = true), "image"), // one-block edit: flagged
         (4L, img(edit = false, seed = 99), "image"), // distinct: not
-        (5L, "not an image".getBytes("UTF-8"), "image")) // dropped
+        (5L, "not an image".getBytes("UTF-8"), "image"), // dropped
+        (6L, null, "image")) // null payload: dropped
       val out = await(4)
       assert(out == Map(1L -> false, 2L -> false, 3L -> true, 4L -> false),
         s"got $out")
@@ -874,7 +876,8 @@ class StreamingOpsSpec extends SparkSuite {
         (3L, avi(f(0), f(1), f(3)), "video"), // shares frames 0,1: flagged
         (4L, avi(f(4), f(5), f(6)), "video"), // disjoint frames: not
         (5L, "not a container".getBytes("UTF-8"), "video"), // dropped
-        (6L, f(0), "image")) // image format: the AVI path must not run
+        (6L, f(0), "image"), // image format: the AVI path must not run
+        (7L, null, "video")) // null payload: dropped
       val out = await(4)
       assert(out == Map(1L -> false, 2L -> false, 3L -> true, 4L -> false),
         s"got $out")

@@ -6,7 +6,7 @@ import graft.operators.{Dedup, MultimodalOps, Similarity, VideoOps}
 import graft.operators.MultimodalOps.MediaRow
 
 /** Real AVI/MJPEG video decode: container round trip, metadata,
-  * frame sampling into the image family, keyframe (scene-change)
+  * per-frame profiles through the image family, keyframe (scene-change)
   * selection, the temporal perceptual dedup, and the bomb-clamp /
   * degrade contracts the other modalities established.
   */
@@ -57,7 +57,8 @@ class VideoOpsSpec extends SparkSuite {
     val m = rows((0L, avi, "video"),
       (1L, "not a container".getBytes("UTF-8"), "video"),
       (2L, avi, "image"), // format says image: the AVI path must not run
-      (3L, Array.emptyByteArray, "video"))
+      (3L, Array.emptyByteArray, "video"),
+      (4L, null, "video")) // a nullable binary column's null
     val meta = VideoOps.videoMeta(m).collect().sortBy(_.docId)
     assert(meta(0).decoded && meta(0).nFrames == 2 &&
       meta(0).width == 32 && meta(0).height == 32 &&
@@ -66,7 +67,11 @@ class VideoOpsSpec extends SparkSuite {
     // 400 ms) and the stream's fccHandler
     assert(math.abs(meta(0).durationMs - 400.0) < 1e-9 &&
       meta(0).codec == "MJPG")
-    assert(!meta(1).decoded && !meta(2).decoded && !meta(3).decoded)
+    assert(!meta(1).decoded && !meta(2).decoded && !meta(3).decoded &&
+      !meta(4).decoded)
+    // the frame producer: only the real container yields frames
+    assert(VideoOps.videoFrameProfiles(m).collect().map(_.docId).toSet ==
+      Set(0L))
   }
 
   // ── minimal ISO-BMFF packer (spec-local: main only PARSES mp4) ──
@@ -123,7 +128,6 @@ class VideoOpsSpec extends SparkSuite {
       s"${v.nFrames} @ ${v.fps}")
     assert(v.codec == "avc1")
     // no JDK h264 decoder: the frame family yields ZERO rows for mp4
-    assert(VideoOps.frameSample(m).count() == 0L)
     assert(VideoOps.frameHashes(VideoOps.videoFrameProfiles(m)).count() == 0L)
   }
 
@@ -155,21 +159,6 @@ class VideoOpsSpec extends SparkSuite {
       val c = s.clone(); System.arraycopy("soun".getBytes, 0, c, idx, 4); c
     }
     assert(VideoOps.decodeMp4Meta(audioOnly).isEmpty)
-  }
-
-  test("frameSample: every-Nth real frame, decodable by the image family") {
-    val frames = (0 until 7).map(i => jpeg(0x101010 * (i + 1)))
-    val avi = VideoOps.writeAviMjpeg(frames, 32, 32, fps = 10)
-    val out = VideoOps.frameSample(rows((0L, avi, "video"),
-      (1L, "junk".getBytes("UTF-8"), "video")), everyN = 3)
-      .collect().sortBy(_.frameIdx)
-    assert(out.map(_.frameIdx).toSeq == Seq(0, 3, 6))
-    assert(out.forall(_.docId == 0L), "undecodable contributed frames")
-    out.foreach { f =>
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(f.payload))
-      assert(img != null && img.getWidth == 32 && img.getHeight == 32)
-    }
   }
 
   test("videoKeyframes: scene changes emit, still runs collapse") {
@@ -373,14 +362,14 @@ class VideoOpsSpec extends SparkSuite {
       (3L, poison, "video"), (4L, jpeg(0x123456), "image"))
     val profiles = VideoOps.videoFrameProfiles(m)
     // the row kernels on the driver: decodeAvi, then per-frame decode
-    // (decodeForHash for the dHash, ImageIO + histogramOf for the
-    // histogram; a frame neither accepts carries the stub histogram)
+    // (ImageIO, then dhash64 and histogramOf; a frame it rejects
+    // carries the stub histogram)
     val frames = m.collect().toSeq.flatMap { row =>
       (if (row.format == "video") VideoOps.decodeAvi(row.payload) else None)
         .toSeq.flatMap(_.frames.zipWithIndex.map { case (f, i) =>
           val img = javax.imageio.ImageIO.read(
             new java.io.ByteArrayInputStream(f))
-          (row.docId, i, MultimodalOps.decodeForHash(f),
+          (row.docId, i, Option(img).map(MultimodalOps.dhash64),
             if (img == null) MultimodalOps.stubFeature(f)
             else MultimodalOps.histogramOf(img))
         })
